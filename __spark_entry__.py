@@ -26,7 +26,7 @@ if _HERE not in sys.path:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction pipeline (synthesize Common-Crawl-style
-    webdocs from sf0.001 documents → salted mapInPandas parse → (url,
+    webdocs from sf0.001 documents → salted mapInArrow parse → (url,
     extracted text))."""
     from pdf_parser_spark.queries import QUERIES
 

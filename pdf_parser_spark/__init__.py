@@ -11,7 +11,7 @@ pipeline over Common-Crawl-style document tables:
                 text-block scoring, Arc90/boilerpipe-style).
 - ``pdfgen``    deterministic synthetic PDF writer used for golden tests
                 and corpus synthesis (never used by the extraction path).
-- ``engine``    the Spark layer: Arrow-batched ``mapInPandas`` extractor,
+- ``engine``    the Spark layer: Arrow-batched ``mapInArrow`` extractor,
                 url-hash partitioning with host salting, audit/lineage
                 table, snapshot resume.
 - ``operators`` large-scale training-data operators: dedup (exact /

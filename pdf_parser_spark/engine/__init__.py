@@ -3,13 +3,14 @@
 Pipeline (SURVEY.md §3.1 engine lifecycle):
 
     webdocs scan → url-hash repartition (+ host salting) →
-    mapInPandas(extract_batch) → parsed (text + spans array + metrics) →
-    extracted / spans / audit views → parquet sinks (snapshot-resumable)
+    mapInArrow(extract_batch_arrow) → parsed (text + metrics, spans /
+    items arrays on request) → extracted / spans / audit views →
+    parquet sinks (snapshot-resumable)
 """
 
 from .session import build_session  # noqa: F401
 from .corpus import synthesize_webdocs, WEBDOCS_SCHEMA  # noqa: F401
-from .extractor import extract_batch, run_extraction, PARSED_SCHEMA  # noqa: F401
+from .extractor import extract_batch_arrow, run_extraction, PARSED_SCHEMA  # noqa: F401
 from .partitioning import salted_repartition  # noqa: F401
 from .snapshots import (  # noqa: F401
     AtomicStore,

@@ -1,11 +1,13 @@
 """Arrow-batched extraction UDF and the end-to-end pipeline.
 
-``extract_batch`` is the engine's single UDTF-style extractor
-(SURVEY.md §2.9): Arrow record batches of (url, html, host) in, parsed
-rows out. Payload dispatch sniffs ``%PDF-`` magic vs markup
-(SURVEY.md §2.10). One parse produces BOTH the extracted text and the
-span records (spans travel as an array<struct> column so the expensive
-kernel work happens exactly once; downstream views prune or explode).
+``extract_batch_arrow`` is the engine's single UDTF-style extractor
+(SURVEY.md §2.9), run through ``mapInArrow``: Arrow record batches of
+(url, html[, host]) in, parsed rows out. Payload dispatch sniffs
+``%PDF-`` magic vs markup (SURVEY.md §2.10). The parse is
+projection-aware: span records (an array<struct> column) and decoded
+items are computed only when the caller asks for them
+(``emit_spans`` / ``emit_items``), so a text-only job pays neither the
+kernel's span pass nor their transfer across the Arrow boundary.
 
 Per-partition lineage (north rule): every row carries the Spark
 partition id; the ``audit`` view aggregates docs/sec, byte volume and
@@ -17,8 +19,6 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
@@ -73,121 +73,6 @@ def _resolve_max_payload(max_payload_bytes: int | None) -> int:
     )
 
 
-def _extract_one(
-    url: str,
-    payload,
-    emit_items: bool = True,
-    multibyte: bool = False,
-    max_bytes: int = DEFAULT_MAX_PAYLOAD_BYTES,
-) -> dict:
-    t0 = time.perf_counter()
-    if payload is None:
-        payload = b""
-    payload = bytes(payload)
-    kind = _sniff(payload)
-    if max_bytes and len(payload) > max_bytes:
-        return {
-            "url": url,
-            "kind": kind,
-            "text": "",
-            "n_pages": 0,
-            "n_items": 0,
-            "n_spans": 0,
-            "error": (
-                f"PayloadTooLarge: {len(payload)} bytes > cap {max_bytes}"
-            ),
-            "parse_ms": (time.perf_counter() - t0) * 1000.0,
-            "payload_bytes": len(payload),
-            "fallback_pages": 0,
-            "recovered": 0,
-            "spans": [],
-            "items": [],
-        }
-    text = ""
-    n_pages = n_items = n_spans = fallback_pages = recovered = 0
-    error = None
-    spans: list[dict] = []
-    items: list[dict] = []
-    if kind == "pdf":
-        r = extract_pdf(payload, multibyte_cmaps=multibyte)
-        text, n_pages, n_items, error = r.text, r.n_pages, r.n_items, r.error
-        fallback_pages = r.fallback_pages
-        recovered = int(r.recovered)
-        spans = [
-            {
-                "page_no": int(pg),
-                "seq": int(s.seq),
-                "text": s.text,
-                "x": float(s.x),
-                "y": float(s.y),
-                "font": s.font,
-                "size": float(s.size),
-                "width": float(s.width),
-            }
-            for s, pg in zip(r.spans, r.span_pages)
-        ]
-        n_spans = len(spans)
-        items = [] if not emit_items else [
-            {
-                "seq": int(i),
-                "page_no": int(pno),
-                "font": font,
-                "text": itext,
-                "encoded_hex": encoded.hex(),
-                "instance_index": int(idx),
-            }
-            for i, (pno, font, itext, encoded, idx) in enumerate(r.items)
-        ]
-    else:
-        try:
-            text = extract_html(payload.decode("utf-8", errors="replace"))
-            n_items = text.count("\n") + 1 if text else 0
-        except Exception as exc:  # html path must never kill a batch
-            error = f"{type(exc).__name__}: {exc}"
-    return {
-        "url": url,
-        "kind": kind,
-        "text": text,
-        "n_pages": n_pages,
-        "n_items": n_items,
-        "n_spans": n_spans,
-        "error": error,
-        "parse_ms": (time.perf_counter() - t0) * 1000.0,
-        "payload_bytes": len(payload),
-        "fallback_pages": fallback_pages,
-        "recovered": recovered,
-        "spans": spans,
-        "items": items,
-    }
-
-
-def extract_batch(
-    batches: Iterator[pd.DataFrame],
-    emit_items: bool = True,
-    multibyte: bool = False,
-    max_payload_bytes: int | None = None,
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (url, html[, ...]) batches → PARSED_SCHEMA batches."""
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
-    max_bytes = _resolve_max_payload(max_payload_bytes)
-    for pdf in batches:
-        rows = [
-            _extract_one(u, p, emit_items, multibyte, max_bytes)
-            for u, p in zip(pdf["url"], pdf["html"])
-        ]
-        out = pd.DataFrame(
-            rows,
-            columns=[
-                "url", "kind", "text", "n_pages", "n_items", "n_spans",
-                "error", "parse_ms", "payload_bytes", "fallback_pages",
-                "recovered", "spans", "items",
-            ],
-        )
-        out.insert(9, "partition_id", pid)
-        yield out
-
-
 def _arrow_schema():
     import pyarrow as pa
 
@@ -236,19 +121,20 @@ def _arrow_schema():
 def extract_batch_arrow(
     batches,
     emit_items: bool = True,
+    emit_spans: bool = False,
     multibyte: bool = False,
     max_payload_bytes: int | None = None,
-) -> "Iterator":
-    """mapInArrow body: columnar twin of extract_batch.
+) -> Iterator:
+    """mapInArrow body: (url, html[, ...]) batches → PARSED_SCHEMA batches.
 
-    Builds the output RecordBatch column-by-column (flat span arrays +
-    offsets) instead of per-row dicts through pandas — skips one full
-    row→columnar conversion per batch on the hot path.
+    Builds each output RecordBatch column by column (flat span/item
+    arrays + list offsets), never through per-row dicts. With
+    ``emit_spans=False`` the kernel skips its span pass and ``spans``
+    and ``n_spans`` are null on every row — "not computed", which an
+    audit can tell apart from an empty list ("no spans"). With
+    ``emit_items=False`` every ``items`` list is empty.
     """
     import pyarrow as pa
-
-    from ..htmlcore.extract import extract_html as _xhtml
-    from ..pdfcore.extract import extract_pdf as _xpdf
 
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
@@ -266,7 +152,7 @@ def extract_batch_arrow(
         s_x, s_y, s_font, s_size, s_width = [], [], [], [], []
         i_offsets = [0]
         i_seq, i_page, i_font, i_text, i_hex, i_idx = [], [], [], [], [], []
-        for url, payload in zip(urls, payloads):
+        for payload in payloads:
             t0 = time.perf_counter()
             raw = bytes(payload) if payload is not None else b""
             kind = _sniff(raw)
@@ -277,7 +163,7 @@ def extract_batch_arrow(
                     f"PayloadTooLarge: {len(raw)} bytes > cap {max_bytes}"
                 )
             elif kind == "pdf":
-                r = _xpdf(raw, multibyte_cmaps=multibyte)
+                r = extract_pdf(raw, multibyte_cmaps=multibyte, spans=emit_spans)
                 text, n_pages, n_items, error = r.text, r.n_pages, r.n_items, r.error
                 n_spans = len(r.spans)
                 fallback_pages = r.fallback_pages
@@ -302,9 +188,9 @@ def extract_batch_arrow(
                     i_idx.append(idx)
             else:
                 try:
-                    text = _xhtml(raw.decode("utf-8", errors="replace"))
+                    text = extract_html(raw.decode("utf-8", errors="replace"))
                     n_items = text.count("\n") + 1 if text else 0
-                except Exception as exc:
+                except Exception as exc:  # html path must never kill a batch
                     error = f"{type(exc).__name__}: {exc}"
             offsets.append(len(s_seq))
             i_offsets.append(len(i_seq))
@@ -318,22 +204,27 @@ def extract_batch_arrow(
             bytes_c.append(len(raw))
             fb_c.append(fallback_pages)
             rec_c.append(recovered)
-        span_struct = pa.StructArray.from_arrays(
-            [
-                pa.array(s_page, pa.int32()),
-                pa.array(s_seq, pa.int32()),
-                pa.array(s_text, pa.string()),
-                pa.array(s_x, pa.float64()),
-                pa.array(s_y, pa.float64()),
-                pa.array(s_font, pa.string()),
-                pa.array(s_size, pa.float64()),
-                pa.array(s_width, pa.float64()),
-            ],
-            names=["page_no", "seq", "text", "x", "y", "font", "size", "width"],
-        )
-        spans_col = pa.ListArray.from_arrays(
-            pa.array(offsets, pa.int32()), span_struct
-        )
+        if emit_spans:
+            span_struct = pa.StructArray.from_arrays(
+                [
+                    pa.array(s_page, pa.int32()),
+                    pa.array(s_seq, pa.int32()),
+                    pa.array(s_text, pa.string()),
+                    pa.array(s_x, pa.float64()),
+                    pa.array(s_y, pa.float64()),
+                    pa.array(s_font, pa.string()),
+                    pa.array(s_size, pa.float64()),
+                    pa.array(s_width, pa.float64()),
+                ],
+                fields=list(schema.field("spans").type.value_type),
+            )
+            spans_col = pa.ListArray.from_arrays(
+                pa.array(offsets, pa.int32()), span_struct
+            )
+            nspans_col = pa.array(nspans_c, pa.int32())
+        else:
+            spans_col = pa.nulls(n, schema.field("spans").type)
+            nspans_col = pa.nulls(n, pa.int32())
         item_struct = pa.StructArray.from_arrays(
             [
                 pa.array(i_seq, pa.int32()),
@@ -343,7 +234,7 @@ def extract_batch_arrow(
                 pa.array(i_hex, pa.string()),
                 pa.array(i_idx, pa.int32()),
             ],
-            names=["seq", "page_no", "font", "text", "encoded_hex", "instance_index"],
+            fields=list(schema.field("items").type.value_type),
         )
         items_col = pa.ListArray.from_arrays(
             pa.array(i_offsets, pa.int32()), item_struct
@@ -355,7 +246,7 @@ def extract_batch_arrow(
                 pa.array(text_c, pa.string()),
                 pa.array(npages_c, pa.int32()),
                 pa.array(nitems_c, pa.int32()),
-                pa.array(nspans_c, pa.int32()),
+                nspans_col,
                 pa.array(err_c, pa.string()),
                 pa.array(ms_c, pa.float64()),
                 pa.array(bytes_c, pa.int64()),
@@ -375,6 +266,7 @@ def parse_webdocs(
     salt: bool = True,
     salt_map: dict[str, int] | None = None,
     emit_items: bool = False,
+    emit_spans: bool = False,
     multibyte: bool = False,
     max_payload_bytes: int | None = None,
 ) -> DataFrame:
@@ -386,9 +278,19 @@ def parse_webdocs(
     The salt-map pre-pass is a groupBy(host).count() — cheap (pruned
     column scan) when webdocs is a real table, but it re-executes the
     whole upstream plan when webdocs is itself UDF-generated (column
-    pruning cannot reach through mapInPandas). In that case pass
+    pruning cannot reach through a Python UDF). In that case pass
     ``salt_map`` computed from a cheap side-channel (e.g. the source
     table's host column) to keep the pipeline single-pass.
+
+    ``emit_items=True`` fills the ``items`` column with the decoded
+    text items of each PDF (font, encoded hex, instance index per text
+    op — what ``items_view`` explodes); off, every list is empty.
+
+    ``emit_spans=True`` fills ``spans`` (the kernel's glyph-geometry
+    records, what ``spans_view`` / ``clean_spans_view`` explode) and
+    ``n_spans`` (read by ``audit_view`` / ``audit_by_host``). Off by
+    default: the kernel skips its span pass and both columns are null
+    — "not computed", not "no spans". The text is the same either way.
 
     ``multibyte=True`` enables the kernel's CID 2-byte CMap extension
     on every PDF in the batch (extract.extract_pdf multibyte_cmaps);
@@ -432,38 +334,26 @@ def parse_webdocs(
         slim = salted_repartition(slim, num_partitions, salt_map=salt_map)
     else:
         slim = slim.repartition(num_partitions, F.col("url"))
-    # Columnar Arrow path by default (no pandas row materialization);
-    # the pandas twin (extract_batch) remains the reference
-    # implementation and fallback. Decoded-item structs (font / encoded
-    # hex / instance index per text op) cost ~20% extra serialization,
-    # so they are opt-in (emit_items) — the items column is always in
-    # the schema, empty when disabled.
+    # Span and decoded-item structs are opt-in (emit_spans /
+    # emit_items): both columns are always in the schema, spans null
+    # and items empty when disabled, so a text-only job neither runs
+    # the kernel's span pass nor ships the structs back to the JVM.
     from functools import partial
 
     # resolve the payload cap ON THE DRIVER so the env-var override
     # rides the closure to every executor (workers don't inherit the
     # driver's environment on a real cluster)
     max_bytes = _resolve_max_payload(max_payload_bytes)
-    try:
-        return slim.mapInArrow(
-            partial(
-                extract_batch_arrow,
-                emit_items=emit_items,
-                multibyte=multibyte,
-                max_payload_bytes=max_bytes,
-            ),
-            schema=PARSED_SCHEMA,
-        )
-    except AttributeError:  # very old Spark: no mapInArrow
-        return slim.mapInPandas(
-            partial(
-                extract_batch,
-                emit_items=emit_items,
-                multibyte=multibyte,
-                max_payload_bytes=max_bytes,
-            ),
-            schema=PARSED_SCHEMA,
-        )
+    return slim.mapInArrow(
+        partial(
+            extract_batch_arrow,
+            emit_items=emit_items,
+            emit_spans=emit_spans,
+            multibyte=multibyte,
+            max_payload_bytes=max_bytes,
+        ),
+        schema=PARSED_SCHEMA,
+    )
 
 
 def extracted_view(parsed: DataFrame) -> DataFrame:
@@ -498,7 +388,8 @@ HOST_FROM_URL = r"^[a-z]+://([^/]+)/"
 def audit_by_host(parsed: DataFrame) -> DataFrame:
     """Deterministic audit rollup keyed on host (derived from url) —
     the oracle-checkable twin of :func:`audit_view` (which keys on the
-    runtime partition id for lineage)."""
+    runtime partition id for lineage). ``n_spans`` needs a parse with
+    ``emit_spans=True``; otherwise it is null."""
     return (
         parsed.withColumn("host", F.regexp_extract("url", HOST_FROM_URL, 1))
         .groupBy("host")
@@ -542,7 +433,8 @@ def clean_spans_view(parsed: DataFrame) -> DataFrame:
 
 def audit_view(parsed: DataFrame) -> DataFrame:
     """Per-partition lineage + metrics (north rule): docs, failures,
-    bytes, wall parse time, docs/sec."""
+    bytes, wall parse time, docs/sec. ``n_spans`` is null unless the
+    parse ran with ``emit_spans=True``."""
     return parsed.groupBy("partition_id").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_failures"),
@@ -563,7 +455,7 @@ def run_extraction(
     """Full pipeline. With output_dir, materializes parsed→parquet once
     and derives the three views from the written table (single parse,
     columnar pruning on re-read); without, derives views lazily."""
-    parsed = parse_webdocs(webdocs, salt=salt, emit_items=True)
+    parsed = parse_webdocs(webdocs, salt=salt, emit_items=True, emit_spans=True)
     if output_dir:
         parsed.write.mode("overwrite").parquet(f"{output_dir}/parsed")
         parsed = spark.read.parquet(f"{output_dir}/parsed")

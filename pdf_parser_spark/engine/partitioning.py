@@ -2,7 +2,8 @@
 
 The north rule requires salting of skewed hosts to be explicit, not
 delegated to AQE — AQE's skew handling only rewrites *joins*, it cannot
-split a skewed partition feeding ``mapInPandas`` (SURVEY.md §4.2).
+split a skewed partition feeding the ``mapInArrow`` extractor
+(SURVEY.md §4.2).
 
 Strategy (the cheap-pre-pass pattern from SURVEY.md §4.2): a host-count
 aggregation (tiny shuffle over one string column — column pruning keeps

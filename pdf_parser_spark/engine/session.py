@@ -33,7 +33,7 @@ def build_session(
       §4.2 spill row): 256 docs × ~100 KB ≈ 25 MB per Arrow batch.
     - AQE handles runtime coalescing and relational skew joins; UDF
       input skew is handled explicitly by partitioning.salted_repartition
-      (AQE cannot see inside mapInPandas — north rule).
+      (AQE cannot see inside a Python UDF — north rule).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
     master = master or f"local[{cpus}]"

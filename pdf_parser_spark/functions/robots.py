@@ -34,6 +34,7 @@ urlnorm/host_blocklist/host_cap.)
 
 from __future__ import annotations
 
+import math
 import re
 
 from pyspark.sql import DataFrame
@@ -93,8 +94,8 @@ def parse_crawl_delay(text: str, agent: str) -> float | None:
     ``*`` groups; within the binding groups the LARGEST delay applies
     (the conservative merge when several groups bind). Not part of RFC
     9309 itself (it ignores unknown lines) but the de-facto politeness
-    extension every major crawler honors; unparseable values are
-    ignored like any unknown line."""
+    extension every major crawler honors; unparseable and non-finite
+    (nan, inf) values are ignored like any unknown line."""
     agent = agent.lower()
     exact: list[float] = []
     star: list[float] = []
@@ -120,7 +121,7 @@ def parse_crawl_delay(text: str, agent: str) -> float | None:
             delay = float(val)
         except ValueError:
             continue
-        if delay < 0:
+        if not math.isfinite(delay) or delay < 0:
             continue
         if agent in cur_agents:
             exact.append(delay)

@@ -245,10 +245,6 @@ _LANG_RE = re.compile(r"""\blang\s*=\s*["']?([A-Za-z0-9-]+)""", re.I)
 _CHARSET_RE = re.compile(r"""charset\s*=\s*["']?([A-Za-z0-9_-]+)""", re.I)
 
 
-def _find_ci(haystack: str, needle: str, start: int = 0) -> int:
-    return haystack.lower().find(needle, start)
-
-
 def html_metadata(html_text: str) -> dict:
     """Head metadata + link inventory of a page:
 
@@ -293,7 +289,8 @@ def html_metadata(html_text: str) -> dict:
     charset = None
     i = low.find("<meta")
     while i != -1:
-        gt = html_text.find(">", i)
+        # bounded: '<meta ' * N without a '>' must stay linear
+        gt = html_text.find(">", i, i + 512)
         tag = html_text[i : gt if gt != -1 else i + 512]
         m = _CHARSET_RE.search(tag)
         if m:

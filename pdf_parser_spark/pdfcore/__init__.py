@@ -7,7 +7,7 @@ page-tree walk with inherited attributes, content-stream tokenizer and
 CMap/ToUnicode decoding.
 
 No Spark imports here — everything is unit-testable in milliseconds and
-is invoked from the Arrow-batched ``mapInPandas`` extractor in
+is invoked from the Arrow-batched ``mapInArrow`` extractor in
 ``pdf_parser_spark.engine``.
 """
 

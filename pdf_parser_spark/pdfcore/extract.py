@@ -97,7 +97,10 @@ def _parsed_tounicode(cmap_str: str, multibyte: bool) -> CMap:
 
 
 def _font_cmaps_and_metrics(
-    doc: PdfDocument, page: dict, multibyte_cmaps: bool = False
+    doc: PdfDocument,
+    page: dict,
+    multibyte_cmaps: bool = False,
+    with_metrics: bool = True,
 ) -> tuple[dict[str, CMap], dict[str, FontMetrics]]:
     cmaps: dict[str, CMap] = {}
     metrics: dict[str, FontMetrics] = {}
@@ -110,12 +113,18 @@ def _font_cmaps_and_metrics(
             enc = doc.resolve(fdict.get("Encoding"))
             enc_name = "/" + str(enc) if isinstance(enc, Name) else "/WinAnsiEncoding"
             cmaps[fname] = _synthesized_cmap(enc_name)
+        if not with_metrics:
+            continue
         first_char = doc.resolve(fdict.get("FirstChar"))
         widths = doc.resolve(fdict.get("Widths"))
-        if isinstance(widths, list) and isinstance(first_char, (int, float)):
+        if not (isinstance(widths, list) and isinstance(first_char, (int, float))):
+            continue
+        widths = [doc.resolve(w) for w in widths]
+        # a non-numeric entry voids the table (spans fall back to the
+        # default advance) rather than the page's text
+        if all(isinstance(w, (int, float)) for w in widths):
             metrics[fname] = FontMetrics(
-                first_char=int(first_char),
-                widths=[float(doc.resolve(w)) for w in widths],
+                first_char=int(first_char), widths=[float(w) for w in widths]
             )
     return cmaps, metrics
 
@@ -145,23 +154,31 @@ def font_encoding_differences(doc: PdfDocument, fdict: dict) -> dict[int, str]:
     return out
 
 
-def extract_pdf(data: bytes, multibyte_cmaps: bool = False) -> ExtractResult:
+def extract_pdf(
+    data: bytes, multibyte_cmaps: bool = False, spans: bool = True
+) -> ExtractResult:
     """Extract text + spans from raw PDF bytes. Never raises: failures are
     reported in ``.error`` so the Spark audit table can count them
     (north rule: parse-failure counts per partition).
 
     ``multibyte_cmaps=True`` enables the CID 2-byte CMap extension
     (SURVEY §2.2 T7): CJK-style ToUnicode entries decode instead of
-    falling to '?'. OFF by default — reference-identical output."""
+    falling to '?'. OFF by default — reference-identical output.
+
+    ``spans=False`` is the text-only parse: the span pass and the
+    ``/FirstChar``+``/Widths`` tables it alone reads are skipped, and
+    ``.spans``/``.span_pages`` come back empty. Text, items and the
+    other counters are those of the full parse."""
     try:
         doc = PdfDocument(data)
         if doc.encryption_error is not None:
-            # typed audit row: an /Encrypt dict outside the supported
-            # RC4 subset (AES, a real user password, malformed) means
-            # decoding would produce garbage — surface a classified
-            # error instead of a generic parse failure. RC4 documents
-            # whose EMPTY user password verifies (the common crawl
-            # case) are transparently decrypted and extract normally
+            # typed audit row: an /Encrypt dict the standard security
+            # handler cannot open (a real user password, an unknown
+            # filter or crypt method, malformed) means decoding would
+            # produce garbage — surface a classified error instead of a
+            # generic parse failure. RC4 and AES documents whose EMPTY
+            # user password verifies (the common crawl case) are
+            # transparently decrypted and extract normally
             # (pdfcore/crypt.py, ISO 32000-1 §7.6.3).
             return ExtractResult(
                 text="", items=[], spans=[], span_pages=[], n_pages=0,
@@ -186,7 +203,7 @@ def extract_pdf(data: bytes, multibyte_cmaps: bool = False) -> ExtractResult:
     for page_no, page in enumerate(pages):
         try:
             cmaps, metrics = _font_cmaps_and_metrics(
-                doc, page, multibyte_cmaps=multibyte_cmaps
+                doc, page, multibyte_cmaps=multibyte_cmaps, with_metrics=spans
             )
             content = doc.page_content_bytes(page)
         except (PdfError, ValueError, KeyError, IndexError) as exc:
@@ -210,9 +227,10 @@ def extract_pdf(data: bytes, multibyte_cmaps: bool = False) -> ExtractResult:
                 items.append((page_no, None, text, encoded, idx))
             if swept:
                 fallback_pages += 1
-        for span in extract_spans(content, cmaps, metrics, page_no=page_no):
-            all_spans.append(span)
-            span_pages.append(page_no)
+        if spans:
+            page_spans = extract_spans(content, cmaps, metrics, page_no=page_no)
+            all_spans.extend(page_spans)
+            span_pages.extend([page_no] * len(page_spans))
 
     text = "\n".join(it[2] for it in items)
     return ExtractResult(

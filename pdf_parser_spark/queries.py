@@ -184,7 +184,7 @@ PDF_TEXT_SQL = f"array_to_string({PDF_LINES_SQL}, chr(10))"
     f"SELECT {URL_SQL} AS url, {EXPECTED_SQL_EXPR} AS text FROM documents",
 )
 def flagship_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end: synthesize webdocs → salted mapInPandas extraction →
+    """End-to-end: synthesize webdocs → salted mapInArrow extraction →
     (url, text). The oracle recomputes the expected byte-exact text in
     SQL — this entry IS the byte-identical-extraction gate."""
     webdocs = synthesize_webdocs(spark, sf_dir)
@@ -249,7 +249,9 @@ def span_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     extracted text on the PDF path."""
     webdocs = synthesize_webdocs(spark, sf_dir).where(F.col("doc_id") % 2 == 0)
     spans = spans_view(
-        parse_webdocs(webdocs, salt_map=webdocs_salt_map(spark, sf_dir))
+        parse_webdocs(
+            webdocs, salt_map=webdocs_salt_map(spark, sf_dir), emit_spans=True
+        )
     )
     return spans.groupBy("url").agg(
         F.array_join(
@@ -278,7 +280,9 @@ def span_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected span stream per PDF from the corpus transform."""
     webdocs = synthesize_webdocs(spark, sf_dir).where(F.col("doc_id") % 2 == 0)
     spans = spans_view(
-        parse_webdocs(webdocs, salt_map=webdocs_salt_map(spark, sf_dir))
+        parse_webdocs(
+            webdocs, salt_map=webdocs_salt_map(spark, sf_dir), emit_spans=True
+        )
     )
     return spans.where(F.col("text").contains("table")).select(
         "url", F.col("seq").cast("int").alias("seq"), "text"
@@ -298,7 +302,9 @@ def span_geometry_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .engine.extractor import clean_spans_view
 
     webdocs = synthesize_webdocs(spark, sf_dir).where(F.col("doc_id") % 2 == 0)
-    parsed = parse_webdocs(webdocs, salt_map=webdocs_salt_map(spark, sf_dir))
+    parsed = parse_webdocs(
+        webdocs, salt_map=webdocs_salt_map(spark, sf_dir), emit_spans=True
+    )
     return clean_spans_view(parsed).groupBy("url").agg(
         F.count("*").cast("bigint").alias("n_spans")
     )
@@ -324,7 +330,9 @@ def audit_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     webdocs = synthesize_webdocs(spark, sf_dir)
     return audit_by_host(
-        parse_webdocs(webdocs, salt_map=webdocs_salt_map(spark, sf_dir))
+        parse_webdocs(
+            webdocs, salt_map=webdocs_salt_map(spark, sf_dir), emit_spans=True
+        )
     )
 
 
@@ -672,7 +680,10 @@ def _parsed_pdf_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return cached
     webdocs = synthesize_webdocs(spark, sf_dir).where(F.col("doc_id") % 2 == 0)
     parsed = parse_webdocs(
-        webdocs, salt_map=webdocs_salt_map(spark, sf_dir), emit_items=True
+        webdocs,
+        salt_map=webdocs_salt_map(spark, sf_dir),
+        emit_items=True,
+        emit_spans=True,
     ).localCheckpoint(eager=True)
     _PARSED_CACHE[key] = parsed
     return parsed
@@ -814,7 +825,7 @@ def containment_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = synthesize_pdf_variant(spark, sf_dir, lines_per_page=_CONTAIN_LPP)
         # parse once; the anti-join branches twice
         parsed = parse_webdocs(
-            w, salt_map=webdocs_salt_map(spark, sf_dir)
+            w, salt_map=webdocs_salt_map(spark, sf_dir), emit_spans=True
         ).localCheckpoint(eager=True)
         _PARSED_CACHE[key] = parsed
     rects = spans_view(parsed).select(

@@ -10,8 +10,9 @@ directory (e.g. by a WARC unpacker) are discovered, parsed once, and
 appended; a restart resumes from the checkpoint.
 
 Design notes (scale):
-- the extraction UDF is IDENTICAL to the batch path — one kernel, two
-  drivers (batch + streaming), no semantic drift;
+- the extraction is IDENTICAL to the batch path (``parse_webdocs`` →
+  ``mapInArrow``) — one kernel, two drivers (batch + streaming), no
+  semantic drift;
 - ``maxFilesPerTrigger`` bounds micro-batch size so one giant drop
   cannot OOM an executor wave;
 - no shuffle inside the stream: salting matters for long-running batch
@@ -25,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..engine.corpus import WEBDOCS_SCHEMA
-from ..engine.extractor import PARSED_SCHEMA, extract_batch
+from ..engine.extractor import parse_webdocs
 
 
 def streaming_extract(
@@ -46,8 +47,13 @@ def streaming_extract(
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(source_dir)
     )
-    parsed = stream.select("url", "html").mapInPandas(
-        extract_batch, schema=PARSED_SCHEMA
+    # no shuffle inside the stream (num_partitions=0); spans and items
+    # on, so the streamed rows carry every column the batch parse can
+    parsed = parse_webdocs(
+        stream.select("url", "html"),
+        num_partitions=0,
+        emit_items=True,
+        emit_spans=True,
     )
     writer = (
         parsed.writeStream.format("parquet")
@@ -140,8 +146,11 @@ def streaming_extract_to_snapshots(
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(source_dir)
     )
-    parsed = stream.select("url", "html").mapInPandas(
-        extract_batch, schema=PARSED_SCHEMA
+    parsed = parse_webdocs(
+        stream.select("url", "html"),
+        num_partitions=0,
+        emit_items=True,
+        emit_spans=True,
     )
     writer = parsed.writeStream.foreachBatch(commit_epoch).option(
         "checkpointLocation", checkpoint_dir

@@ -445,3 +445,22 @@ def test_contents_array_amplification_bounded():
     r = extract_pdf(_classic_pdf(objs))
     assert time.perf_counter() - t0 < 30.0
     assert "contents array too large" in (r.error or "")
+
+
+def test_malformed_widths_voids_table_not_page():
+    # a /Widths entry that is not a number (a name, a nested array)
+    # used to drop the page's text or escape extract_pdf as TypeError;
+    # now only the width table goes, so the text-only parse (which
+    # never reads /Widths) and the full parse agree
+    good = _classic_pdf(_base_objects("widths probe"))
+    ok = extract_pdf(good)
+    for bad in (b"[/x /y]", b"[[1] 2]"):
+        objs = _base_objects("widths probe")
+        objs[5] = objs[5][:-2] + b"/FirstChar 32 /Widths " + bad + b" >>"
+        pdf = _classic_pdf(objs)
+        full, text_only = extract_pdf(pdf), extract_pdf(pdf, spans=False)
+        assert full.error is None and full.text == "widths probe", bad
+        assert (text_only.text, text_only.error) == (full.text, full.error)
+        assert text_only.spans == [] and text_only.span_pages == []
+        # default advances, exactly as for a font without /Widths
+        assert [s.width for s in full.spans] == [s.width for s in ok.spans]

@@ -1,5 +1,5 @@
 """End-to-end Spark pipeline tests on the sf0.001 synthetic corpus:
-corpus synthesis → salted repartition → mapInPandas extraction →
+corpus synthesis → salted repartition → mapInArrow extraction →
 extracted/spans/audit views → snapshot resume."""
 
 import pytest
@@ -30,7 +30,7 @@ def webdocs(spark):
 
 @pytest.fixture(scope="module")
 def parsed(spark, webdocs):
-    return parse_webdocs(webdocs, num_partitions=8).cache()
+    return parse_webdocs(webdocs, num_partitions=8, emit_spans=True).cache()
 
 
 def test_corpus_shape(webdocs):
@@ -100,28 +100,114 @@ def test_payload_cap_degrades_to_error_row(spark, webdocs):
     assert bad.payload_bytes == 4099 and bad.text == ""
     others = [r for u, r in rows.items() if u != "https://big.example/doc/x"]
     assert len(others) == 20 and all(r.error is None for r in others)
+    # spans are opt-in: the default parse leaves them uncomputed (null)
+    assert out.where(
+        F.col("spans").isNotNull() | F.col("n_spans").isNotNull()
+    ).count() == 0
     # cap=0 disables the guard
     out2 = parse_webdocs(big, num_partitions=1, max_payload_bytes=0)
     assert out2.filter(F.col("error").isNotNull()).count() == 0
 
 
-def test_payload_cap_pandas_twin(spark):
-    # the mapInPandas fallback body enforces the same cap
-    import pandas as pd
+def test_payload_cap_arrow_body():
+    # the mapInArrow body enforces the cap per row, outside Spark too
+    import pyarrow as pa
 
-    from pdf_parser_spark.engine.extractor import extract_batch
+    from pdf_parser_spark.engine.extractor import extract_batch_arrow
 
-    pdf = pd.DataFrame(
-        {
-            "url": ["u1", "u2"],
-            "html": [b"<p>ok</p>", b"<p>" + b"B" * 9000],
-        }
+    batch = pa.RecordBatch.from_pydict(
+        {"url": ["u1", "u2"], "html": [b"<p>ok</p>", b"<p>" + b"B" * 9000]},
+        schema=pa.schema([("url", pa.string()), ("html", pa.binary())]),
     )
-    out = pd.concat(list(extract_batch(iter([pdf]), max_payload_bytes=4096)))
-    by_url = out.set_index("url")
-    assert by_url.loc["u1", "error"] is None
-    assert str(by_url.loc["u2", "error"]).startswith("PayloadTooLarge")
-    assert by_url.loc["u2", "text"] == ""
+    (out,) = extract_batch_arrow(iter([batch]), max_payload_bytes=4096)
+    by_url = {r["url"]: r for r in out.to_pylist()}
+    assert by_url["u1"]["error"] is None
+    assert by_url["u2"]["error"].startswith("PayloadTooLarge")
+    assert by_url["u2"]["text"] == "" and by_url["u2"]["payload_bytes"] == 9003
+
+
+def _mixed_payloads() -> dict:
+    """One payload per kernel shape the span switch could disturb."""
+    from pdf_parser_spark.htmlcore.gen import text_to_html
+    from pdf_parser_spark.pdfgen import FontSpec, make_text_pdf, text_to_pdf
+    from pdf_parser_spark.pdfgen.writer import make_cid_text_pdf
+
+    src = "Alpha beta\ngamma (delta)\n" + "\n".join(f"row {i}" for i in range(60))
+    lines = [["alpha beta", "gamma (delta)"], ["page two"]]
+    classic = text_to_pdf(src)
+    xref_at = classic.rindex(b"startxref\n") + len(b"startxref\n")
+    return {
+        "classic": classic,
+        "xrefstream": text_to_pdf(src, variant="xrefstream"),
+        "objstm": text_to_pdf(src, variant="xrefstream", use_objstm=True),
+        "widths": make_text_pdf(lines, font=FontSpec(widths=[250 + i for i in range(95)])),
+        "rc4": make_text_pdf(lines, encrypted=True, encrypt_revision=3),
+        "aes128": make_text_pdf(lines, encrypted=True, encrypt_revision=4),
+        "aes256": make_text_pdf(lines, encrypted=True, encrypt_revision=6),
+        "cid": make_cid_text_pdf([["héllo wörld", "日本語テキスト", "ascii"]]),
+        "fontless": make_text_pdf(lines, fontless=True),
+        "recovered": classic[:xref_at] + b"999999\n%%EOF\n",
+        "truncated": classic[: len(classic) // 2],
+        "garbage": b"%PDF-1.7\n" + bytes(range(256)) * 4,
+        "html": text_to_html(src).encode(),
+        "oversize": b"%PDF-1.7\n" + b"x" * 300_000,
+        "null": None,
+    }
+
+
+@pytest.mark.parametrize("multibyte", [False, True])
+def test_span_projection_parity(multibyte):
+    """emit_spans=False changes only spans/n_spans (null: not computed);
+    every other column equals the spans-on parse, and the spans-on
+    column carries exactly the kernel's span records."""
+    import pyarrow as pa
+
+    from pdf_parser_spark.engine.extractor import extract_batch_arrow
+    from pdf_parser_spark.pdfcore.extract import extract_pdf
+
+    payloads = _mixed_payloads()
+    batch = pa.RecordBatch.from_pydict(
+        {"url": list(payloads), "html": list(payloads.values())},
+        schema=pa.schema([("url", pa.string()), ("html", pa.binary())]),
+    )
+
+    def run(emit_spans):
+        (out,) = extract_batch_arrow(
+            iter([batch]),
+            emit_spans=emit_spans,
+            multibyte=multibyte,
+            max_payload_bytes=200_000,
+        )
+        return {r["url"]: r for r in out.to_pylist()}
+
+    on, off = run(True), run(False)
+    same = ("kind", "text", "error", "n_pages", "n_items", "fallback_pages",
+            "recovered", "payload_bytes", "items")
+    for url in payloads:
+        assert {c: off[url][c] for c in same} == {c: on[url][c] for c in same}, url
+        assert off[url]["spans"] is None and off[url]["n_spans"] is None, url
+    # the batch really covers the shapes it names
+    assert on["fontless"]["fallback_pages"] > 0
+    assert on["recovered"]["recovered"] == 1 and on["recovered"]["text"]
+    assert on["truncated"]["error"] or on["truncated"]["recovered"]
+    assert on["oversize"]["error"].startswith("PayloadTooLarge")
+    assert on["html"]["kind"] == "html" and on["html"]["spans"] == []
+    for name in ("rc4", "aes128", "aes256"):
+        assert on[name]["text"] == "alpha beta\ngamma (delta)\npage two", name
+    assert ("日本語テキスト" in on["cid"]["text"]) == multibyte
+    # spans on: the kernel's own span records, packed losslessly
+    for url, raw in payloads.items():
+        want = []
+        if on[url]["kind"] == "pdf" and url != "oversize":
+            r = extract_pdf(raw, multibyte_cmaps=multibyte)
+            want = [
+                {"page_no": pg, "seq": s.seq, "text": s.text, "x": s.x,
+                 "y": s.y, "font": s.font, "size": s.size, "width": s.width}
+                for s, pg in zip(r.spans, r.span_pages)
+            ]
+        assert on[url]["spans"] == want, url
+        assert on[url]["n_spans"] == len(want), url
+    assert all(on[u]["n_spans"] > 0 for u in ("classic", "objstm", "widths", "aes256"))
 
 
 def test_salt_map_splits_hot_host(webdocs):

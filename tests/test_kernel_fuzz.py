@@ -106,3 +106,27 @@ def test_fuzz_html_metadata_total_function():
         assert isinstance(m["outlinks"], list)
         assert m["title"] is None or isinstance(m["title"], str)
     assert time.perf_counter() - t0 < 30.0
+
+
+def test_html_metadata_meta_run_without_gt_linear():
+    """Worst shape of the <meta> charset scan: a run of '<meta ' with
+    no '>' anywhere. An unbounded find('>') per tag rescanned the rest
+    of the page each time (O(N^2)); bounded to 512 chars per tag, the
+    characters scanned grow linearly with N."""
+    from pdf_parser_spark.htmlcore.extract import html_metadata
+
+    class CountingStr(str):
+        scanned = 0
+
+        def find(self, sub, start=0, end=None):
+            stop = len(self) if end is None else min(end, len(self))
+            CountingStr.scanned += max(0, stop - start)
+            return str.find(self, sub, start, stop)
+
+    for n in (1_000, 4_000):
+        CountingStr.scanned = 0
+        assert html_metadata(CountingStr("<meta " * n))["charset"] is None
+        assert CountingStr.scanned <= 600 * n, (n, CountingStr.scanned)
+    t0 = time.perf_counter()
+    assert html_metadata("<meta " * 100_000)["charset"] is None
+    assert time.perf_counter() - t0 < 10.0

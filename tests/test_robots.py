@@ -141,6 +141,18 @@ def test_crawl_delay_group_selection_and_max_merge():
     )
 
 
+def test_crawl_delay_non_finite_values_ignored():
+    from pdf_parser_spark.functions.robots import parse_crawl_delay
+
+    # nan slips past a `< 0` guard and poisons max(); inf schedules a
+    # fetch never — all three are dropped like unparseable lines
+    for bad in ("nan", "inf", "-inf", "NaN", "Infinity"):
+        robots = f"User-agent: *\nCrawl-delay: {bad}\n"
+        assert parse_crawl_delay(robots, "x") is None, bad
+        mixed = f"User-agent: *\nCrawl-delay: {bad}\nCrawl-delay: 2\n"
+        assert parse_crawl_delay(mixed, "x") == 2.0, bad
+
+
 def test_parse_sitemaps_global_and_first_wins():
     from pdf_parser_spark.functions.robots import parse_sitemaps
 

@@ -25,7 +25,9 @@ def webdocs(spark):
 
 def test_hierarchical_json_shape(spark, webdocs):
     spans = spans_view(
-        parse_webdocs(webdocs.where(F.col("doc_id") % 2 == 0).limit(20))
+        parse_webdocs(
+            webdocs.where(F.col("doc_id") % 2 == 0).limit(20), emit_spans=True
+        )
     )
     h = hierarchical_json(spans)
     rows = h.collect()
@@ -39,7 +41,9 @@ def test_hierarchical_json_shape(spark, webdocs):
 
 def test_write_hierarchical_json(spark, webdocs, tmp_path):
     spans = spans_view(
-        parse_webdocs(webdocs.where(F.col("doc_id") % 2 == 0).limit(10))
+        parse_webdocs(
+            webdocs.where(F.col("doc_id") % 2 == 0).limit(10), emit_spans=True
+        )
     )
     out = str(tmp_path / "json_out")
     write_hierarchical_json(spans, out)
@@ -72,6 +76,18 @@ def test_streaming_extract_drains_and_resumes(spark, webdocs, tmp_path):
     assert view.select("url").distinct().count() == view.count()
     # extraction semantics identical to batch
     assert view.where(F.col("text") == "").count() == 0
+    # the stream keeps spans and items: non-empty on every PDF row,
+    # empty (not null) lists on HTML rows
+    raw = spark.read.parquet(out)
+    pdf = raw.where(F.col("kind") == "pdf")
+    assert pdf.count() > 0
+    assert pdf.where(
+        (F.size("spans") < 1)
+        | (F.size("items") < 1)
+        | (F.col("n_spans") != F.size("spans"))
+    ).count() == 0
+    html = raw.where(F.col("kind") == "html")
+    assert html.where((F.size("spans") != 0) | F.col("n_spans").isNull()).count() == 0
 
 
 def _mini_webdocs(spark, rows):
