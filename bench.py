@@ -45,10 +45,7 @@ HEADLINE = [
     "dedup_minhash_lsh",
     "dedup_simhash",
     "dedup_ngram_jaccard",
-    "dedup_embedding_bucketed",
     "ann_topk_bruteforce",
-    "ann_topk_int8",
-    "ann_ivf_int8",
     "ann_ivf_bucketed",
     "windowed_host_stats",
     "host_running_totals",
@@ -80,11 +77,9 @@ HEADLINE = [
     "asof_join",
     "range_join",
     "rollup_hypertable",
-    "sketch_distinct",
     "hll_distinct",
     "countmin_freq",
     "hll_merge",
-    "hll_stream_twin",
     "bpe_pair_counts",
     "audio_features",
     "sample_split",
@@ -96,8 +91,6 @@ HEADLINE = [
     "embed_project",
     "stream_join_twin",
     "vocab_census",
-    "pricing_summary",
-    "top_customers",
     "containment_anti_join",
     "spatial_block_join",
     "rank_join",

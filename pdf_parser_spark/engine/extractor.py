@@ -263,7 +263,6 @@ def extract_batch_arrow(
 def parse_webdocs(
     webdocs: DataFrame,
     num_partitions: int | None = None,
-    salt: bool = True,
     salt_map: dict[str, int] | None = None,
     emit_items: bool = False,
     emit_spans: bool = False,
@@ -313,10 +312,13 @@ def parse_webdocs(
     stragglers). The salted shuffle remains the default because it is
     required when the upstream is UDF-generated (one giant synthesis
     partition) or when a downstream stage groups by host (skew).
+
+    The partitioning rule, in full: ``num_partitions=0`` keeps the scan
+    splits; otherwise an input with a ``host`` column gets the salted
+    (host, salt) repartition and one without gets a url-hash
+    repartition.
     """
     spark = webdocs.sparkSession
-    if num_partitions == 0:
-        salt = False
     if num_partitions is None:
         # ~8 task waves per core slot, NOT one-task-per-slot: documents
         # are grouped by (host, salt) buckets whose byte sizes vary
@@ -330,7 +332,7 @@ def parse_webdocs(
     slim = webdocs.select(*cols)
     if num_partitions == 0:
         pass  # scan-parallel: keep the source's own splits
-    elif salt and "host" in slim.columns:
+    elif "host" in slim.columns:
         slim = salted_repartition(slim, num_partitions, salt_map=salt_map)
     else:
         slim = slim.repartition(num_partitions, F.col("url"))
@@ -450,12 +452,11 @@ def run_extraction(
     spark: SparkSession,
     webdocs: DataFrame,
     output_dir: str | None = None,
-    salt: bool = True,
 ) -> dict[str, DataFrame]:
     """Full pipeline. With output_dir, materializes parsed→parquet once
     and derives the three views from the written table (single parse,
     columnar pruning on re-read); without, derives views lazily."""
-    parsed = parse_webdocs(webdocs, salt=salt, emit_items=True, emit_spans=True)
+    parsed = parse_webdocs(webdocs, emit_items=True, emit_spans=True)
     if output_dir:
         parsed.write.mode("overwrite").parquet(f"{output_dir}/parsed")
         parsed = spark.read.parquet(f"{output_dir}/parsed")

@@ -31,7 +31,6 @@ def resumable_extract(
     spark: SparkSession,
     webdocs: DataFrame,
     output_dir: str,
-    salt: bool = True,
 ) -> DataFrame:
     """Extract only not-yet-committed urls and append them.
 
@@ -44,7 +43,7 @@ def resumable_extract(
     if done is not None:
         todo = webdocs.join(done, "url", "left_anti")
     if todo.limit(1).count() > 0:
-        parsed_new = parse_webdocs(todo, salt=salt)
+        parsed_new = parse_webdocs(todo)
         parsed_new.write.mode("append").parquet(f"{output_dir}/parsed")
     return spark.read.parquet(f"{output_dir}/parsed")
 
@@ -54,7 +53,6 @@ def batched_resumable_extract(
     webdocs: DataFrame,
     output_dir: str,
     n_batches: int = 8,
-    salt: bool = True,
     on_batch=None,
 ) -> DataFrame:
     """Extract in *n_batches* url-hash buckets, one transactional append
@@ -79,7 +77,7 @@ def batched_resumable_extract(
     bucket = F.pmod(F.xxhash64("url"), F.lit(n_batches))
     for b in range(n_batches):
         batch = todo.where(bucket == b)
-        parse_webdocs(batch, salt=salt).write.mode("append").parquet(
+        parse_webdocs(batch).write.mode("append").parquet(
             f"{output_dir}/parsed"
         )
         if on_batch is not None:

@@ -806,7 +806,6 @@ def snapshot_resumable_extract(
     webdocs: DataFrame,
     output_dir: str,
     n_batches: int = 8,
-    salt: bool = True,
     on_batch=None,
 ) -> DataFrame:
     """Extraction with one snapshot commit per url-hash bucket.
@@ -835,7 +834,7 @@ def snapshot_resumable_extract(
         if b in done:
             continue
         path = os.path.join(output_dir, "data", f"bucket={b}")
-        parse_webdocs(webdocs.where(bucket == b), salt=salt).write.mode(
+        parse_webdocs(webdocs.where(bucket == b)).write.mode(
             "overwrite"
         ).parquet(path)
         m = (

@@ -545,25 +545,23 @@ def embedding_neardup_bucketed(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     round_digits: int = 4,
-    probes: int = 1,
+    nprobe: int = 1,
 ) -> DataFrame:
     """Scale-path embedding near-dup: nearest-centroid cell bucketing
     (broadcast codebook, pure expressions) turns the O(n²) pair scan of
     :func:`embedding_topk_pairs` into an equi-join on cell id — per-cell
     work is n²/cells², summed n²/cells, and the join hash-partitions /
     AQE-skew-splits like any other equi-join. Standard recall caveat: a
-    near-dup pair straddling a cell boundary is missed — raise *probes*
+    near-dup pair straddling a cell boundary is missed — raise *nprobe*
     to probe each vector's top-p cells (one side explodes to p rows;
     a pair is found when either member's primary cell is among the
-    other's top-p; straddling pairs may score twice and are
-    de-duplicated after the threshold, when the survivor set is small).
+    other's top-p).
 
-    Returns (a_id, b_id, cos) for same-cell pairs with cosine ≥
+    Returns (a_id, b_id, cos) with a_id < b_id for pairs with cosine ≥
     *threshold* (compared pre-rounding; output rounded for the oracle).
     """
-    from .similarity import centroid_cell_expr, centroid_cells_expr, dot_expr
+    from .similarity import centroid_cells, dot_expr
 
-    cell = centroid_cell_expr(vec_col, centroids)
     # compute each vector's norm ONCE (n rows, materialized at the join
     # exchange) so the per-pair work inside the join is a single dot
     # product + one divide — cosine_expr would recompute both norms per
@@ -571,51 +569,36 @@ def embedding_neardup_bucketed(
     # F.transform(x / norm): a higher-order lambda re-evaluates the
     # norm subtree per ELEMENT — O(dim²) per row.)
     vec = F.col(vec_col)
-    side = emb.select(
-        F.col(id_col),
-        vec.alias("_v"),
-        F.sqrt(dot_expr(vec, vec)).alias("_n"),
-        cell.alias("cell"),
-    )
-    b = side.select(
+    norm = F.sqrt(dot_expr(vec, vec))
+    # build side: each vector at its primary cell
+    b = emb.select(
         F.col(id_col).alias("b_id"),
-        F.col("_v").alias("vb"),
-        F.col("_n").alias("nb"),
-        "cell",
+        vec.alias("vb"),
+        norm.alias("nb"),
+        F.element_at(centroid_cells(vec_col, centroids, 1), 1).alias("cell"),
     )
-    if probes <= 1:
-        a = side.select(
-            F.col(id_col).alias("a_id"),
-            F.col("_v").alias("va"),
-            F.col("_n").alias("na"),
-            "cell",
+    # probe side: each vector exploded to its top-nprobe cells, so the
+    # join input grows nprobe×, not nprobe²×. Both orderings are kept
+    # (a_id != b_id, canonicalized below) so a pair is found when
+    # either member probes the other's primary cell.
+    a = emb.select(
+        F.col(id_col).alias("a_id"),
+        vec.alias("va"),
+        norm.alias("na"),
+        F.explode(centroid_cells(vec_col, centroids, nprobe)).alias("cell"),
+    )
+    pairs = (
+        a.join(b, "cell")
+        .where(F.col("a_id") != F.col("b_id"))
+        .select(
+            F.least("a_id", "b_id").alias("a_id"),
+            F.greatest("a_id", "b_id").alias("b_id"),
+            "va",
+            "na",
+            "vb",
+            "nb",
         )
-        pairs = a.join(b, "cell").where(F.col("a_id") < F.col("b_id"))
-    else:
-        # multi-probe: explode ONE side to its top-p cells (the probe
-        # side); the build side stays at its primary cell, so the join
-        # input grows p×, not p²×. Both orderings are kept (a_id !=
-        # b_id, canonicalized below) so a pair is found when either
-        # member probes the other's primary cell.
-        probe_cells = centroid_cells_expr(vec_col, centroids, probes)
-        a = emb.select(
-            F.col(id_col).alias("a_id"),
-            F.col(vec_col).alias("va"),
-            F.sqrt(dot_expr(F.col(vec_col), F.col(vec_col))).alias("na"),
-            F.explode(probe_cells).alias("cell"),
-        )
-        pairs = (
-            a.join(b, "cell")
-            .where(F.col("a_id") != F.col("b_id"))
-            .select(
-                F.least("a_id", "b_id").alias("a_id"),
-                F.greatest("a_id", "b_id").alias("b_id"),
-                "va",
-                "na",
-                "vb",
-                "nb",
-            )
-        )
+    )
     scored = pairs.select(
         "a_id",
         "b_id",
@@ -623,16 +606,15 @@ def embedding_neardup_bucketed(
             "_cos"
         ),
     )
-    out = scored.where(F.col("_cos") >= threshold).select(
-        "a_id", "b_id", F.round("_cos", round_digits).alias("cos")
+    # a same-cell pair is found in both directions, and a straddling
+    # pair via several probed cells; the cosine is bit-identical each
+    # time (same operands, same fold order), so a distinct on the small
+    # post-threshold set removes the duplicates
+    return (
+        scored.where(F.col("_cos") >= threshold)
+        .select("a_id", "b_id", F.round("_cos", round_digits).alias("cos"))
+        .distinct()
     )
-    if probes > 1:
-        # a straddling pair can be found via both directions and via
-        # several probed cells; the cosine is bit-identical each time
-        # (same operands, same fold order), so a distinct on the small
-        # post-threshold set removes the duplicates
-        out = out.distinct()
-    return out
 
 
 def repetition_stats(

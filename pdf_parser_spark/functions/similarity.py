@@ -5,13 +5,14 @@ Two paths, per the build brief:
 - ``cosine_topk``  — exact brute-force top-k: the correctness baseline.
   The k-selection is a per-query window ranking (hash-partitioned on
   query id), not a global sort.
-- ``ivf_topk``     — IVF-style bucketed ANN: a cheap coarse quantizer
-  assigns every vector to a cell; each query probes only its own cell,
-  cutting the candidate join from |Q|×|N| to |Q|×|N|/cells. The join
-  becomes an *equi-join on the cell id* ⇒ hash-partitioned, broadcast-
-  able when the query side is small, AQE-skew-splittable when one cell
-  is hot. At 100 TB this is the difference between a cross join and a
-  shuffle the cluster can actually run.
+- ``ivf_topk``     — IVF-style bucketed ANN: :func:`centroid_cells`
+  assigns every corpus vector to its nearest codebook cell; each query
+  probes only its *nprobe* nearest cells, cutting the candidate join
+  from |Q|×|N| to about |Q|×|N|·nprobe/cells. The join becomes an
+  *equi-join on the cell id* ⇒ hash-partitioned, broadcast-able when
+  the query side is small, AQE-skew-splittable when one cell is hot.
+  At 100 TB this is the difference between a cross join and a shuffle
+  the cluster can actually run.
 
 Dot products fold sequentially in double precision (zip_with +
 aggregate with a double accumulator) so results are bit-reproducible
@@ -33,18 +34,6 @@ def dot_expr(a: Column, b: Column) -> Column:
 
 def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (F.sqrt(dot_expr(a, a)) * F.sqrt(dot_expr(b, b)))
-
-
-def ivf_cell_expr(vec: Column, bits: int = 2) -> Column:
-    """Toy coarse quantizer (kept for tests): sign bits of the first
-    `bits` dimensions → cell id in [0, 2^bits). See
-    :func:`centroid_cell_expr` for the real codebook-driven assigner."""
-    cell = F.lit(0)
-    for d in range(bits):
-        cell = cell + F.when(
-            F.element_at(vec, d + 1).cast("double") > 0, F.lit(1 << d)
-        ).otherwise(F.lit(0))
-    return cell.cast("int")
 
 
 def _dot_lit(vec: Column, centroid: list[float]) -> Column:
@@ -80,93 +69,22 @@ def _dot_sql(vec_sql: str, centroid: list[float]) -> str:
     )
 
 
-def centroid_cell_expr(
-    vec: Column | str, centroids: list[list[float]]
+def centroid_cells(
+    vec_col: str, centroids: list[list[float]], n: int
 ) -> Column:
-    """IVF cell assignment against a broadcast codebook, as pure
-    built-in expressions (no UDF): cell = argmin_i ||v - c_i||².
-    Since dot(v,v) is constant per row it cannot change the argmin and
-    is dropped: the score is cc_i − 2·dot(v,c_i), with sequential
-    double folds so the DuckDB oracle reproduces it bit-for-bit. Ties
-    break on the lower centroid index via lexicographic struct
-    least().
+    """The *n* nearest codebook cells of each vector as ``array<int>``,
+    nearest first; *n* is clamped to the codebook size. Take the
+    primary cell with ``element_at(cells, 1)``.
 
-    Pass *vec* as a column-NAME string for the fast construction path:
-    the whole argmin tree is built as one SQL string and parsed JVM-side
-    in a single call. The Column form builds the same tree through the
-    PySpark expression API (16 centroids × 2 lambdas each ≈ seconds of
-    py4j round-trips at construction — fine for tests, not per-query)."""
-    if isinstance(vec, str):
-        cands = []
-        for i, c in enumerate(centroids):
-            cc = 0.0
-            for x in c:  # sequential left fold, same IEEE order
-                cc += float(x) * float(x)
-            cands.append(
-                f"named_struct('d', {_sql_double(cc)} - 2.0D * "
-                f"{_dot_sql(vec, c)}, 'cid', {i})"
-            )
-        return (
-            F.expr(f"least({', '.join(cands)})")
-            .getField("cid")
-            .cast("int")
-        )
-    candidates = []
-    for i, c in enumerate(centroids):
-        cc = 0.0
-        for x in c:  # sequential left fold, same IEEE order as the SQL twin
-            cc += float(x) * float(x)
-        d = F.lit(cc).cast("double") - 2.0 * _dot_lit(vec, c)
-        candidates.append(F.struct(d.alias("d"), F.lit(i).alias("cid")))
-    return F.least(*candidates).getField("cid").cast("int")
-
-
-def centroid_cells_expr(
-    vec: Column | str, centroids: list[list[float]], probes: int
-) -> Column:
-    """Top-*probes* nearest cells as an ``array<int>`` — the multi-probe
-    generalization of :func:`centroid_cell_expr` (probes=1 ≡ [argmin]).
-    Same distance score (cc_i − 2·dot(v,c_i), sequential double folds),
-    ranked by ``array_sort`` over (d, cid) structs so ties break on the
-    lower centroid index, exactly like the single-cell least() and the
-    DuckDB row_number() twin."""
-    if probes >= len(centroids):
-        probes = len(centroids)
-    if isinstance(vec, str):
-        cands = []
-        for i, c in enumerate(centroids):
-            cc = 0.0
-            for x in c:
-                cc += float(x) * float(x)
-            cands.append(
-                f"named_struct('d', {_sql_double(cc)} - 2.0D * "
-                f"{_dot_sql(vec, c)}, 'cid', {i})"
-            )
-        return F.expr(
-            f"transform(slice(array_sort(array({', '.join(cands)})), 1, "
-            f"{int(probes)}), s -> CAST(s.cid AS INT))"
-        )
-    candidates = []
-    for i, c in enumerate(centroids):
-        cc = 0.0
-        for x in c:
-            cc += float(x) * float(x)
-        d = F.lit(cc).cast("double") - 2.0 * _dot_lit(vec, c)
-        candidates.append(F.struct(d.alias("d"), F.lit(i).alias("cid")))
-    ranked = F.array_sort(F.array(*candidates))
-    return F.transform(
-        F.slice(ranked, 1, int(probes)), lambda s: s.getField("cid").cast("int")
-    )
-
-
-def centroid_cells_topn(
-    vec_sql: str, centroids: list[list[float]], nprobe: int
-) -> Column:
-    """The *nprobe* nearest cells as array<int>, nearest first — the
-    standard IVF search-quality knob (probe several coarse cells, not
-    just the closest; recall rises at the cost of nprobe× candidates).
-    Same distance/tie semantics as :func:`centroid_cell_expr`; built as
-    one SQL string (sort_array over (d, cid) structs → slice → cid)."""
+    Pure built-in expressions (no UDF): cells rank by
+    ||v - c_i||² = v·v + c_i·c_i − 2·v·c_i. Since v·v is constant per
+    row it cannot change the order and is dropped; the score is
+    c_i·c_i − 2·dot(v, c_i) with sequential double folds, so the DuckDB
+    oracle (``row_number() OVER (ORDER BY d, cid)``) reproduces it
+    bit-for-bit. ``array_sort`` over (d, cid) structs breaks ties on
+    the lower centroid index. The whole tree is built as one SQL string
+    and parsed JVM-side in a single call (a Column-API build costs
+    seconds of py4j round-trips per query construction)."""
     cands = []
     for i, c in enumerate(centroids):
         cc = 0.0
@@ -174,11 +92,12 @@ def centroid_cells_topn(
             cc += float(x) * float(x)
         cands.append(
             f"named_struct('d', {_sql_double(cc)} - 2.0D * "
-            f"{_dot_sql(vec_sql, c)}, 'cid', {i})"
+            f"{_dot_sql(vec_col, c)}, 'cid', {i})"
         )
+    n = min(int(n), len(centroids))
     return F.expr(
-        f"transform(slice(sort_array(array({', '.join(cands)})), 1, "
-        f"{int(nprobe)}), s -> CAST(s.cid AS INT))"
+        f"transform(slice(array_sort(array({', '.join(cands)})), 1, {n}), "
+        "s -> CAST(s.cid AS INT))"
     )
 
 
@@ -213,7 +132,7 @@ def kmeans_codebook(
     sample (driver-side NumPy — the standard IVF pattern: fit on a
     sample, broadcast centroids, assign with expressions). Lloyd
     iterations with first-k init; empty clusters keep their previous
-    centroid. Use with :func:`centroid_cell_expr` / :func:`ivf_topk`
+    centroid. Use with :func:`centroid_cells` / :func:`ivf_topk`
     for the production ANN path (data-dependent, so no SQL oracle —
     covered by the recall-vs-brute-force pytest instead).
 
@@ -284,163 +203,38 @@ def cosine_topk(
     return _ranked_topk(scored, k, round_digits)
 
 
-def absmax_expr(vec: Column) -> Column:
-    """max|v_i| as a double — the int8 quantization scale."""
-    return F.array_max(F.transform(vec, lambda x: F.abs(x.cast("double"))))
-
-
-def int8_quantize_expr(vec: Column, mx: Column | None = None) -> Column:
-    """Symmetric per-vector int8 quantization: q_i = floor(v_i·127/mx
-    + 0.5), mx = max|v_i| — 4× less memory/IO than float32, the
-    standard first compression step for billion-vector ANN. floor(x +
-    0.5) (not round()) pins the half-way rule to an IEEE primitive both
-    engines share. All-zero vectors quantize to zeros.
-
-    Cosine over the quantized vectors needs no dequantization: the
-    per-vector scale cancels in the normalized dot product, and integer
-    dots of |q| ≤ 127 are exactly representable in doubles, so the
-    score is bit-deterministic regardless of summation order.
-
-    Pass ``mx`` as a PROJECTED column (``absmax_expr`` in a prior
-    select) for O(d) work per vector: a subexpression inside the
-    per-element lambda is re-evaluated per element by interpreted
-    higher-order functions — O(d²) per vector at production d = 768+.
-    A prior projection referenced twice survives CollapseProject (the
-    optimizer only inlines cheap or once-referenced aliases), so the
-    lambda sees a bound attribute. Without ``mx`` the scale is computed
-    inline — acceptable only for small d.
-    """
-    if mx is None:
-        mx = absmax_expr(vec)
-    return F.when(
-        mx > 0,
-        F.transform(
-            vec,
-            lambda x: F.floor(
-                x.cast("double") * F.lit(127.0) / mx + F.lit(0.5)
-            ),
-        ),
-    ).otherwise(F.transform(vec, lambda x: F.lit(0).cast("bigint")))
-
-
-def cosine_topk_int8(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    round_digits: int = 4,
-) -> DataFrame:
-    """Top-k neighbors per query over int8-quantized vectors →
-    (q_id, rank, neighbor_id, cos). Same broadcast-query/streaming-
-    corpus plan as :func:`cosine_topk`; the scored column is the cosine
-    of the quantized vectors (scales cancel, see
-    :func:`int8_quantize_expr`)."""
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("_v"),
-            absmax_expr(F.col(vec_col)).alias("_mx"),
-        ).select(
-            "q_id",
-            int8_quantize_expr(F.col("_v"), F.col("_mx")).alias("qv"),
-        )
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_v"),
-        absmax_expr(F.col(vec_col)).alias("_mx"),
-    ).select(
-        "neighbor_id",
-        int8_quantize_expr(F.col("_v"), F.col("_mx")).alias("cv"),
-    )
-    pairs = c.crossJoin(q).where(F.col("q_id") != F.col("neighbor_id"))
-    scored = pairs.select(
-        "q_id", "neighbor_id", cosine_expr(F.col("qv"), F.col("cv")).alias("_cos")
-    )
-    return _ranked_topk(scored, k, round_digits)
-
-
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
+    centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 3,
-    bits: int = 2,
     round_digits: int = 4,
-    centroids: list[list[float]] | None = None,
     nprobe: int = 1,
-    quantize: bool = False,
 ) -> DataFrame:
     """ANN top-k probing the query's *nprobe* nearest IVF cells.
 
     Equi-join on cell id (hash-partitioned / broadcastable) replaces
-    the brute-force cross join — the scale path. With ``centroids``
-    (from :func:`medoid_centroids` or :func:`kmeans_codebook`) the cell
-    is a real nearest-centroid assignment; without, the legacy sign-bit
-    toy quantizer. ``nprobe > 1`` explodes each query into its nprobe
-    nearest cells before the join (recall ↑, candidates ×nprobe — the
-    standard IVF knob); each corpus vector still lives in exactly one
-    cell, so no result dedup is needed. ``quantize=True`` scores with
-    int8-quantized vectors (:func:`int8_quantize_expr`) while the cell
-    assignment stays on the float vector — the IVF-with-quantized-
-    storage combination a billion-vector deployment runs (coarse
-    quantizer in float, stored vectors at 4× compression).
+    the brute-force cross join — the scale path. ``centroids`` comes
+    from :func:`medoid_centroids` or :func:`kmeans_codebook`; each
+    corpus vector lives in its nearest cell, and each query explodes
+    into its *nprobe* nearest cells before the join (recall ↑,
+    candidates ×nprobe — the standard IVF knob). A corpus vector sits
+    in exactly one cell, so no result dedup is needed.
     """
-
-    if centroids is not None:
-        # string form → single JVM-parsed SQL tree (fast construction)
-        cell_col = centroid_cell_expr(vec_col, centroids)
-        q_cell = (
-            F.explode(centroid_cells_topn(vec_col, centroids, nprobe))
-            if nprobe > 1
-            else cell_col
+    q = F.broadcast(
+        queries.select(
+            F.col(id_col).alias("q_id"),
+            F.col(vec_col).alias("qv"),
+            F.explode(centroid_cells(vec_col, centroids, nprobe)).alias("cell"),
         )
-    else:
-        if nprobe > 1:
-            raise ValueError("nprobe > 1 requires a centroid codebook")
-        cell_col = ivf_cell_expr(F.col(vec_col), bits)
-        q_cell = cell_col
-
-    if quantize:
-        # two-step projection so the quantize lambda reads the scale as
-        # a bound attribute (O(d) per vector — see int8_quantize_expr)
-        q = F.broadcast(
-            queries.select(
-                F.col(id_col).alias("q_id"),
-                F.col(vec_col).alias("_v"),
-                absmax_expr(F.col(vec_col)).alias("_mx"),
-                q_cell.alias("cell"),
-            ).select(
-                "q_id",
-                int8_quantize_expr(F.col("_v"), F.col("_mx")).alias("qv"),
-                "cell",
-            )
-        )
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_v"),
-            absmax_expr(F.col(vec_col)).alias("_mx"),
-            cell_col.alias("cell"),
-        ).select(
-            "neighbor_id",
-            int8_quantize_expr(F.col("_v"), F.col("_mx")).alias("cv"),
-            "cell",
-        )
-    else:
-        q = F.broadcast(
-            queries.select(
-                F.col(id_col).alias("q_id"),
-                F.col(vec_col).alias("qv"),
-                q_cell.alias("cell"),
-            )
-        )
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cv"),
-            cell_col.alias("cell"),
-        )
+    )
+    c = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("cv"),
+        F.element_at(centroid_cells(vec_col, centroids, 1), 1).alias("cell"),
+    )
     pairs = c.join(q, "cell").where(F.col("q_id") != F.col("neighbor_id"))
     scored = pairs.select(
         "q_id", "neighbor_id", cosine_expr(F.col("qv"), F.col("cv")).alias("_cos")

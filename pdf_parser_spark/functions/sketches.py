@@ -1,67 +1,25 @@
-"""Deterministic cardinality sketches.
+"""Deterministic sketches: HyperLogLog distinct counts and Count-Min
+frequencies.
 
 Spark's own ``approx_count_distinct`` (HLL++) is the production
 default, but its register layout is engine-private — no independent
 system can replay it, so it cannot be oracle-checked. This module
-implements LINEAR COUNTING (Whang, Vander-Zanden & Taylor, TODS 1990)
-from the md5 primitive both engines share: hash every value into a
-B-slot bitmap, count the occupied slots ``f``, estimate
-``n̂ = -B · ln(1 - f/B)``.
+builds HYPERLOGLOG (Flajolet et al. 2007) and COUNT-MIN (Cormode &
+Muthukrishnan 2005) from the md5 primitive both engines share, so
+every register and counter replays from ANSI SQL.
 
-Scale shape: the per-group aggregation state is bounded by B (= 65536
-here, 16 hash bits) no matter how many distinct values stream through
-— the partial aggregate ships at most B bucket ids per group across
-the shuffle, where an exact count-distinct ships every distinct value.
-That bounded-state property is the whole point of sketching at 100 TB;
-linear counting keeps it while staying bit-replayable from ANSI SQL.
+Scale shape: the per-group aggregation state is bounded by the sketch
+(m = 4096 HLL registers, d·w Count-Min counters) no matter how many
+distinct values stream through — the partial aggregate ships at most
+that many rows per group across the shuffle, where an exact
+count-distinct ships every distinct value. That bounded-state
+property is the whole point of sketching at 100 TB.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-B_SLOTS = 65536  # 16 bits of the md5 → bitmap slots
-
-
-def bucket16(c: Column) -> Column:
-    """The value's bitmap slot: first 4 hex chars of md5 (16 bits)."""
-    return F.substring(F.md5(c), 1, 4)
-
-
-def linear_count_distinct(
-    df: DataFrame, group_col: str, value_col: str
-) -> DataFrame:
-    """Per-group linear-counting distinct estimate next to the exact
-    count (so accuracy is visible in the output).
-
-    One aggregation pass computes total rows, occupied slots, and the
-    exact distinct; the estimate ``round(-B·ln(1-f/B))`` folds from
-    ``f`` alone. Both count-distincts expand map-side, but the sketch
-    column's partial state is capped at B buckets per group — the
-    shuffle-bounding property a real deployment keeps after dropping
-    the exact column.
-    """
-    agg = df.groupBy(group_col).agg(
-        F.count("*").cast("bigint").alias("n_values"),
-        F.countDistinct(bucket16(F.col(value_col)))
-        .cast("int")
-        .alias("filled_slots"),
-        F.countDistinct(value_col).cast("bigint").alias("exact_distinct"),
-    )
-    return agg.select(
-        group_col,
-        "n_values",
-        "filled_slots",
-        F.round(
-            -F.lit(float(B_SLOTS))
-            * F.log(1.0 - F.col("filled_slots") / F.lit(float(B_SLOTS)))
-        )
-        .cast("bigint")
-        .alias("est_distinct"),
-        "exact_distinct",
-    )
-
 
 # --- HyperLogLog (Flajolet et al. 2007), md5-replayable -------------------
 #
@@ -82,14 +40,6 @@ RHO_CAP = 47
 # 0.7213/(1+1.079/m) · m² · 2^RHO_CAP, precomputed so both engines parse
 # the same decimal literal instead of each deriving it in their own fp.
 HLL_ALPHA_M2_SCALED = 1.7026729407717685e21
-
-# bits contributed by the first nonzero hex digit (4 - bit_length(d))
-_HEX_LZ_CASE = (
-    "CASE {c} WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2 "
-    "WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1 WHEN '7' THEN 1 "
-    "ELSE 0 END"
-)
-
 
 def hll_rho(hash_hex: Column) -> Column:
     """Register value ρ for a 32-char md5 hex: leading-zero count of

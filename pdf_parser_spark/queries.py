@@ -1035,99 +1035,6 @@ def distinct_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _read(spark, sf_dir, "documents").select("lang", "source").distinct()
 
 
-@q(
-    "pricing_summary",
-    "SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty, "
-    "round(sum(l_extendedprice), 2) AS sum_base_price, "
-    "round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price, "
-    "count(*)::BIGINT AS count_order FROM lineitem WHERE l_quantity < 30 "
-    "GROUP BY l_returnflag, l_linestatus",
-)
-def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q1-style pricing summary: filter pushdown + partial aggs."""
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.where(F.col("l_quantity") < 30)
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            F.count("*").cast("bigint").alias("count_order"),
-        )
-    )
-
-
-@q(
-    "top_customers",
-    "SELECT c.c_custkey, c.c_name, round(sum(o.o_totalprice), 2) AS total_price, "
-    "count(*)::BIGINT AS n_orders FROM orders o JOIN customer c "
-    "ON o.o_custkey = c.c_custkey GROUP BY c.c_custkey, c.c_name "
-    "ORDER BY round(sum(o.o_totalprice), 2) DESC, c.c_custkey LIMIT 10",
-)
-def top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast dim join + agg + deterministic top-k."""
-    orders = _read(spark, sf_dir, "orders")
-    cust = _read(spark, sf_dir, "customer")
-    return (
-        orders.join(
-            F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"]
-        )
-        .groupBy("c_custkey", "c_name")
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-            F.count("*").cast("bigint").alias("n_orders"),
-        )
-        .orderBy(F.desc("total_price"), "c_custkey")
-        .limit(10)
-    )
-
-
-@q(
-    "volume_by_nation",
-    "SELECT n.n_name, r.r_name, round(sum(o.o_totalprice), 2) AS total_volume, "
-    "count(*)::BIGINT AS n_orders FROM orders o JOIN customer c "
-    "ON o.o_custkey = c.c_custkey JOIN nation n ON c.c_nationkey = n.n_nationkey "
-    "JOIN region r ON n.n_regionkey = r.r_regionkey "
-    "GROUP BY n.n_name, r.r_name",
-)
-def volume_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-way star join: fact ⋈ customer ⋈ broadcast(nation) ⋈
-    broadcast(region) → rollup. Catalyst broadcast-joins both tiny dims
-    so only the orders⋈customer shuffle remains."""
-    orders = _read(spark, sf_dir, "orders")
-    cust = _read(spark, sf_dir, "customer")
-    nation = _read(spark, sf_dir, "nation")
-    region = _read(spark, sf_dir, "region")
-    return (
-        orders.join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"])
-        .join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
-        .groupBy("n_name", "r_name")
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("total_volume"),
-            F.count("*").cast("bigint").alias("n_orders"),
-        )
-    )
-
-
-@q(
-    "orders_without_lineitems",
-    "SELECT o.o_orderkey FROM orders o WHERE NOT EXISTS "
-    "(SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)",
-)
-def orders_without_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti-join existence check (left_anti — the same primitive the
-    resume path uses for committed-url exclusion)."""
-    orders = _read(spark, sf_dir, "orders")
-    li = _read(spark, sf_dir, "lineitem").select("l_orderkey")
-    return orders.join(
-        li, orders["o_orderkey"] == li["l_orderkey"], "left_anti"
-    ).select("o_orderkey")
-
-
 # ---------------------------------------------------------------------------
 # deduplication family
 
@@ -1398,7 +1305,8 @@ def _neardup_offset(spark: SparkSession, sf_dir: str) -> int:
     return cached
 
 
-_DUCK_UNION_CELLS = (
+_NEARDUP_PROBES = 2
+_DUCK_PROBED_CELLS = (
     "u AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings "
     f"UNION ALL SELECT vec_id + {_NEARDUP_SQL_OFFSET}, "
     "list_transform(embedding::DOUBLE[], x -> x * 0.9 + 0.01) FROM embeddings), "
@@ -1407,59 +1315,12 @@ _DUCK_UNION_CELLS = (
     "cdist AS (SELECT u.vec_id, u.e, c.cid, "
     "list_dot_product(c.ce, c.ce) - 2 * list_dot_product(u.e, c.ce) AS d "
     "FROM u, cent c), "
-    "cells AS (SELECT vec_id, e, cid AS cell FROM "
-    "(SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn "
-    "FROM cdist) WHERE rn = 1)"
+    "ranked AS (SELECT vec_id, e, cid AS cell, "
+    "row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn "
+    "FROM cdist), "
+    f"probed AS (SELECT vec_id, e, cell FROM ranked WHERE rn <= {_NEARDUP_PROBES}), "
+    "prim AS (SELECT vec_id, e, cell FROM ranked WHERE rn = 1)"
 )
-
-
-@q(
-    "dedup_embedding_bucketed",
-    f"WITH {_DUCK_UNION_CELLS} "
-    "SELECT a_id, b_id, round(_c, 4) AS cos FROM (SELECT a.vec_id AS a_id, "
-    "b.vec_id AS b_id, list_dot_product(a.e, b.e) / "
-    "(sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))) AS _c "
-    "FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id) "
-    "WHERE _c >= 0.95",
-)
-def dedup_embedding_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup on the SCALE path: nearest-centroid cell
-    bucketing (broadcast medoid codebook) replaces the O(n²) pair scan
-    with an equi-join on cell id. Deterministic noisy clones
-    (x·0.9 + 0.01, id + max_id + 1) are injected so real near-dup pairs
-    exist (cos ≈ 0.99 with their source; unrelated pairs peak ≈ 0.38 on
-    this corpus) — the oracle reconstructs clones, cells, and cosines
-    in SQL, so cross-cell misses count identically in both engines."""
-    base = _read(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    clones = _read(spark, sf_dir, "embeddings").select(
-        (F.col("vec_id") + _neardup_offset(spark, sf_dir)).alias("vec_id"),
-        F.transform(
-            "embedding", lambda x: x.cast("double") * 0.9 + 0.01
-        ).alias("embedding"),
-    )
-    cents = _ivf_codebook(spark, sf_dir)
-    return dedup.embedding_neardup_bucketed(
-        base.unionAll(clones), cents, threshold=0.95
-    )
-
-
-_NEARDUP_PROBES = 2
-_DUCK_PROBED_CELLS = (
-    _DUCK_UNION_CELLS.replace(
-        "cells AS (SELECT vec_id, e, cid AS cell FROM "
-        "(SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn "
-        "FROM cdist) WHERE rn = 1)",
-        "ranked AS (SELECT vec_id, e, cid AS cell, "
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn "
-        "FROM cdist), "
-        f"probed AS (SELECT vec_id, e, cell FROM ranked WHERE rn <= {_NEARDUP_PROBES}), "
-        "prim AS (SELECT vec_id, e, cell FROM ranked WHERE rn = 1)",
-    )
-)
-assert "probed AS" in _DUCK_PROBED_CELLS  # replace() must have matched
 
 
 @q(
@@ -1476,12 +1337,17 @@ assert "probed AS" in _DUCK_PROBED_CELLS  # replace() must have matched
     ">= 0.95",
 )
 def dedup_embedding_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe variant of ``dedup_embedding_bucketed``: each vector
+    """Embedding near-dup on the SCALE path: nearest-centroid cell
+    bucketing (broadcast medoid codebook) replaces the O(n²) pair scan
+    of ``dedup_embedding`` with an equi-join on cell id. Each vector
     probes its top-2 cells (probe side explodes 2×, build side stays at
     its primary cell), recovering near-dup pairs that straddle a cell
-    boundary. The oracle reconstructs the probed/primary join and the
-    post-threshold DISTINCT in SQL, so recall gains count identically
-    in both engines."""
+    boundary. Deterministic noisy clones (x·0.9 + 0.01, id + max_id + 1)
+    are injected so real near-dup pairs exist (cos ≈ 0.99 with their
+    source; unrelated pairs peak ≈ 0.38 on this corpus). The oracle
+    reconstructs clones, cells, the probed/primary join and the
+    post-threshold DISTINCT in SQL, so cross-cell misses and recall
+    gains count identically in both engines."""
     base = _read(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
@@ -1494,7 +1360,7 @@ def dedup_embedding_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents = _ivf_codebook(spark, sf_dir)
     return dedup.embedding_neardup_bucketed(
-        base.unionAll(clones), cents, threshold=0.95, probes=_NEARDUP_PROBES
+        base.unionAll(clones), cents, threshold=0.95, nprobe=_NEARDUP_PROBES
     )
 
 
@@ -1525,41 +1391,6 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     query side, corpus streams, per-query window rank."""
     emb = _read(spark, sf_dir, "embeddings")
     return similarity.cosine_topk(
-        emb.where(F.col("vec_id") < 10), emb, k=5
-    )
-
-
-_DUCK_INT8 = (
-    "SELECT vec_id, CASE WHEN "
-    "list_max(list_transform(embedding, x -> abs(x::DOUBLE))) > 0 "
-    "THEN list_transform(embedding, x -> floor(x::DOUBLE * 127.0 / "
-    "list_max(list_transform(embedding, y -> abs(y::DOUBLE))) + 0.5)::BIGINT) "
-    "ELSE list_transform(embedding, x -> 0::BIGINT) END AS qe "
-    "FROM embeddings"
-)
-
-
-@q(
-    "ann_topk_int8",
-    f"WITH qz AS ({_DUCK_INT8}), "
-    "scored AS (SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id, "
-    f"{_duck_cos('q.qe', 'c.qe')} AS _cos "
-    "FROM qz q JOIN qz c ON q.vec_id < 10 AND q.vec_id <> c.vec_id), "
-    "ranked AS (SELECT q_id, neighbor_id, _cos, "
-    "row_number() OVER (PARTITION BY q_id ORDER BY _cos DESC, neighbor_id) "
-    "AS rank FROM scored) SELECT q_id, rank::INT AS rank, neighbor_id, "
-    "round(_cos, 4) AS cos FROM ranked WHERE rank <= 5",
-)
-def ann_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cosine top-5 over int8-quantized vectors — the 4×-compression
-    path a billion-vector corpus stores and scans (float32 kept only
-    for reranking, if at all). Scales cancel in the normalized dot, so
-    no dequantization happens at query time; integer dots are exact in
-    doubles, making the score — and therefore the ranking — replayable
-    bit-for-bit from SQL. floor(x+0.5) pins the quantizer's half-way
-    rule to a primitive both engines share."""
-    emb = _read(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk_int8(
         emb.where(F.col("vec_id") < 10), emb, k=5
     )
 
@@ -1599,44 +1430,7 @@ def ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     against brute force in pytest."""
     emb = _read(spark, sf_dir, "embeddings")
     cents = _ivf_codebook(spark, sf_dir)
-    return similarity.ivf_topk(
-        emb.where(F.col("vec_id") < 10), emb, k=3, centroids=cents
-    )
-
-
-@q(
-    "ann_ivf_int8",
-    f"WITH {_DUCK_CELLS}, "
-    "qz AS (SELECT vec_id, cell, CASE WHEN "
-    "list_max(list_transform(embedding, x -> abs(x::DOUBLE))) > 0 "
-    "THEN list_transform(embedding, x -> floor(x::DOUBLE * 127.0 / "
-    "list_max(list_transform(embedding, y -> abs(y::DOUBLE))) + 0.5)::BIGINT) "
-    "ELSE list_transform(embedding, x -> 0::BIGINT) END AS qe FROM cells), "
-    "scored AS (SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id, "
-    f"{_duck_cos('q.qe', 'c.qe')} AS _cos "
-    "FROM qz q JOIN qz c ON q.cell = c.cell AND q.vec_id < 10 AND "
-    "q.vec_id <> c.vec_id), ranked AS (SELECT q_id, neighbor_id, _cos, "
-    "row_number() OVER (PARTITION BY q_id ORDER BY _cos DESC, neighbor_id) "
-    "AS rank FROM scored) SELECT q_id, rank::INT AS rank, neighbor_id, "
-    "round(_cos, 4) AS cos FROM ranked WHERE rank <= 3",
-)
-def ann_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production ANN combination: IVF cells bound the candidate
-    set (equi-join on cell id — the 100 TB join shape) while the stored
-    vectors are int8-quantized (4× less memory/IO). The coarse
-    quantizer assigns cells on the float vector; scoring runs on the
-    quantized one — exactly the float-codebook/compressed-storage split
-    of a billion-vector deployment. Rankings replay bit-for-bit (exact
-    integer dots in doubles)."""
-    emb = _read(spark, sf_dir, "embeddings")
-    cents = _ivf_codebook(spark, sf_dir)
-    return similarity.ivf_topk(
-        emb.where(F.col("vec_id") < 10),
-        emb,
-        k=3,
-        centroids=cents,
-        quantize=True,
-    )
+    return similarity.ivf_topk(emb.where(F.col("vec_id") < 10), emb, cents, k=3)
 
 
 # ---------------------------------------------------------------------------
@@ -3604,36 +3398,9 @@ def rollup_hypertable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# deterministic cardinality sketch (linear counting)
+# deterministic cardinality sketches (HyperLogLog): DuckDB replays every
+# register from md5 string ops
 
-
-@q(
-    "sketch_distinct",
-    f"WITH tok AS (SELECT source, unnest({duck_toks('text')}) AS term "
-    "FROM documents) "
-    "SELECT source, count(*)::BIGINT AS n_values, "
-    "count(DISTINCT substring(md5(term), 1, 4))::INT AS filled_slots, "
-    "round(-65536.0 * ln(1 - count(DISTINCT substring(md5(term), 1, 4)) "
-    "/ 65536.0))::BIGINT AS est_distinct, "
-    "count(DISTINCT term)::BIGINT AS exact_distinct "
-    "FROM tok GROUP BY source",
-)
-def sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source distinct-token estimate via LINEAR COUNTING (Whang
-    et al. 1990) built on the md5 primitive both engines share —
-    unlike HLL++'s engine-private registers, every bit is replayable
-    from ANSI SQL. Aggregation state is bounded by the 65536-slot
-    bitmap per group however many distinct values stream through (the
-    sketch property that matters at 100 TB); the exact count rides
-    along so the output shows the estimator's error."""
-    docs = _read(spark, sf_dir, "documents")
-    tok = docs.select(
-        "source", F.explode(textstats.tokens("text")).alias("term")
-    )
-    return sketches.linear_count_distinct(tok, "source", "term")
-
-
-# HyperLogLog twin — DuckDB replays every register from md5 string ops.
 _HLL_W = "substring(h, 4, 13)"
 _HLL_LZ = f"length(regexp_extract({_HLL_W}, '^0*'))"
 _HLL_FIRST = f"substring({_HLL_W}, {_HLL_LZ} + 1, 1)"
@@ -3687,8 +3454,8 @@ def _hll_est_sql(filled: str, s: str) -> str:
 def hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source distinct-token estimate via HYPERLOGLOG (Flajolet et
     al. 2007) with md5-replayable registers — the production sketch
-    shape (2 KB of state per group at m=4096 vs linear counting's 8 KB
-    bitmap, and accurate far past the bitmap's saturation point). The
+    shape (4096 small registers per group however many values stream
+    through; the exact count rides along as its twin column). The
     harmonic mean is summed in exact integer arithmetic (Σ 2^(cap-ρ)
     over bigints) because a floating-point Σ is partial-aggregate-order
     dependent and would break cross-engine parity; the standard small-
@@ -3741,42 +3508,6 @@ def hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("term"),
     )
     return sketches.hll_merge_invariant(tok, "term", "part")
-
-
-@q(
-    "hll_stream_twin",
-    f"WITH w AS (SELECT {HOST_SQL} AS host, {URL_SQL} AS url "
-    "FROM documents UNION ALL "
-    f"SELECT {HOST_SQL}, {URL_SQL} FROM documents), "
-    "hx AS (SELECT host, url, md5(url) AS h FROM w), "
-    f"rr AS (SELECT host, substring(h, 1, 3) AS bucket, {_HLL_RHO} AS rho "
-    "FROM hx), "
-    "regs AS (SELECT host, bucket, max(rho) AS r FROM rr "
-    "GROUP BY host, bucket), "
-    "pg AS (SELECT host, count(*)::INT AS filled_registers, "
-    f"sum(1::BIGINT << ({sketches.RHO_CAP} - r))::BIGINT AS s FROM regs "
-    "GROUP BY host), "
-    "tot AS (SELECT host, count(*)::BIGINT AS n_values, "
-    "count(DISTINCT url)::BIGINT AS exact_distinct FROM w GROUP BY host) "
-    "SELECT host, n_values, filled_registers, "
-    f"{_hll_est_sql('filled_registers', 's')} AS est_distinct_hll, "
-    "exact_distinct FROM pg JOIN tot USING (host)",
-)
-def hll_stream_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the stateful streaming sketch
-    (streaming/ingest.stateful_host_distinct — HLL registers AS the
-    applyInPandasWithState state, 4096 ints per host however many urls
-    stream through): per-host distinct-URL estimate over the corpus
-    plus a full re-crawl of the SAME urls. Registers are idempotent
-    under duplicates, so the re-crawl moves nothing — n_values doubles,
-    the estimate doesn't. The Python state twin is byte-identical to
-    these SQL register rules (pinned by
-    tests/test_sinks_streaming.py::test_stateful_host_distinct_hll_state
-    and the py/SQL twin equality in test_functions)."""
-    docs = _read(spark, sf_dir, "documents").select(
-        F.expr(_HOST_ONLY_SQL).alias("host"), F.expr(URL_SQL).alias("url")
-    )
-    return sketches.hll_distinct(docs.unionAll(docs), "host", "url")
 
 
 _CM_J = "(SELECT unnest([0, 1, 2, 3]) AS j)"
@@ -5037,15 +4768,7 @@ def dedup_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Registry ordering: the round driver correctness-checks only the FIRST
-# 50 entries of ``queries()`` (observed: CORRECTNESS_r03 stopped at the
-# 50th row, leaving every round-3 addition driver-unverified even though
-# the identical local gate passes all 100).  Order therefore encodes
-# VERIFICATION PRIORITY, not definition order: the window interleaves
-# one-or-two representatives of every operator family, newest and
-# highest-risk first; the back half holds near-twins of windowed entries
-# (e.g. dedup_embedding vs dedup_embedding_bucketed) that the local gate
-# (tools/check_oracle.py) still covers in full.
+# deterministic training order and upsampling
 
 _ORDER_BUCKET_SQL = _MIX_BUCKET_SQL.replace("substr(h,", "substr(k,")
 
@@ -5082,8 +4805,6 @@ def training_order_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 @q(
     "upsample_repeat",
     "WITH b AS (SELECT doc_id, "
@@ -5107,52 +4828,3 @@ def upsample_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("copy").cast("int").alias("copy"),
         textstats.ws_token_count("text").alias("n_tokens"),
     )
-
-
-
-# The driver records oracle results for the FIRST 50 registry entries
-# per round; this window rotates each round so every family lands in a
-# recorded CORRECTNESS_r{N}.json at least once. Round 5: every query
-# never driver-checked in r1-r4 (including the five r5 additions),
-# then the ones last recorded in r1-r3; the entries this pushes past
-# position 50 are all multiply-recorded green in earlier rounds
-# (r4 checked the remaining 50 — see CORRECTNESS_r04.json).
-_PRIORITY_WINDOW = [
-    # --- new in round 5 ---
-    "crawl_schedule", "sitemap_discovery", "soft404_filter", "wet_export",
-    "html_metadata",
-    "mp3_metadata", "ogg_metadata", "webm_metadata", "robots_gate",
-    "dsir_select", "ccnet_buckets",
-    "paragraph_dedup", "gopher_rules",
-    # --- never driver-checked in any round (r1-r4) ---
-    "training_order", "upsample_repeat",
-    "snapshot_diff", "compaction_plan", "bloom_prefilter", "zorder_layout",
-    "sessionize", "hll_distinct", "hll_stream_twin", "sketch_distinct",
-    "mojibake_score", "url_canonicalize", "host_blocklist",
-    "host_outlinks", "host_quality_prior",
-    "stratified_sample", "mix_temperature", "chunk_docs",
-    "inverted_index", "unigram_surprisal", "bpe_pair_counts",
-    "length_percentiles", "corpus_report", "embed_project",
-    # --- checked last in r1-r3, absent from r4's window ---
-    "span_geometry_clean", "host_running_totals", "instance_index",
-    "instance_selector", "rank_join", "containment_anti_join",
-    "spatial_block_join", "group_stats", "vocab_census", "oov_count",
-    "scalar_chain", "search_context", "distinct_sources",
-    "volume_by_nation", "orders_without_lineitems",
-    "dedup_embedding", "dedup_embedding_multiprobe",
-    "ann_topk_int8", "ann_ivf_bucketed",
-    "lang_id", "quality_score", "token_count", "doc_fingerprint",
-    "repetition_score", "dedup_components", "sample_split",
-    # positions 51+: multiply-recorded TPC-H classics (r1-r3 green)
-    "pricing_summary", "top_customers",
-]
-
-
-def _reorder_registry() -> None:
-    ordered = {n: QUERIES[n] for n in _PRIORITY_WINDOW if n in QUERIES}
-    ordered.update({n: f for n, f in QUERIES.items() if n not in ordered})
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
-_reorder_registry()

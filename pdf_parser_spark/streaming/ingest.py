@@ -538,7 +538,7 @@ def stateful_host_distinct(stream: DataFrame) -> DataFrame:
     Each trigger folds the batch's urls into the registers
     (``sketches.py_update_registers`` — the byte-identical Python twin
     of the SQL register rules, so a streaming estimate equals the batch
-    `hll_distinct` over the same values) and emits the running
+    ``sketches.hll_distinct`` over the same values) and emits the running
     estimate. Duplicate urls across batches are free: max is
     idempotent, so a re-crawled page never moves a register — the
     streaming analog of the `hll_merge` invariant.

@@ -291,7 +291,8 @@ def test_scan_partitioned_matches_salted(spark, tmp_path, webdocs, parsed):
     """num_partitions=0 (no shuffle, scan-parallel) extracts the exact
     same (url, text) set as the salted default, and its physical plan
     contains no Exchange — the property that makes it the shippable
-    plan for a stateless parse at 10^12-doc scale."""
+    plan for a stateless parse at 10^12-doc scale. The default parse of
+    the same host-bearing input plans the salted (host, salt) shuffle."""
     corpus_path = str(tmp_path / "corpus")
     webdocs.write.parquet(corpus_path)
     scan = parse_webdocs(
@@ -299,6 +300,9 @@ def test_scan_partitioned_matches_salted(spark, tmp_path, webdocs, parsed):
     )
     plan = scan._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+    salted = parse_webdocs(spark.read.parquet(corpus_path))
+    salted_plan = salted._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(host" in salted_plan
     got = {(r.url, r.text) for r in scan.select("url", "text").collect()}
     want = {(r.url, r.text) for r in parsed.select("url", "text").collect()}
     assert got == want

@@ -9,10 +9,7 @@ import pandas as pd
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["events", "documents", "embeddings"]
 
 
 @pytest.fixture(scope="module")

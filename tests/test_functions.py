@@ -263,12 +263,14 @@ def test_topk_and_ivf(emb):
     assert per_q == {0, 1, 2}
     for r in exact:
         assert r["neighbor_id"] != r["q_id"]
-    ivf = similarity.ivf_topk(q, emb, k=3).collect()
+    cb = similarity.medoid_centroids(emb, n_cells=4)
+    ivf = similarity.ivf_topk(q, emb, cb, k=3).collect()
     assert 0 < len(ivf) <= 9
     # IVF results are a subset-cell re-rank: every (q, neighbor) pair it
-    # returns shares the query's coarse cell by construction
+    # returns shares the query's nearest cell by construction
+    primary = F.element_at(similarity.centroid_cells("embedding", cb, 1), 1)
     cells = {r["vec_id"]: r["cell"] for r in emb.select(
-        "vec_id", similarity.ivf_cell_expr(F.col("embedding")).alias("cell")
+        "vec_id", primary.alias("cell")
     ).collect()}
     for r in ivf:
         assert cells[r["q_id"]] == cells[r["neighbor_id"]]
@@ -320,9 +322,9 @@ def test_decode_malformed_raises():
 
 def test_kmeans_ivf_recall_vs_bruteforce(emb):
     """Real-codebook IVF (kmeans on a sample → broadcast centroids →
-    argmin cell expressions): all cells populated, assignments match a
-    driver-side argmin, and single-probe recall@3 vs exact brute force
-    is well above chance (measured 0.7 on this corpus; chance ≈ 1/8)."""
+    argmin cell expressions): all cells populated, and single-probe
+    recall@3 vs exact brute force is well above chance (measured 0.7 on
+    this corpus; chance ≈ 1/8)."""
     q = emb.where(F.col("vec_id") < 10)
     cb = similarity.kmeans_codebook(emb, n_cells=8, iters=8)
     assert len(cb) == 8 and len(cb[0]) == 64
@@ -344,31 +346,46 @@ def test_kmeans_ivf_recall_vs_bruteforce(emb):
     }
     assert iv_all == bfs
     # every cell used (balanced codebook on this corpus)
-    cells = emb.select(
-        similarity.centroid_cell_expr(F.col("embedding"), cb).alias("c")
-    )
-    assert cells.distinct().count() == 8
-    # expression assignment agrees with a NumPy argmin on a sample
-    import numpy as np
-
-    rows = emb.orderBy("vec_id").limit(32).collect()
-    x = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
-    c = np.asarray(cb)
-    expected = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-    got = [
-        r["c"]
-        for r in emb.orderBy("vec_id")
-        .limit(32)
-        .select(similarity.centroid_cell_expr(F.col("embedding"), cb).alias("c"))
-        .collect()
-    ]
-    assert got == expected.tolist()
+    primary = F.element_at(similarity.centroid_cells("embedding", cb, 1), 1)
+    assert emb.select(primary.alias("c")).distinct().count() == 8
 
 
 def test_medoid_centroids_deterministic(emb):
     a = similarity.medoid_centroids(emb, n_cells=4)
     b = similarity.medoid_centroids(emb, n_cells=4)
     assert a == b and len(a) == 4
+
+
+def test_centroid_cells(emb):
+    """centroid_cells ranks cells by squared distance: element 1 is the
+    NumPy argmin, the top-n prefix is the NumPy argsort, a duplicated
+    centroid ties to the lower index, and n clamps to the codebook."""
+    import numpy as np
+
+    sample = emb.orderBy("vec_id").limit(64)
+    x = np.asarray(
+        [r["embedding"] for r in sample.collect()], dtype=np.float64
+    )
+    cb = similarity.medoid_centroids(emb.where(F.col("vec_id") >= 100), 8)
+    d2 = ((x[:, None, :] - np.asarray(cb)[None, :, :]) ** 2).sum(axis=2)
+    got = [
+        list(r["c"])
+        for r in sample.select(
+            similarity.centroid_cells("embedding", cb, 3).alias("c")
+        ).collect()
+    ]
+    assert [c[0] for c in got] == d2.argmin(axis=1).tolist()
+    assert got == np.argsort(d2, axis=1, kind="stable")[:, :3].tolist()
+    # centroid 5 repeated as 8 → an exact distance tie, broken to 5
+    dup = cb + [cb[5]]
+    ranked = [
+        list(r["c"])
+        for r in sample.select(
+            similarity.centroid_cells("embedding", dup, 20).alias("c")
+        ).collect()
+    ]
+    assert all(len(c) == 9 and sorted(c) == list(range(9)) for c in ranked)
+    assert all(c.index(5) == c.index(8) - 1 for c in ranked)
 
 
 # -------------------------------------------------------------- multimodal png
@@ -565,7 +582,9 @@ def test_ivf_recall_perf_curve(spark):
         cell_counts = {
             r["cell"]: r["n"]
             for r in emb.select(
-                similarity.centroid_cell_expr("embedding", book).alias("cell")
+                F.element_at(
+                    similarity.centroid_cells("embedding", book, 1), 1
+                ).alias("cell")
             )
             .groupBy("cell")
             .agg(F.count("*").alias("n"))
@@ -580,9 +599,7 @@ def test_ivf_recall_perf_curve(spark):
                 1 for r in got if r["neighbor_id"] in truth[r["q_id"]]
             ) / (n_q * k)
             probed = queries.select(
-                similarity.centroid_cells_topn(
-                    "embedding", book, nprobe
-                ).alias("cells")
+                similarity.centroid_cells("embedding", book, nprobe).alias("cells")
             ).collect()
             cand = sum(
                 cell_counts.get(c, 0) for r in probed for c in r["cells"]
@@ -640,7 +657,7 @@ def test_embedding_neardup_bucketed(spark, emb):
 
 
 def test_embedding_neardup_multiprobe_recall(spark, emb):
-    """probes=2 finds every single-probe pair PLUS boundary-straddling
+    """nprobe=2 finds every single-probe pair PLUS boundary-straddling
     ones, and stays a subset of the exact O(n²) result."""
     from pdf_parser_spark.functions import similarity
 
@@ -656,9 +673,9 @@ def test_embedding_neardup_multiprobe_recall(spark, emb):
     cents = similarity.medoid_centroids(emb, n_cells=16)
     p1 = {
         (r["a_id"], r["b_id"])
-        for r in dedup.embedding_neardup_bucketed(u, cents, probes=1).collect()
+        for r in dedup.embedding_neardup_bucketed(u, cents, nprobe=1).collect()
     }
-    rows2 = dedup.embedding_neardup_bucketed(u, cents, probes=2).collect()
+    rows2 = dedup.embedding_neardup_bucketed(u, cents, nprobe=2).collect()
     p2 = {(r["a_id"], r["b_id"]) for r in rows2}
     assert len(rows2) == len(p2), "multi-probe must de-duplicate pairs"
     assert p1 <= p2
@@ -999,34 +1016,15 @@ def test_hll_distinct_accuracy_and_smallrange(spark):
     out3 = {r["g"]: r for r in sketches.hll_distinct(df20, "g", "v").collect()}
     assert out3["big"]["est_distinct_hll"] == big["est_distinct_hll"]
     assert out3["big"]["filled_registers"] == big["filled_registers"]
-
-
-# ------------------------------------------------------------ int8 ANN
-
-
-def test_int8_quantize_and_topk(spark, emb):
-    """Quantization edge cases (zero vector → zeros, |q| ≤ 127, exact
-    127 at the max coordinate) and ranking fidelity: int8 top-5 recalls
-    ≥ 4 of the exact float top-5 on the test corpus."""
-    df = spark.createDataFrame(
-        [(1, [0.0, 0.0, 0.0]), (2, [0.5, -1.0, 0.25]), (3, [3.0, 4.0, 0.0])],
-        "vec_id INT, embedding ARRAY<FLOAT>",
-    )
-    got = {
-        r["vec_id"]: list(r["q"])
-        for r in df.select(
-            "vec_id", similarity.int8_quantize_expr(F.col("embedding")).alias("q")
-        ).collect()
-    }
-    assert got[1] == [0, 0, 0]
-    assert got[2] == [64, -127, 32]  # floor(±x·127/1.0 + 0.5)
-    assert got[3] == [95, 127, 0]
-    q = emb.where(F.col("vec_id") < 10)
-    exact = similarity.cosine_topk(q, emb, k=5).collect()
-    quant = similarity.cosine_topk_int8(q, emb, k=5).collect()
-    ex = {(r.q_id, r.neighbor_id) for r in exact}
-    qz = {(r.q_id, r.neighbor_id) for r in quant}
-    assert len(ex & qz) / len(ex) >= 0.8
+    # the pure-Python register twin (the streaming sketch's state)
+    # reproduces the SQL registers and estimate exactly
+    for g in ("big", "small"):
+        regs = sketches.py_update_registers(
+            [0] * sketches.HLL_M, [v for k, v in rows if k == g]
+        )
+        assert sketches.py_estimate(regs) == (
+            out[g]["filled_registers"], out[g]["est_distinct_hll"]
+        )
 
 
 # ------------------------------------------------------------- mojibake
@@ -1104,18 +1102,6 @@ def test_mix_temperature_sqrt_shares(spark):
     assert by["lo"] == 100  # scarcest keeps 100%
     # hi keeps √(1000/4000) = 0.5 in expectation over the 16-bit hash
     assert 150 <= by["hi"] <= 250
-
-
-def test_ivf_int8_recall(spark, emb):
-    """IVF + int8 storage: quantized within-cell rankings recall most
-    of the float IVF top-3 (same cells, compressed vectors)."""
-    q = emb.where(F.col("vec_id") < 10)
-    cb = similarity.kmeans_codebook(emb, n_cells=8, iters=8)
-    fl = similarity.ivf_topk(q, emb, k=3, centroids=cb).collect()
-    qz = similarity.ivf_topk(q, emb, k=3, centroids=cb, quantize=True).collect()
-    fls = {(r.q_id, r.neighbor_id) for r in fl}
-    qzs = {(r.q_id, r.neighbor_id) for r in qz}
-    assert len(fls & qzs) / len(fls) >= 0.7
 
 
 def test_raster_decompression_bomb_guard():

@@ -22,13 +22,6 @@ def _plan(spark, name: str) -> str:
     )
 
 
-def test_top_customers_broadcasts_the_dim(spark):
-    plan = _plan(spark, "top_customers")
-    assert "BroadcastHashJoin" in plan
-    # the fact side must NOT be shuffled for the join
-    assert "SortMergeJoin" not in plan
-
-
 def test_dedup_exact_single_shuffle_with_partial_agg(spark):
     plan = _plan(spark, "dedup_exact")
     assert plan.count("Exchange") <= 2  # hash shuffle (+AQE read)
@@ -68,15 +61,15 @@ def test_scalar_chain_prunes_scan_columns(spark):
     start = plan.find("ReadSchema")
     assert start != -1
     schema_line = plan[start : plan.find("\n", start)]
-    assert "l_comment" not in schema_line
+    assert "source" not in schema_line and "lang" not in schema_line
     assert schema_line.count(",") <= 3
 
 
 def test_bucketed_neardup_equi_join_no_cartesian(spark):
-    """The scale-path near-dup must stay an equi-join on cell id — a
-    plan regression to a cartesian/broadcast-nested-loop product is the
-    100 TB failure mode this query exists to avoid."""
-    for name in ("dedup_embedding_bucketed", "dedup_embedding_multiprobe"):
+    """The scale-path near-dup and IVF ANN must stay equi-joins on cell
+    id — a plan regression to a cartesian/broadcast-nested-loop product
+    is the 100 TB failure mode these queries exist to avoid."""
+    for name in ("dedup_embedding_multiprobe", "ann_ivf_bucketed"):
         plan = _plan(spark, name)
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
@@ -357,14 +350,6 @@ def test_hll_distinct_bounded_aggregations(spark):
     assert "rangepartitioning" not in plan.lower()
 
 
-def test_ann_topk_int8_broadcast_query_side(spark):
-    # quantized brute-force twin keeps the broadcast-queries/streaming-
-    # corpus shape: no shuffle of the corpus before scoring
-    plan = _plan(spark, "ann_topk_int8")
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_countmin_bounded_sketch_and_topk_cut(spark):
     # sketch build = hash aggregations (bounded d·w state); the top-20
     # probe cut is TakeOrderedAndProject, never a global sort exchange
@@ -380,15 +365,6 @@ def test_mix_temperature_broadcast_filter(spark):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "rangepartitioning" not in plan.lower()
-
-
-def test_ann_ivf_int8_equi_join_on_cell(spark):
-    # the candidate cut is a hash equi-join on the cell id, not a
-    # nested-loop cross join
-    plan = _plan(spark, "ann_ivf_int8")
-    assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_host_blocklist_is_map_only(spark):

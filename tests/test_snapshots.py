@@ -50,7 +50,7 @@ def test_snapshot_resume_after_midrun_crash(spark, webdocs, tmp_path):
 
     # crash debris: a data directory with NO manifest must be invisible
     debris = webdocs.limit(3)
-    parse_webdocs(debris, salt=False).write.mode("overwrite").parquet(
+    parse_webdocs(debris, num_partitions=0).write.mode("overwrite").parquet(
         os.path.join(out, "data", "bucket=99")
     )
     assert log.read(spark).count() == n_committed
@@ -271,7 +271,7 @@ def test_incremental_read_and_orphan_gc(spark, webdocs, tmp_path):
 
     # orphan GC removes only unreferenced debris, never committed data
     debris = os.path.join(out, "data", "bucket=77")
-    parse_webdocs(webdocs.limit(2), salt=False).write.mode(
+    parse_webdocs(webdocs.limit(2), num_partitions=0).write.mode(
         "overwrite"
     ).parquet(debris)
     removed = log.remove_orphans()
@@ -376,7 +376,7 @@ def test_cdc_feeds_incremental_dedup(spark, webdocs, tmp_path):
     # commit B as its own snapshot (new bucket id — A's buckets stay
     # untouched; at crawl scale each ingest wave gets a bucket range)
     path_b = os.path.join(out, "data", "bucket=100")
-    parse_webdocs(batch_b, salt=False).write.mode("overwrite").parquet(path_b)
+    parse_webdocs(batch_b, num_partitions=0).write.mode("overwrite").parquet(path_b)
     log.commit(100, [path_b], {"n_docs": batch_b.count()}, n_buckets=3)
 
     # the CDC read returns exactly batch B, nothing of A

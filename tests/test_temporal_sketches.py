@@ -1,11 +1,9 @@
-"""Edge-case semantics of the temporal joins, the hypertable rollup,
-the linear-counting sketch, and the tokenizer-prep text ops — the cases
-the corpus-level oracle sweep can't isolate (boundary inclusion, ties,
-empty groups, estimator accuracy).
+"""Edge-case semantics of the temporal joins, the hypertable rollup
+and the tokenizer-prep text ops — the cases the corpus-level oracle
+sweep can't isolate (boundary inclusion, ties, empty groups).
 """
 
 import datetime as dt
-import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,7 +15,7 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
-from pdf_parser_spark.functions import sketches, temporal, textstats
+from pdf_parser_spark.functions import temporal, textstats
 
 
 def _ts(s: int):
@@ -130,24 +128,6 @@ class TestRollupHypertable:
         assert day0["n_events"] == 3 and day0["value_cents"] == 300
         assert sum(r["n_events"] for r in hours) == sum(
             r["n_events"] for r in days.values()
-        )
-
-
-class TestLinearCounting:
-    def test_estimate_tracks_exact(self, spark):
-        df = spark.range(5000).select(
-            F.lit("g").alias("g"),
-            F.concat(F.lit("v"), (F.col("id") % 2000)).alias("v"),
-        )
-        row = sketches.linear_count_distinct(df, "g", "v").collect()[0]
-        assert row["exact_distinct"] == 2000
-        assert row["n_values"] == 5000
-        # B=65536 slots, n=2000: linear counting is ~1% accurate here
-        assert abs(row["est_distinct"] - 2000) < 60
-        # the estimator is the closed form over the filled-slot count
-        f = row["filled_slots"]
-        assert row["est_distinct"] == round(
-            -65536.0 * math.log(1 - f / 65536.0)
         )
 
 

@@ -19,10 +19,7 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["events", "documents", "embeddings"]
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
