@@ -58,7 +58,6 @@ HEADLINE = [
     "host_cap",
     "corpus_filter",
     "top_terms",
-    "sessionize",
     "host_pagerank",
     "host_quality_prior",
     "url_canonicalize",
@@ -74,9 +73,6 @@ HEADLINE = [
     "substring_dup_spans",
     "unigram_surprisal",
     "bigram_surprisal",
-    "asof_join",
-    "range_join",
-    "rollup_hypertable",
     "hll_distinct",
     "countmin_freq",
     "hll_merge",
@@ -89,7 +85,6 @@ HEADLINE = [
     "host_blocklist",
     "zorder_layout",
     "embed_project",
-    "stream_join_twin",
     "vocab_census",
     "containment_anti_join",
     "spatial_block_join",

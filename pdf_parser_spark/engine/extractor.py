@@ -16,7 +16,6 @@ parse-failure counts per partition without a second pass over payloads.
 
 from __future__ import annotations
 
-import os
 import time
 from collections.abc import Iterator
 
@@ -57,20 +56,9 @@ def _sniff(payload: bytes) -> str:
 # memory far past the executor's per-core budget and can fail the whole
 # stage. Oversize rows short-circuit to an error row — lineage keeps the
 # url and true byte count, the audit sink counts them, and the other
-# rows in the batch are unaffected. Override per job via
-# SPARK_GRAFT_MAX_PAYLOAD_BYTES (driver env, shipped in the closure) or
-# the parse_webdocs parameter; 0 disables the guard.
+# rows in the batch are unaffected. Override per job with the
+# parse_webdocs parameter; 0 disables the guard.
 DEFAULT_MAX_PAYLOAD_BYTES = 64 * 1024 * 1024
-
-
-def _resolve_max_payload(max_payload_bytes: int | None) -> int:
-    if max_payload_bytes is not None:
-        return max_payload_bytes
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_MAX_PAYLOAD_BYTES", DEFAULT_MAX_PAYLOAD_BYTES
-        )
-    )
 
 
 def _arrow_schema():
@@ -123,7 +111,7 @@ def extract_batch_arrow(
     emit_items: bool = True,
     emit_spans: bool = False,
     multibyte: bool = False,
-    max_payload_bytes: int | None = None,
+    max_payload_bytes: int = DEFAULT_MAX_PAYLOAD_BYTES,
 ) -> Iterator:
     """mapInArrow body: (url, html[, ...]) batches → PARSED_SCHEMA batches.
 
@@ -138,7 +126,6 @@ def extract_batch_arrow(
 
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
-    max_bytes = _resolve_max_payload(max_payload_bytes)
     schema = _arrow_schema()
     for batch in batches:
         urls = batch.column("url").to_pylist()
@@ -158,9 +145,10 @@ def extract_batch_arrow(
             kind = _sniff(raw)
             text, n_pages, n_items, error = "", 0, 0, None
             n_spans = fallback_pages = recovered = 0
-            if max_bytes and len(raw) > max_bytes:
+            if max_payload_bytes and len(raw) > max_payload_bytes:
                 error = (
-                    f"PayloadTooLarge: {len(raw)} bytes > cap {max_bytes}"
+                    f"PayloadTooLarge: {len(raw)} bytes > cap "
+                    f"{max_payload_bytes}"
                 )
             elif kind == "pdf":
                 r = extract_pdf(raw, multibyte_cmaps=multibyte, spans=emit_spans)
@@ -267,7 +255,7 @@ def parse_webdocs(
     emit_items: bool = False,
     emit_spans: bool = False,
     multibyte: bool = False,
-    max_payload_bytes: int | None = None,
+    max_payload_bytes: int = DEFAULT_MAX_PAYLOAD_BYTES,
 ) -> DataFrame:
     """webdocs → parsed DataFrame (the single materialization point).
 
@@ -296,10 +284,10 @@ def parse_webdocs(
     off by default for reference-identical output.
 
     ``max_payload_bytes`` caps per-document payload size (default 64
-    MiB, env ``SPARK_GRAFT_MAX_PAYLOAD_BYTES``, 0 disables): oversize
-    rows become error rows (``PayloadTooLarge``) with url + true byte
-    count preserved for the audit sink, instead of risking one
-    mislabeled multi-GB crawl row failing a whole stage.
+    MiB, 0 disables): oversize rows become error rows
+    (``PayloadTooLarge``) with url + true byte count preserved for the
+    audit sink, instead of risking one mislabeled multi-GB crawl row
+    failing a whole stage.
 
     ``num_partitions=0`` preserves the input partitioning — no
     repartition, no salt, the kernel maps directly over the source's
@@ -342,17 +330,13 @@ def parse_webdocs(
     # the kernel's span pass nor ships the structs back to the JVM.
     from functools import partial
 
-    # resolve the payload cap ON THE DRIVER so the env-var override
-    # rides the closure to every executor (workers don't inherit the
-    # driver's environment on a real cluster)
-    max_bytes = _resolve_max_payload(max_payload_bytes)
     return slim.mapInArrow(
         partial(
             extract_batch_arrow,
             emit_items=emit_items,
             emit_spans=emit_spans,
             multibyte=multibyte,
-            max_payload_bytes=max_bytes,
+            max_payload_bytes=max_payload_bytes,
         ),
         schema=PARSED_SCHEMA,
     )

@@ -18,6 +18,5 @@ from . import (  # noqa: F401
     sampling,
     similarity,
     sketches,
-    temporal,
     textstats,
 )

@@ -46,7 +46,6 @@ from .functions import (
     packing,
     similarity,
     sketches,
-    temporal,
     textstats,
 )
 
@@ -918,27 +917,6 @@ def spatial_block_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("page_no").cast("int").alias("page_no"),
             F.col("seq").cast("int").alias("seq"),
             "block_order",
-        )
-    )
-
-
-@q(
-    "group_stats",
-    "SELECT event_type, count(*)::BIGINT AS n_events, "
-    "count(DISTINCT user_id)::BIGINT AS n_users, "
-    "min(event_id) AS first_event_id, "
-    "round(sum(value), 2) AS total_value FROM events GROUP BY event_type",
-)
-def group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5/A2-style per-group rollup with map-side partial aggregation."""
-    return (
-        _read(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            F.countDistinct("user_id").cast("bigint").alias("n_users"),
-            F.min("event_id").alias("first_event_id"),
-            F.round(F.sum("value"), 2).alias("total_value"),
         )
     )
 
@@ -1916,53 +1894,6 @@ def corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("keep").cast("bigint").alias("n_kept")
     )
     return stats.crossJoin(kept)
-
-
-_SESSION_GAP_S = 14_400  # 4 hours
-
-
-@q(
-    "sessionize",
-    # both windows order by (ts, event_id): with duplicate ts per user
-    # (e.g. the replicated sf1 sweep corpus) a bare ORDER BY ts lets
-    # the lag pass and the cumsum pass order ties DIFFERENTLY, so a
-    # tie group can straddle two sids — nondeterministic session
-    # counts; the tiebreaker makes sid assignment total-ordered
-    "WITH lagd AS (SELECT user_id, ts, event_id, CASE WHEN lag(ts) OVER w IS NULL OR "
-    f"epoch_us(ts) - epoch_us(lag(ts) OVER w) >= {_SESSION_GAP_S * 1_000_000} "
-    "THEN 1 ELSE 0 END AS brk FROM events "
-    "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)), "
-    "s AS (SELECT user_id, ts, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id "
-    "ROWS UNBOUNDED PRECEDING) AS sid FROM lagd) "
-    "SELECT user_id, min(ts) AS session_start, count(*)::BIGINT AS n_events, "
-    "(epoch_us(max(ts)) - epoch_us(min(ts)))::BIGINT AS span_micros "
-    "FROM s GROUP BY user_id, sid",
-)
-def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (4-hour inactivity timeout) via Spark's
-    native session_window — the merging-interval aggregation that plain
-    SQL needs a lag+cumsum window chain to express (which is exactly
-    what the oracle does, so the two independent formulations check
-    each other). One shuffle keyed on user_id; the same expression runs
-    under readStream for live sessionization."""
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            "user_id",
-            F.session_window("ts", f"{_SESSION_GAP_S} seconds").alias("w"),
-        )
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.count("*").alias("n_events"),
-            (
-                # ts is TIMESTAMP_NTZ; the UTC-pinned cast offsets
-                # cancel in the difference
-                F.unix_micros(F.max("ts").cast("timestamp"))
-                - F.unix_micros(F.min("ts").cast("timestamp"))
-            ).alias("span_micros"),
-        )
-        .select("user_id", "session_start", "n_events", "span_micros")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3277,127 +3208,6 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# temporal joins over the events table (as-of, bounded range) and the
-# hypertable rollup — the fetch-log shapes around the extraction engine
-
-
-@q(
-    "asof_join",
-    "WITH clk AS (SELECT user_id, ts, event_id AS click_id FROM events "
-    "WHERE event_type = 'click'), "
-    "err AS (SELECT user_id, ts, event_id AS err_id FROM events "
-    "WHERE event_type = 'error'), "
-    "cand AS (SELECT e.err_id, c.click_id, c.ts AS clk_ts, "
-    "row_number() OVER (PARTITION BY e.err_id "
-    "ORDER BY c.ts DESC, c.click_id DESC) AS rn "
-    "FROM err e JOIN clk c ON c.user_id = e.user_id AND c.ts <= e.ts) "
-    "SELECT e.err_id, e.user_id, "
-    "coalesce(m.click_id, -1)::BIGINT AS click_id, "
-    "coalesce(epoch_us(e.ts) - epoch_us(m.clk_ts), -1)::BIGINT "
-    "AS micros_since_click "
-    "FROM err e LEFT JOIN (SELECT err_id, click_id, clk_ts FROM cand "
-    "WHERE rn = 1) m USING (err_id)",
-)
-def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of (point-in-time) join: every error event matched to the
-    latest click by the same user at or before it — the operator Spark
-    has no primitive for. The engine runs the union-merge formulation
-    (functions/temporal.py): ONE shuffle on user_id, a (ts, side)
-    sort, last(ignorenulls) carry-forward — |L|+|R| cost regardless of
-    history density. The oracle is the O(L·R) windowed theta-join
-    restatement, so the two formulations check each other."""
-    ev = _read(spark, sf_dir, "events")
-    clk = ev.where(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("event_id").alias("click_id")
-    )
-    err = ev.where(F.col("event_type") == "error").select(
-        "user_id", "ts", F.col("event_id").alias("err_id")
-    )
-    j = temporal.asof_join(err, clk, keys=["user_id"], payload=["click_id", "ts"])
-    return j.select(
-        "err_id",
-        "user_id",
-        F.coalesce(F.col("asof.click_id"), F.lit(-1))
-        .cast("bigint")
-        .alias("click_id"),
-        F.coalesce(
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            - F.unix_micros(F.col("asof.ts").cast("timestamp")),
-            F.lit(-1),
-        )
-        .cast("bigint")
-        .alias("micros_since_click"),
-    )
-
-
-@q(
-    "range_join",
-    "WITH err AS (SELECT event_id AS err_id, user_id, ts FROM events "
-    "WHERE event_type = 'error'), "
-    "clk AS (SELECT user_id, ts, round(value * 100)::BIGINT AS cents "
-    "FROM events WHERE event_type = 'click'), "
-    "agg AS (SELECT e.err_id, count(*)::INT AS n_recent, "
-    "sum(c.cents)::BIGINT AS recent_cents "
-    "FROM err e JOIN clk c ON c.user_id = e.user_id "
-    "AND epoch_us(c.ts) < epoch_us(e.ts) "
-    "AND epoch_us(c.ts) >= epoch_us(e.ts) - 600000000 "
-    "GROUP BY e.err_id) "
-    "SELECT e.err_id, e.user_id, "
-    "coalesce(a.n_recent, 0)::INT AS n_recent, "
-    "coalesce(a.recent_cents, 0)::BIGINT AS recent_cents "
-    "FROM err e LEFT JOIN agg a USING (err_id)",
-)
-def range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded interval join: clicks within the 10 minutes before each
-    error, per user (count + cents). The engine quantizes timestamps
-    to window-width buckets and explodes two candidate buckets on the
-    error side, so Catalyst plans a hash EQUI-join on (user_id,
-    bucket) with the interval predicate as a residual — the raw theta
-    join the oracle runs would be a nested-loop at scale."""
-    ev = _read(spark, sf_dir, "events")
-    err = ev.where(F.col("event_type") == "error").select(
-        F.col("event_id").alias("err_id"), "user_id", "ts"
-    )
-    clk = ev.where(F.col("event_type") == "click").select(
-        "user_id",
-        "ts",
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-    j = temporal.range_join(err, clk, keys=["user_id"], window_s=600, how="left")
-    # left form + null-skipping aggregates: zero-click errors survive
-    # without a second join back onto the error table
-    return j.groupBy("err_id", "user_id").agg(
-        F.count("match.cents").cast("int").alias("n_recent"),
-        F.coalesce(F.sum("match.cents"), F.lit(0))
-        .cast("bigint")
-        .alias("recent_cents"),
-    )
-
-
-@q(
-    "rollup_hypertable",
-    "WITH b AS (SELECT date_trunc('day', ts) AS db, "
-    "date_trunc('hour', ts) AS hb, event_type, "
-    "round(value * 100)::BIGINT AS cents FROM events) "
-    "SELECT CASE WHEN hb IS NULL THEN '1d' ELSE '1h' END AS granularity, "
-    "(epoch_us(coalesce(hb, db)) // 1000000)::BIGINT AS bucket_start, "
-    "event_type, count(*)::BIGINT AS n_events, "
-    "sum(cents)::BIGINT AS value_cents "
-    "FROM b GROUP BY GROUPING SETS ((db, event_type), (db, hb, event_type))",
-)
-def rollup_hypertable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-granularity time rollup (day + hour per event_type) in
-    ONE shuffle via GROUPING SETS — the TimescaleDB continuous-
-    aggregate shape; a UNION of GROUP BYs would scan and shuffle the
-    events table once per granularity. Cents (per-row round before the
-    int64 sum) keep the aggregate engine-exact."""
-    ev = _read(spark, sf_dir, "events")
-    return temporal.rollup_hypertable(
-        ev, ts_col="ts", dims=["event_type"], value_col="value"
-    )
-
-
-# ---------------------------------------------------------------------------
 # deterministic cardinality sketches (HyperLogLog): DuckDB replays every
 # register from md5 string ops
 
@@ -4434,37 +4244,6 @@ def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         merges, "merge_rank INT, left_sym STRING, right_sym STRING, cnt BIGINT"
     )
-
-
-# ---------------------------------------------------------------------------
-# stream-stream interval join (batch twin)
-
-_ATTR_HORIZON = "4 hours"
-
-
-@q(
-    "stream_join_twin",
-    "SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id, "
-    "(floor(epoch(c.ts))::BIGINT - floor(epoch(v.ts))::BIGINT) AS gap_s "
-    "FROM events v JOIN events c ON v.event_type = 'view' "
-    "AND c.event_type = 'click' AND v.user_id = c.user_id "
-    "AND c.ts >= v.ts AND c.ts <= v.ts + INTERVAL 4 HOUR",
-)
-def stream_join_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the watermarked stream-stream INTERVAL join
-    (streaming/ingest.attributed_clicks): view→click attribution within
-    a 4-hour horizon, same-user equi-key plus a both-ends time bound —
-    the condition shape that lets streaming state expire. The SAME
-    function runs here on batch frames (watermarks no-op); the
-    incremental emission and state-expiry semantics are pinned by
-    tests/test_sinks_streaming.py. Equi-join on user_id carries the
-    time residual — never a cross product."""
-    from .streaming.ingest import attributed_clicks
-
-    events = _read(spark, sf_dir, "events")
-    views = events.where(F.col("event_type") == "view")
-    clicks = events.where(F.col("event_type") == "click")
-    return attributed_clicks(views, clicks, horizon=_ATTR_HORIZON)
 
 
 # ---------------------------------------------------------------------------

@@ -445,79 +445,6 @@ def run_stateful_totals(
 
 
 # ---------------------------------------------------------------------------
-# gap-based sessionization (merging session_window state)
-
-
-def streaming_sessions(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    gap: str = "4 hours",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Live gap-based sessionization: session_window state MERGES as
-    events arrive (unlike tumbling windows, a session's extent isn't
-    known until the gap elapses), and a session emits exactly once —
-    when the watermark passes its end (last event + gap). The
-    watermark also bounds the session store: dormant keys' sessions
-    close and evict, which is what keeps per-user state finite on an
-    unbounded feed.
-
-    Works unchanged on a batch frame (withWatermark no-ops) — the
-    oracle-checked `sessionize` registry query is the batch twin of
-    exactly this aggregation."""
-    from pyspark.sql import functions as F
-
-    return (
-        stream.withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col, F.session_window(ts_col, gap).alias("w"))
-        .agg(
-            F.min(ts_col).alias("session_start"),
-            F.count("*").alias("n_events"),
-            (
-                F.unix_micros(F.max(ts_col).cast("timestamp"))
-                - F.unix_micros(F.min(ts_col).cast("timestamp"))
-            ).alias("span_micros"),
-        )
-        .select(key_col, "session_start", "n_events", "span_micros")
-    )
-
-
-def run_streaming_sessions(
-    spark: SparkSession,
-    source_dir: str,
-    query_name: str,
-    checkpoint_dir: str,
-    schema: str,
-    gap: str = "10 minutes",
-    watermark_delay: str = "5 minutes",
-    max_files_per_trigger: int = 1,
-    available_now: bool = True,
-):
-    """Session stream into an in-memory sink, append mode (one
-    emission per closed session). ``maxFilesPerTrigger=1`` advances
-    the watermark file-by-file so session closing is deterministic in
-    tests."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
-    sessions = streaming_sessions(
-        stream, gap=gap, watermark_delay=watermark_delay
-    )
-    writer = (
-        sessions.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-# ---------------------------------------------------------------------------
 # stateful sketch operator: cross-batch distinct estimate in bounded state
 
 
@@ -599,101 +526,6 @@ def run_stateful_distinct(
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-# ---------------------------------------------------------------------------
-# watermarked stream-stream interval join (view→click attribution)
-
-
-def attributed_clicks(
-    views: DataFrame,
-    clicks: DataFrame,
-    horizon: str = "10 minutes",
-    watermark_delay: str = "30 minutes",
-) -> DataFrame:
-    """Stream-stream INTERVAL join — the last core Structured Streaming
-    operator family: each view event matches click events of the same
-    user arriving within *horizon* after it. Both sides carry
-    watermarks and the join condition bounds event time on BOTH ends,
-    which is what lets Spark expire buffered rows: a view older than
-    (watermark − horizon) can never match again and its state is
-    dropped — bounded state on an unbounded feed.
-
-    Works unchanged on BATCH frames (watermarks become no-ops and the
-    condition is a plain interval join) — the `stream_join_twin`
-    registry query oracle-checks exactly that twin, and the streaming
-    test drives micro-batches through this same function.
-
-    Output: one row per (view, click) attribution with the gap in
-    seconds — ids and ints only, never raw timestamps, per the
-    cross-engine parity rules."""
-    from pyspark.sql import functions as F
-
-    v = views.withWatermark("ts", watermark_delay).select(
-        F.col("user_id"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    c = clicks.withWatermark("ts", watermark_delay).select(
-        F.col("user_id").alias("c_user_id"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    joined = v.join(
-        c,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("view_ts"))
-        & (
-            F.col("click_ts")
-            <= F.col("view_ts") + F.expr(f"INTERVAL {horizon}")
-        ),
-        "inner",
-    )
-    return joined.select(
-        "user_id",
-        "view_id",
-        "click_id",
-        (
-            F.unix_timestamp("click_ts") - F.unix_timestamp("view_ts")
-        ).cast("bigint").alias("gap_s"),
-    )
-
-
-def run_attributed_clicks(
-    spark: SparkSession,
-    views_dir: str,
-    clicks_dir: str,
-    query_name: str,
-    checkpoint_dir: str,
-    schema: str,
-    horizon: str = "10 minutes",
-    watermark_delay: str = "30 minutes",
-    available_now: bool = True,
-):
-    """Drive the interval join as two file streams into a memory sink.
-    Inner stream-stream joins emit in APPEND mode as soon as both sides
-    of a match have arrived; state for the un-matched tail expires once
-    the watermark passes view_ts + horizon."""
-    vs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(views_dir)
-    )
-    cs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(clicks_dir)
-    )
-    out = attributed_clicks(vs, cs, horizon, watermark_delay)
-    writer = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

@@ -284,36 +284,6 @@ def test_dsir_select_broadcasts_weight_table(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_asof_join_single_shuffle_no_theta_join(spark):
-    """The as-of join must stay union-merge: one hash exchange on the
-    keys feeding a window sort — never the per-left-row range join
-    (BroadcastNestedLoop / cartesian) the naive formulation plans."""
-    plan = _plan(spark, "asof_join")
-    assert "Window" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_range_join_is_equi_hash_join(spark):
-    """Bucketized interval join must plan a hash equi-join on
-    (keys, bucket) with the interval predicate as a residual."""
-    plan = _plan(spark, "range_join")
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert ("BroadcastHashJoin" in plan) or ("SortMergeJoin" in plan)
-
-
-def test_rollup_hypertable_single_expand_shuffle(spark):
-    """GROUPING SETS = one Expand feeding one hash aggregation — not a
-    union of per-granularity scans (which would double the exchanges)."""
-    plan = _plan(spark, "rollup_hypertable")
-    assert "Expand" in plan
-    assert plan.count("Exchange") <= 2  # agg shuffle (+AQE read)
-    # exactly one scan (formatted output names each scan twice:
-    # once in the tree, once in the detail section)
-    assert plan.count("ReadSchema") == 1
-
-
 def test_bigram_surprisal_broadcasts_count_tables(spark):
     """The (bg → surprisal) vocab table must broadcast back onto the
     bigram stream; the corpus side must never sort-merge."""
@@ -402,13 +372,6 @@ def test_bloom_prefilter_filter_is_inlined(spark):
     # membership test compiled into the plan (shift arithmetic), not a join
     assert "shiftright" in plan
     assert "Cartesian" not in plan and "NestedLoop" not in plan
-
-
-def test_stream_join_twin_is_equi_join(spark):
-    plan = _plan(spark, "stream_join_twin")
-    # user_id equi-key carries the time residual — never a cross product
-    assert "Cartesian" not in plan and "NestedLoop" not in plan
-    assert "Join" in plan
 
 
 def test_zorder_layout_is_map_only(spark):

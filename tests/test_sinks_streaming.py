@@ -24,19 +24,40 @@ def webdocs(spark):
 
 
 def test_hierarchical_json_shape(spark, webdocs):
+    # checkpointed so the sink and the Python twin read the same spans
     spans = spans_view(
         parse_webdocs(
             webdocs.where(F.col("doc_id") % 2 == 0).limit(20), emit_spans=True
         )
-    )
+    ).localCheckpoint()
     h = hierarchical_json(spans)
     rows = h.collect()
     assert len(rows) == spans.select("text").distinct().count()
     idxs = sorted(r["global_index"] for r in rows)
     assert idxs == list(range(len(rows)))
+    detail_cols = ("url", "page_no", "seq", "x", "y", "font", "size")
     r0 = next(r for r in rows if len(r["details"]) >= 1)
     d = r0["details"][0]
-    assert set(d.asDict()) == {"url", "page_no", "seq", "x", "y", "font", "size"}
+    assert set(d.asDict()) == set(detail_cols)
+
+    # pure-Python twin: group the collected spans by text
+    groups = {}
+    for s in spans.collect():
+        groups.setdefault(s["text"], []).append(tuple(s[c] for c in detail_cols))
+
+    # sort_array orders struct fields ascending, nulls first
+    def null_first(t):
+        return tuple((v is not None, v) for v in t)
+
+    assert len(groups) > 1
+    assert {r["text"] for r in rows} == set(groups)
+    for r in rows:
+        got = [tuple(x) for x in r["details"]]
+        assert got == sorted(groups[r["text"]], key=null_first), r["text"]
+    # global_index follows first appearance by (url, page_no, seq)
+    first = {t: min(v[:3] for v in g) for t, g in groups.items()}
+    by_index = sorted(rows, key=lambda r: r["global_index"])
+    assert [first[r["text"]] for r in by_index] == sorted(first.values())
 
 
 def test_write_hierarchical_json(spark, webdocs, tmp_path):
@@ -317,71 +338,6 @@ def test_stateful_totals_dormant_eviction(spark, tmp_path):
     assert {r["total_bytes"] for r in ha} == {5, 6}
 
 
-def test_streaming_sessions_emit_on_watermark_close(spark, tmp_path):
-    """Session windows MERGE across micro-batches and emit exactly
-    once, when the watermark passes last-event+gap; the still-open
-    final session never emits; the emitted rows agree with the batch
-    twin of the same aggregation."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from pdf_parser_spark.streaming.ingest import (
-        run_streaming_sessions,
-        streaming_sessions,
-    )
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "user_id BIGINT, ts TIMESTAMP"
-
-    def _batch(rows):
-        return spark.createDataFrame(
-            [(u, t) for u, t in rows], "user_id BIGINT, ts STRING"
-        ).select("user_id", F.to_timestamp("ts").alias("ts"))
-
-    # session A: 12:00+12:05 (one session — 5min gap < 10min);
-    # 12:40 starts session B and advances the watermark to 12:35 > A's
-    # end (12:15)
-    b1 = _batch([(1, "2024-01-01 12:00:00"),
-                 (1, "2024-01-01 12:05:00"),
-                 (1, "2024-01-01 12:40:00")])
-    b1.coalesce(1).write.mode("overwrite").parquet(src)
-    _time.sleep(1.1)
-    # processed with watermark 12:35 → A emits; watermark → 13:25 > B end
-    b2 = _batch([(1, "2024-01-01 13:30:00")])
-    b2.coalesce(1).write.mode("append").parquet(src)
-    _time.sleep(1.1)
-    # processed with watermark 13:25 → B emits; session C stays open
-    b3 = _batch([(1, "2024-01-01 14:30:00")])
-    b3.coalesce(1).write.mode("append").parquet(src)
-
-    q = run_streaming_sessions(spark, src, "sess_t", ckpt, schema)
-    q.awaitTermination(120)
-    emitted = {
-        (str(r["session_start"]), r["n_events"], r["span_micros"])
-        for r in spark.sql("SELECT * FROM sess_t").collect()
-    }
-    # availableNow runs a final flush trigger after the last file, so
-    # the watermark from b3 (14:25) also closes session C (end 13:40);
-    # only the genuinely-open last session (14:30, end 14:40) stays in
-    # state and never emits
-    assert emitted == {
-        ("2024-01-01 12:00:00", 2, 300_000_000),  # A: two events, 5 min
-        ("2024-01-01 12:40:00", 1, 0),            # B: singleton
-        ("2024-01-01 13:30:00", 1, 0),            # C: closed by the flush
-    }
-    # batch twin on the full input contains every session incl. open ones
-    full = _batch([(1, "2024-01-01 12:00:00"), (1, "2024-01-01 12:05:00"),
-                   (1, "2024-01-01 12:40:00"), (1, "2024-01-01 13:30:00"),
-                   (1, "2024-01-01 14:30:00")])
-    batch = {
-        (str(r["session_start"]), r["n_events"], r["span_micros"])
-        for r in streaming_sessions(full, gap="10 minutes").collect()
-    }
-    assert emitted < batch and len(batch) == 4
-
-
 def test_stateful_host_distinct_hll_state(spark, tmp_path):
     """HLL registers as streaming state: the running estimate after the
     last micro-batch equals the batch sketch over the union of batches,
@@ -431,83 +387,6 @@ def test_stateful_host_distinct_hll_state(spark, tmp_path):
     )
     f_twin, e_twin = sketches.py_estimate(twin)
     assert (ha["filled_registers"], ha["est_distinct"]) == (f_twin, e_twin)
-
-
-def test_stream_stream_interval_join_attribution(spark, tmp_path):
-    """Watermarked stream-stream interval join: matches emit in append
-    mode once both sides arrive; a click outside the horizon never
-    matches; a view older than watermark − horizon can no longer gain
-    matches (state expiry is Spark-managed; semantics pinned here)."""
-    import time as _time
-
-    from pdf_parser_spark.streaming.ingest import run_attributed_clicks
-
-    schema = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING"
-    raw_schema = "event_id LONG, ts STRING, user_id LONG, event_type STRING"
-
-    def mk(rows):
-        return spark.createDataFrame(
-            [(i, t, u, et) for i, t, u, et in rows], raw_schema
-        ).select(
-            "event_id", F.col("ts").cast("timestamp").alias("ts"),
-            "user_id", "event_type",
-        )
-
-    vdir, cdir = str(tmp_path / "views"), str(tmp_path / "clicks")
-    ckpt = str(tmp_path / "ckpt")
-
-    # batch 1: a view for users 1 and 2
-    mk([
-        (100, "2024-01-01 12:00:00", 1, "view"),
-        (101, "2024-01-01 12:00:00", 2, "view"),
-    ]).coalesce(1).write.mode("overwrite").parquet(vdir)
-    mk([]).coalesce(1).write.mode("overwrite").parquet(cdir)
-    _time.sleep(1.1)
-    # batch 2: user 1 clicks inside the 10-min horizon; user 2 clicks
-    # way outside it (next day)
-    mk([]).coalesce(1).write.mode("append").parquet(vdir)
-    mk([
-        (200, "2024-01-01 12:04:00", 1, "click"),
-        (201, "2024-01-02 12:00:00", 2, "click"),
-    ]).coalesce(1).write.mode("append").parquet(cdir)
-
-    q = run_attributed_clicks(
-        spark, vdir, cdir, "attr_clicks_t", ckpt, schema,
-        horizon="10 minutes", watermark_delay="30 minutes",
-    )
-    q.awaitTermination(120)
-    rows = spark.sql(
-        "SELECT user_id, view_id, click_id, gap_s FROM attr_clicks_t"
-    ).collect()
-    got = {(r["user_id"], r["view_id"], r["click_id"], r["gap_s"]) for r in rows}
-    # exactly the in-horizon match; the out-of-horizon click matches nothing
-    assert got == {(1, 100, 200, 240)}
-
-
-def test_interval_join_batch_twin_equivalence(spark):
-    """The SAME attributed_clicks function on batch frames equals a
-    plain interval join — the twin relationship the oracle checks."""
-    from pdf_parser_spark.streaming.ingest import attributed_clicks
-
-    schema = "event_id LONG, ts STRING, user_id LONG, event_type STRING"
-    ev = spark.createDataFrame(
-        [
-            (1, "2024-01-01 10:00:00", 7, "view"),
-            (2, "2024-01-01 10:03:00", 7, "click"),
-            (3, "2024-01-01 10:20:00", 7, "click"),  # outside 10 min
-            (4, "2024-01-01 10:01:00", 8, "click"),  # other user
-        ],
-        schema,
-    ).select("event_id", F.col("ts").cast("timestamp").alias("ts"),
-             "user_id", "event_type")
-    out = attributed_clicks(
-        ev.where(F.col("event_type") == "view"),
-        ev.where(F.col("event_type") == "click"),
-        horizon="10 minutes",
-    ).collect()
-    assert [(r["view_id"], r["click_id"], r["gap_s"]) for r in out] == [
-        (1, 2, 180)
-    ]
 
 
 _KILL_WORKER = r"""

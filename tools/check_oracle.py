@@ -19,7 +19,7 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-TABLES = ["events", "documents", "embeddings"]
+TABLES = ["documents", "embeddings"]
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:

@@ -2,14 +2,13 @@
 
 The driver ships sf0.001/0.01/0.1 only; the r3 verdict asked for a
 full-gate parity sweep at sf1.0 to catch cardinality-dependent drift
-(VERDICT.md item 10). This tool replicates sf0.1's three big tables
-(documents, embeddings, events) K times (default 10 → "sf1") with
-keys remapped by a fixed stride so every id stays unique, and copies
-the TPC-H side tables unchanged. No randomness: run twice, get
-byte-identical parquet. Spark and the DuckDB oracle then read the
-SAME files, so parity holds regardless of how clone-heavy the
-replicated corpus is (10x exact clones is itself a useful dedup
-stress shape).
+(VERDICT.md item 10). This tool replicates the two tables the query
+registry reads (documents, embeddings) K times (default 10 → "sf1")
+with keys remapped by a fixed stride so every id stays unique. No
+randomness: run twice, get byte-identical parquet. Spark and the
+DuckDB oracle then read the SAME files, so parity holds regardless of
+how clone-heavy the replicated corpus is (10x exact clones is itself
+a useful dedup stress shape).
 
 Usage:
     python tools/make_bigsf.py [out_dir] [K] [src_dir]
@@ -19,15 +18,12 @@ defaults: /tmp/sfbig/sf1  10  /root/testdata/sf0.1
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 
 import duckdb
 
-SMALL = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem"]
-
 # key stride per table: > max key in sf0.1, round for readability
-STRIDES = {"documents": 10_000, "embeddings": 10_000, "events": 1_000_000}
+STRIDES = {"documents": 10_000, "embeddings": 10_000}
 
 REPLICATE_SQL = {
     "documents": (
@@ -37,24 +33,12 @@ REPLICATE_SQL = {
     "embeddings": (
         "SELECT vec_id + {off} AS vec_id, embedding, label FROM src"
     ),
-    # user_id keeps its range so per-user behavior (sessionization,
-    # running totals) scales in events-per-user, matching how a longer
-    # crawl of the same host population looks
-    "events": (
-        "SELECT event_id + {off} AS event_id, ts, user_id, event_type, "
-        "value, props FROM src"
-    ),
 }
 
 
 def build(out_dir: str, k: int, src_dir: str) -> None:
     os.makedirs(out_dir, exist_ok=True)
     con = duckdb.connect()
-    for t in SMALL:
-        shutil.copyfile(
-            os.path.join(src_dir, f"{t}.parquet"),
-            os.path.join(out_dir, f"{t}.parquet"),
-        )
     for t, tmpl in REPLICATE_SQL.items():
         src = os.path.join(src_dir, f"{t}.parquet")
         con.execute(f"CREATE OR REPLACE VIEW src AS SELECT * FROM '{src}'")
