@@ -2,10 +2,10 @@
 
 Pipeline (SURVEY.md §3.1 engine lifecycle):
 
-    webdocs scan → url-hash repartition (+ host salting) →
-    mapInArrow(extract_batch_arrow) → parsed (text + metrics, spans /
-    items arrays on request) → extracted / spans / audit views →
-    parquet sinks (snapshot-resumable)
+    webdocs (file scan: its own splits; generated input: url-hash
+    repartition + host salting) → mapInArrow(extract_batch_arrow) →
+    parsed (text + metrics, spans / items arrays on request) →
+    extracted / spans / audit views → parquet sinks (snapshot-resumable)
 """
 
 from .session import build_session  # noqa: F401

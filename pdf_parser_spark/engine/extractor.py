@@ -248,6 +248,20 @@ def extract_batch_arrow(
         )
 
 
+def _is_file_scan(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan is only Project/Filter nodes
+    over a file-backed relation, i.e. its partitions are the scan's own
+    byte-range splits. ``inputFiles()`` cannot tell: a ``mapInArrow``
+    over a parquet read reports the same files."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.getClass().getSimpleName() in ("Project", "Filter"):
+        node = node.child()
+    return (
+        node.getClass().getSimpleName() == "LogicalRelation"
+        and node.relation().getClass().getSimpleName() == "HadoopFsRelation"
+    )
+
+
 def parse_webdocs(
     webdocs: DataFrame,
     num_partitions: int | None = None,
@@ -259,15 +273,31 @@ def parse_webdocs(
 ) -> DataFrame:
     """webdocs → parsed DataFrame (the single materialization point).
 
-    Column-prunes to (url, host, html) before the shuffle so only the
-    payload bytes move; salting spreads hot hosts (north rule).
+    Partitioning follows the input plan, because the parse is stateless
+    and needs no co-location. With ``num_partitions=None`` (the default):
+
+    - when the optimized plan of the slim ``(url, html[, host])``
+      projection is only ``Project``/``Filter`` nodes over a file-backed
+      relation, the kernel maps over the scan's own splits — no shuffle
+      (byte-range splits already balance payload bytes, and at 10^12
+      docs a shuffle would re-write the whole corpus once);
+    - every other input (``mapInPandas``/``mapInArrow``-generated,
+      cached, local, joined) gets an explicit repartition: salted
+      (host, salt) when it has a ``host`` column, url-hash otherwise.
+      A generated upstream can arrive as one giant partition, and AQE
+      cannot split a skewed partition feeding a Python UDF.
+
+    ``num_partitions=0`` always keeps the input's partitioning; a
+    positive count always repartitions as in the second case. A
+    downstream stage that groups by host shuffles on its own and does
+    not need the parse to pre-partition for it.
 
     The salt-map pre-pass is a groupBy(host).count() — cheap (pruned
-    column scan) when webdocs is a real table, but it re-executes the
-    whole upstream plan when webdocs is itself UDF-generated (column
-    pruning cannot reach through a Python UDF). In that case pass
-    ``salt_map`` computed from a cheap side-channel (e.g. the source
-    table's host column) to keep the pipeline single-pass.
+    column scan) on a real table, but it re-executes the whole upstream
+    plan when webdocs is itself UDF-generated (column pruning cannot
+    reach through a Python UDF). In that case pass ``salt_map``
+    computed from a cheap side-channel (e.g. the source table's host
+    column) to keep the pipeline single-pass.
 
     ``emit_items=True`` fills the ``items`` column with the decoded
     text items of each PDF (font, encoded hex, instance index per text
@@ -289,35 +319,24 @@ def parse_webdocs(
     audit sink, instead of risking one mislabeled multi-GB crawl row
     failing a whole stage.
 
-    ``num_partitions=0`` preserves the input partitioning — no
-    repartition, no salt, the kernel maps directly over the source's
-    own splits. For file-backed corpora this is the plan to ship at
-    10^12-doc scale: a stateless parse needs no shuffle at all (the
-    scan's byte-range splits already balance payload bytes), and
-    re-shuffling 100 TB of payloads costs a full extra write+read of
-    the corpus. Pair it with ``spark.sql.files.maxPartitionBytes``
-    sized so one split is a few MB of payloads (fine tasks absorb
-    stragglers). The salted shuffle remains the default because it is
-    required when the upstream is UDF-generated (one giant synthesis
-    partition) or when a downstream stage groups by host (skew).
-
-    The partitioning rule, in full: ``num_partitions=0`` keeps the scan
-    splits; otherwise an input with a ``host`` column gets the salted
-    (host, salt) repartition and one without gets a url-hash
-    repartition.
+    For a scan-split parse, size ``spark.sql.files.maxPartitionBytes``
+    so one split is a few MB of payloads (fine tasks absorb stragglers).
     """
     spark = webdocs.sparkSession
-    if num_partitions is None:
-        # ~8 task waves per core slot, NOT one-task-per-slot: documents
-        # are grouped by (host, salt) buckets whose byte sizes vary
-        # widely, so coarse tasks leave slots idle behind stragglers
-        # (measured 1.66x wall at local[8] on 500k docs going from 2
-        # waves to 8). Fine granularity is also what a 1000-executor
-        # cluster wants — task count should track total cores, not the
-        # shuffle-partition config, which sizes aggregation state.
-        num_partitions = spark.sparkContext.defaultParallelism * 8
     cols = ["url", "html"] + (["host"] if "host" in webdocs.columns else [])
     slim = webdocs.select(*cols)
+    if num_partitions is None:
+        # A shuffle gets ~8 task waves per core slot, NOT one task per
+        # slot: documents are grouped by (host, salt) buckets whose byte
+        # sizes vary widely, so coarse tasks leave slots idle behind
+        # stragglers (measured 1.66x wall at local[8] on 500k docs going
+        # from 2 waves to 8). Fine granularity is also what a
+        # 1000-executor cluster wants — task count should track total
+        # cores, not the shuffle-partition config, which sizes
+        # aggregation state.
+        num_partitions = (
+            0 if _is_file_scan(slim) else spark.sparkContext.defaultParallelism * 8
+        )
     if num_partitions == 0:
         pass  # scan-parallel: keep the source's own splits
     elif "host" in slim.columns:

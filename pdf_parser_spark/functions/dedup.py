@@ -48,13 +48,13 @@ def exploded_shingles(
 
     The relational shingle producer: tokenize each document exactly
     once, explode to (id, pos, token), and assemble k-grams with lead
-    windows partitioned by id. The pure-expression form
-    (textstats.shingles) re-evaluates the tokenizer per element_at once
-    Catalyst collapses projections — quadratic per document — so every
-    bulk consumer (MinHash, fingerprints, Jaccard, decontamination)
-    goes through this instead. Scale shape: one narrow explode, one
-    hash-partitioned sort by (id, pos), then pure map-side work.
-    id_col may be a tuple of columns (compound document key).
+    windows partitioned by id. For consumers that need one row per
+    shingle to aggregate or join across documents (MinHash, fingerprints,
+    Jaccard, decontamination). A per-document count needs no rows — the
+    array form (textstats.shingles, see with_repetition_counts) stays a
+    projection. Scale shape: one narrow explode, one hash-partitioned
+    sort by (id, pos), then pure map-side work. id_col may be a tuple of
+    columns (compound document key).
     """
     ids = [id_col] if isinstance(id_col, str) else list(id_col)
     tok = df.select(
@@ -617,6 +617,24 @@ def embedding_neardup_bucketed(
     )
 
 
+def with_repetition_counts(
+    df: DataFrame, text_col: str = "text", k: int = 3
+) -> DataFrame:
+    """``df`` plus ``n_shingles`` (k-gram word shingles) and
+    ``n_distinct`` (distinct ones) per row, both int. A signal within
+    one document needs no co-location, so this is a per-row projection
+    — no explode, no shuffle, no join back. Rows with fewer than k
+    tokens (including null and blank text) get (0, 0). The shingle
+    array is projected once and read twice (Catalyst does not inline a
+    non-cheap expression into two consumers)."""
+    return (
+        df.withColumn("_sh", shingles(tokens(text_col), k))
+        .withColumn("n_shingles", F.size("_sh").cast("int"))
+        .withColumn("n_distinct", F.size(F.array_distinct("_sh")).cast("int"))
+        .drop("_sh")
+    )
+
+
 def repetition_stats(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
 ) -> DataFrame:
@@ -624,24 +642,14 @@ def repetition_stats(
     shingles per document — the boilerplate/spam signal used by
     crawl-quality filters (high ratio ⇒ repeated template text).
 
-    Relational shape: one exploded-shingle pass (the same producer the
-    MinHash/fingerprint family uses), then a per-doc count /
-    count-distinct aggregation — map-side partial aggs, shuffle keyed
-    on id. Documents with fewer than k tokens have no shingles and get
-    ratio 0.0 via the left join back to the input."""
-    sh = exploded_shingles(df, text_col=text_col, id_col=id_col, k=k)
-    counts = sh.groupBy(id_col).agg(
-        F.count("*").cast("int").alias("n_shingles"),
-        F.countDistinct("shingle").cast("int").alias("n_distinct"),
-    )
-    joined = df.select(id_col).join(counts, id_col, "left")
-    return joined.select(
+    Map-only (see :func:`with_repetition_counts`): one output row per
+    input row, ratio 0.0 when a document has no shingles."""
+    counts = with_repetition_counts(df.select(id_col, text_col), text_col, k)
+    return counts.select(
         id_col,
-        F.coalesce("n_shingles", F.lit(0)).alias("n_shingles"),
-        F.coalesce("n_distinct", F.lit(0)).alias("n_distinct"),
-        F.when(
-            F.col("n_shingles").isNull() | (F.col("n_shingles") == 0), F.lit(0.0)
-        )
+        "n_shingles",
+        "n_distinct",
+        F.when(F.col("n_shingles") == 0, F.lit(0.0))
         .otherwise(
             F.round(
                 (F.col("n_shingles") - F.col("n_distinct"))
@@ -674,8 +682,12 @@ def connected_components(
     tiny diameters, so this beats the O(log n)-round star algorithms
     (Kiveris et al., "Connected Components in MapReduce", SOCC'14)
     in practice — swap one in if components with large diameters
-    appear. The per-round driver work is a single scalar count
-    (convergence check); shuffles carry only (id, comp) longs.
+    appear. Each round is one job: the round's groupBy carries every
+    node's old label next to the new one, so each checkpointed row holds
+    its own ``changed`` flag and the convergence test only reads those
+    rows. Shuffles carry only (id, comp) longs. Raises ``RuntimeError``
+    when ``max_iter`` rounds end without a round that changed nothing —
+    unconverged labels are wrong, not approximate.
     """
     e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     edges = (
@@ -691,26 +703,25 @@ def connected_components(
         .withColumn("comp", F.col("id"))
         .localCheckpoint(eager=True)
     )
+    no_old = F.lit(None).cast(labels.schema["comp"].dataType).alias("old")
     for _ in range(max_iter):
         msgs = edges.join(
             labels.withColumnRenamed("id", "src"), "src"
-        ).select(F.col("dst").alias("id"), "comp")
-        new_labels = (
-            labels.unionAll(msgs)
+        ).select(F.col("dst").alias("id"), "comp", no_old)
+        rnd = (
+            labels.select("id", "comp", F.col("comp").alias("old"))
+            .unionAll(msgs)
             .groupBy("id")
-            .agg(F.min("comp").alias("comp"))
+            .agg(F.min("comp").alias("comp"), F.max("old").alias("old"))
+            .select("id", "comp", (F.col("comp") != F.col("old")).alias("changed"))
             .localCheckpoint(eager=True)
         )
-        changed = (
-            labels.withColumnRenamed("comp", "old")
-            .join(new_labels, "id")
-            .where(F.col("old") != F.col("comp"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+        labels = rnd.select("id", "comp")
+        if rnd.where("changed").isEmpty():
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in max_iter={max_iter} rounds"
+    )
 
 
 def incremental_dedup(

@@ -2,9 +2,11 @@
 frequency caps and a composite quality gate (C4/Gopher-style rule
 chain with a per-document drop reason).
 
-Everything here is built-in-expression Spark (windows, joins, string
-expressions) — no Python UDFs — so the plans stay inside whole-stage
-codegen and shuffle only slim (id, key) projections.
+Everything here is built-in-expression Spark (windows, string and
+array expressions) — no Python UDFs — so the plans stay inside
+whole-stage codegen. Only ``host_cap`` shuffles, on slim (host, id)
+projections; the quality gate and Gopher rules are per-row projections
+with no Exchange.
 """
 
 from __future__ import annotations
@@ -88,17 +90,15 @@ def quality_gate(
                           declared ``lang_col`` (skipped if None)
     5. ``kept``
 
-    One exploded-shingle aggregation (the repetition signal) plus one
-    slim equi-join back to the per-row expression signals; everything
-    else is codegen'd string math. Output: (id, reason, keep).
+    Map-only: every signal, the repetition counts included
+    (:func:`dedup.with_repetition_counts`), is an expression over the
+    document's own text — no shuffle, no join. Output: (id, reason,
+    keep).
     """
     signals = textstats.with_lang_id(
         textstats.with_quality(df, text_col=text_col), text_col=text_col
     )
-    rep = dedup.repetition_stats(
-        df, text_col=text_col, id_col=id_col, k=3
-    ).select(id_col, "n_shingles", "n_distinct")
-    j = signals.join(rep, id_col)
+    j = dedup.with_repetition_counts(signals, text_col=text_col, k=3)
     repetitive = (
         (F.col("n_shingles") - F.col("n_distinct")) * rep_den
         > F.col("n_shingles") * rep_num

@@ -1503,8 +1503,8 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-document repetition (duplicate 3-gram fraction) — the
     boilerplate/template-spam quality signal (cf. the Gopher repetition
-    filters): one exploded-shingle pass + per-doc count/count-distinct
-    aggregation."""
+    filters): a per-row size / size-of-distinct over each document's
+    shingle array, no shuffle."""
     docs = _read(spark, sf_dir, "documents")
     return dedup.repetition_stats(docs, k=3)
 
@@ -1674,8 +1674,8 @@ def corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite C4/Gopher-style quality gate: first-failing-rule
     reason per document (too_short → repetitive → low_quality →
     lang_mismatch → kept) plus a keep flag — the decision table a
-    training-data mix is built from. One shingle aggregation + one
-    slim equi-join; every other signal is codegen'd string math."""
+    training-data mix is built from. Map-only: every signal, the
+    repetition counts included, is a per-row expression."""
     docs = _read(spark, sf_dir, "documents")
     return filtering.quality_gate(docs)
 

@@ -288,21 +288,29 @@ def test_batched_resume_after_midrun_crash(spark, tmp_path):
 
 
 def test_scan_partitioned_matches_salted(spark, tmp_path, webdocs, parsed):
-    """num_partitions=0 (no shuffle, scan-parallel) extracts the exact
-    same (url, text) set as the salted default, and its physical plan
-    contains no Exchange — the property that makes it the shippable
-    plan for a stateless parse at 10^12-doc scale. The default parse of
-    the same host-bearing input plans the salted (host, salt) shuffle."""
+    """Both branches of the default partitioning rule. A parquet read,
+    alone or under a Filter/Project, parses on the scan's own splits (no
+    Exchange — the shippable plan for a stateless parse at 10^12 docs).
+    A generated input keeps the salted (host, salt) shuffle: the
+    mapInPandas synthesis fixture, and a mapInArrow over the very same
+    parquet, which reports the same input files as the scan. Every plan
+    extracts the same (url, text) set."""
     corpus_path = str(tmp_path / "corpus")
     webdocs.write.parquet(corpus_path)
-    scan = parse_webdocs(
-        spark.read.parquet(corpus_path), num_partitions=0
-    )
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    salted = parse_webdocs(spark.read.parquet(corpus_path))
-    salted_plan = salted._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(host" in salted_plan
-    got = {(r.url, r.text) for r in scan.select("url", "text").collect()}
+    read = spark.read.parquet(corpus_path)
+    scans = [
+        read,
+        read.where(F.length("url") > 0),
+        read.withColumn("url", F.trim("url")),
+    ]
+    generated = [webdocs, read.mapInArrow(lambda it: it, read.schema)]
     want = {(r.url, r.text) for r in parsed.select("url", "text").collect()}
-    assert got == want
+    for i, src in enumerate(scans + generated):
+        out = parse_webdocs(src)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        if i < len(scans):
+            assert "Exchange" not in plan, i
+        else:
+            assert "hashpartitioning(host" in plan, i
+        got = {(r.url, r.text) for r in out.select("url", "text").collect()}
+        assert got == want, i

@@ -697,22 +697,37 @@ def test_embedding_neardup_multiprobe_recall(spark, emb):
 
 def test_repetition_stats(spark):
     """Known repetition ratios: a 3× repeated trigram text, a unique
-    text, and a too-short text (no shingles → ratio 0)."""
+    text, and a too-short text (no shingles → ratio 0). Edge rows:
+    null, empty and whitespace-only text have no shingles; exactly k
+    tokens is one shingle, k-1 tokens none. One output row per input
+    row."""
     df = spark.createDataFrame(
         [
             (1, "a b c a b c a b c"),   # 7 shingles, 3 distinct
             (2, "one two three four"),  # 2 shingles, both distinct
             (3, "hi there"),            # < 3 tokens
+            (4, None),
+            (5, ""),
+            (6, " \t \n "),
+            (7, "x y z"),               # exactly 3 tokens
+            (8, "x  y"),                # 2 tokens
         ],
         "doc_id INT, text STRING",
     )
-    got = {r["doc_id"]: r for r in dedup.repetition_stats(df, k=3).collect()}
+    rows = dedup.repetition_stats(df, k=3).collect()
+    assert len(rows) == 8
+    got = {r["doc_id"]: r for r in rows}
     assert (got[1]["n_shingles"], got[1]["n_distinct"]) == (7, 3)
     assert got[1]["rep_ratio"] == round((7 - 3) / 7, 4)
     assert (got[2]["n_shingles"], got[2]["n_distinct"]) == (2, 2)
     assert got[2]["rep_ratio"] == 0.0
     assert (got[3]["n_shingles"], got[3]["n_distinct"]) == (0, 0)
     assert got[3]["rep_ratio"] == 0.0
+    stats = {i: (r["n_shingles"], r["n_distinct"], r["rep_ratio"])
+             for i, r in got.items()}
+    for i in (4, 5, 6, 8):
+        assert stats[i] == (0, 0, 0.0), i
+    assert stats[7] == (1, 1, 0.0)
 
 
 def test_connected_components_multihop(spark):
@@ -741,6 +756,21 @@ def test_connected_components_converges_early(spark):
     comp = {r["id"]: r["comp"]
             for r in dedup.connected_components(pairs, max_iter=50).collect()}
     assert comp == {1: 1, 2: 1, 3: 3, 4: 3}
+
+
+def test_connected_components_raises_when_unconverged(spark):
+    """A 5-node path needs 4 label rounds plus one that changes nothing.
+    Running out of rounds first must raise, not return labels that
+    still split the path into several 'components'."""
+    pairs = spark.createDataFrame(
+        [(11, 10), (11, 12), (13, 12), (13, 14)], "a_id BIGINT, b_id BIGINT"
+    )
+    for max_iter in (1, 4):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup.connected_components(pairs, max_iter=max_iter)
+    comp = {r["id"]: r["comp"]
+            for r in dedup.connected_components(pairs, max_iter=5).collect()}
+    assert comp == {n: 10 for n in (10, 11, 12, 13, 14)}
 
 
 def test_deterministic_sampling(spark):
@@ -837,16 +867,21 @@ def test_quality_gate_reasons(spark):
              "en"),                                      # low_quality (no stopwords)
             (4, good, "de"),                             # lang_mismatch
             (5, good, "en"),                             # kept
+            (6, None, "en"),                             # low_quality
         ],
         "doc_id INT, text STRING, lang STRING",
     )
-    got = {r["doc_id"]: (r["reason"], r["keep"])
-           for r in filtering.quality_gate(docs).collect()}
+    rows = filtering.quality_gate(docs).collect()
+    assert len(rows) == 6
+    got = {r["doc_id"]: (r["reason"], r["keep"]) for r in rows}
     assert got[1] == ("too_short", 0)
     assert got[2] == ("repetitive", 0)
     assert got[3] == ("low_quality", 0)
     assert got[4] == ("lang_mismatch", 0)
     assert got[5] == ("kept", 1)
+    # null text has a null token count, so too_short does not fire; it
+    # has no shingles (not repetitive) and falls to the quality bucket
+    assert got[6] == ("low_quality", 0)
 
 
 def test_top_terms_by_lang_ranking(spark):
