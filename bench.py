@@ -77,7 +77,6 @@ HEADLINE = [
     "countmin_freq",
     "hll_merge",
     "bpe_pair_counts",
-    "audio_features",
     "sample_split",
     "length_percentiles",
     "snapshot_diff",
@@ -91,9 +90,6 @@ HEADLINE = [
     "rank_join",
     "training_order",
     "upsample_repeat",
-    "mp3_metadata",
-    "ogg_metadata",
-    "webm_metadata",
     "robots_gate",
     "crawl_schedule",
     "sitemap_discovery",

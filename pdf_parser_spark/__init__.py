@@ -14,9 +14,10 @@ pipeline over Common-Crawl-style document tables:
 - ``engine``    the Spark layer: Arrow-batched ``mapInArrow`` extractor,
                 url-hash partitioning with host salting, audit/lineage
                 table, snapshot resume.
-- ``operators`` large-scale training-data operators: dedup (exact /
+- ``functions`` large-scale training-data operators: dedup (exact /
                 MinHash-LSH / SimHash / n-gram Jaccard / embedding-cosine),
-                ANN similarity search, text analysis, multimodal plumbing.
+                ANN similarity search, text analysis, cleaning, filtering,
+                packing.
 """
 
 __version__ = "0.1.0"

@@ -44,9 +44,19 @@ PARSED_SCHEMA = (
 
 
 def _sniff(payload: bytes) -> str:
-    head = payload[:1024]
-    if head.lstrip()[:5] == b"%PDF-" or b"%PDF-" in head:
-        return "pdf"
+    """``pdf`` when a ``%PDF-`` header starts a line within the first
+    1024 bytes, else ``html``. §7.5.2 makes the header a line, so a BOM,
+    leading whitespace or a junk banner line may precede it; a mid-line
+    mention (an HTML page quoting the magic) is not a header."""
+    i = payload.find(b"%PDF-", 0, 1024)
+    while i >= 0:
+        if (
+            i == 0
+            or payload[i - 1] in b"\r\n"
+            or not payload[:i].removeprefix(b"\xef\xbb\xbf").strip()
+        ):
+            return "pdf"
+        i = payload.find(b"%PDF-", i + 1, 1024)
     return "html"
 
 

@@ -288,14 +288,6 @@ def _bloom_positions(spark: SparkSession, value, m: int, k: int) -> list[int]:
     return [int(row[f"p{i}"]) for i in range(k)]
 
 
-def bloom_might_contain(spark: SparkSession, bloom: dict, value) -> bool:
-    bits = bytes.fromhex(bloom["bits"])
-    return all(
-        (bits[p >> 3] >> (p & 7)) & 1
-        for p in _bloom_positions(spark, value, bloom["m"], bloom["k"])
-    )
-
-
 # ---------------------------------------------------------------------------
 # the log
 

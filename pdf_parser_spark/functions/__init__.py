@@ -1,10 +1,11 @@
-"""Training-data pipeline operators: dedup, similarity, text analysis,
-multimodal plumbing.
+"""Training-data pipeline operators: cleaning, filtering, dedup,
+similarity, text analysis and packing.
 
 These widen the engine beyond the reference's extraction surface
 (SURVEY.md §2) with the operations a 100 TB training-data pipeline
-needs. All hot paths are Spark built-ins (JVM/whole-stage-codegen);
-Python appears only in clearly-marked multimodal decode stubs.
+needs. Hot paths are Spark built-ins (JVM/whole-stage-codegen); Python
+runs only where no built-in exists: Unicode NFC in ``cleaning`` and
+the robots.txt parse in ``robots``.
 """
 
 from . import (  # noqa: F401
@@ -12,7 +13,6 @@ from . import (  # noqa: F401
     cleaning,
     dedup,
     filtering,
-    multimodal,
     packing,
     pii,
     sampling,

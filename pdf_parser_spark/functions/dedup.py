@@ -193,23 +193,6 @@ def minhash_signature(
     return F.array(*slots)
 
 
-def minhash_band_keys(sig_col: Column, bands: int, rows_per_band: int) -> Column:
-    """array<string> of band keys: band index + its signature slice."""
-    return F.array(
-        *[
-            F.concat_ws(
-                "|",
-                F.lit(f"b{b}"),
-                *[
-                    F.element_at(sig_col, b * rows_per_band + r + 1)
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def oph_signature_table(
     df: DataFrame,
     text_col: str = "text",

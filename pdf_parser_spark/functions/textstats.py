@@ -223,7 +223,6 @@ def top_terms_by_lang(
 # hashed-feature linear quality model (fastText/DCLM-style scorer)
 
 _HEX_DIGITS = "0123456789abcdef"
-MQ_BUCKETS = 65536  # 4 md5 hex digits
 MQ_MOD = 997  # weight = bucket % MQ_MOD - MQ_MOD // 2  (symmetric around 0)
 
 

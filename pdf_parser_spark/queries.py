@@ -42,7 +42,6 @@ from .functions import (
     dedup,
     filtering,
     linkgraph,
-    multimodal,
     packing,
     similarity,
     sketches,
@@ -503,19 +502,6 @@ def encrypted_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = synthesize_encrypted_variant(spark, sf_dir)
     parsed = parse_webdocs(w, salt_map=webdocs_salt_map(spark, sf_dir))
     return parsed.select("url", "text")
-
-
-@q(
-    "multimodal_meta",
-    f"SELECT {URL_SQL} AS url, CASE WHEN doc_id % 2 = 0 THEN 'application/pdf' "
-    "ELSE 'application/octet-stream' END AS content_type FROM documents",
-)
-def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Magic-byte content-type sniff over binary payloads, JVM-side."""
-    webdocs = synthesize_webdocs(spark, sf_dir)
-    return multimodal.with_media_meta(webdocs, bin_col="html").select(
-        "url", "content_type"
-    )
 
 
 @q(
@@ -2005,370 +1991,6 @@ def _host_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = linkgraph.pagerank(edges, iters=4)
     _RANKS_CACHE[key] = ranks
     return ranks
-
-
-# ---------------------------------------------------------------------------
-# multimodal audio/video queries (functions/riffcore.py)
-
-# Synthesis contract shared with the oracles below — every parameter
-# derives from doc_id, every feature is integer-exact:
-#   audio: mono 16-bit square wave, amplitude a = 500 + 37*(doc_id%13),
-#     half-period h = 2 + doc_id%7, n = 400 + doc_id%211 samples,
-#     rate = 8000 + 100*(doc_id%5). RMS of a ±a square wave is exactly
-#     a; zero crossings = (n-1) div h (sign flips at multiples of h).
-#   video: 16×16 MJPEG AVI, fps 10, nf = 3 + doc_id%4 frames, frame f
-#     solid gray v = 128 + 5*(((doc_id*7 + f) % 44) - 25) — DC-exact
-#     under the repo's own baseline-JPEG codec at quality 85 (q_dc = 5
-#     divides 8·(v−128)/8; exactness pinned in test_riffcore), so
-#     decoded mean luma equals v bit-for-bit.
-
-
-@q(
-    "audio_features",
-    "SELECT "
-    f"{URL_SQL} AS url, "
-    "(8000 + 100 * (doc_id % 5))::BIGINT AS sample_rate, "
-    "1::BIGINT AS channels, "
-    "(400 + doc_id % 211)::BIGINT AS n_samples, "
-    "((400 + doc_id % 211) * 1000 // (8000 + 100 * (doc_id % 5)))::BIGINT "
-    "AS duration_ms, "
-    "(500 + 37 * (doc_id % 13))::BIGINT AS peak, "
-    "(500 + 37 * (doc_id % 13))::BIGINT AS rms, "
-    "((400 + doc_id % 211 - 1) // (2 + doc_id % 7))::BIGINT "
-    "AS zero_crossings "
-    "FROM documents",
-)
-def audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio modality end-to-end: synthesize a real RIFF/WAVE PCM
-    payload per document (square wave parameterized by doc_id), then
-    recover every descriptor from the BYTES via the from-scratch WAV
-    decoder — rate/size from the fmt chunk, peak/RMS/zero-crossings
-    from the actual samples. The oracle recomputes all of them
-    arithmetically from doc_id, so a decoder that misreads even one
-    sample fails the hash."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-
-    def run(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
-        from pdf_parser_spark.engine.corpus import host_for
-        from pdf_parser_spark.functions.riffcore import (
-            audio_stats,
-            encode_wav,
-        )
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"].astype("int64"):
-                d = int(d)
-                a, h = 500 + 37 * (d % 13), 2 + d % 7
-                n, rate = 400 + d % 211, 8000 + 100 * (d % 5)
-                wav = encode_wav(
-                    [a if (i // h) % 2 == 0 else -a for i in range(n)], rate
-                )
-                st = audio_stats(wav)
-                st["url"] = f"https://{host_for(d)}/doc/{d}"
-                rows.append(st)
-            yield _pd.DataFrame(rows)
-
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "sample_rate BIGINT, channels BIGINT, n_samples BIGINT, "
-            "duration_ms BIGINT, peak BIGINT, rms BIGINT, "
-            "zero_crossings BIGINT, url STRING"
-        ),
-    ).select(
-        "url", "sample_rate", "channels", "n_samples", "duration_ms",
-        "peak", "rms", "zero_crossings",
-    )
-
-
-@q(
-    "mp3_metadata",
-    # synthesis contract (mirrors the query body): rate cycles the
-    # MPEG1/MPEG2 tables, base bitrate cycles values valid in BOTH
-    # tables, every 5th doc is VBR with ONE +32kbps frame, so the
-    # integer average is base + 32 // n.
-    "WITH p AS (SELECT doc_id, "
-    "(5 + doc_id % 11)::BIGINT AS n_frames, "
-    "CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 22050 ELSE 32000 END"
-    "::BIGINT AS sample_rate, "
-    "CASE doc_id % 3 WHEN 1 THEN 576 ELSE 1152 END::BIGINT AS spf, "
-    "CASE doc_id % 4 WHEN 0 THEN 48 WHEN 1 THEN 64 WHEN 2 THEN 96 "
-    "ELSE 128 END::BIGINT AS base, "
-    "(1 + doc_id % 2)::BIGINT AS channels, "
-    "(CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END)::BIGINT AS vbr "
-    "FROM documents) "
-    f"SELECT {URL_SQL} AS url, sample_rate, channels, n_frames, "
-    "(n_frames * spf * 1000 // sample_rate)::BIGINT AS duration_ms, "
-    "(CASE WHEN vbr = 1 THEN (n_frames * base + 32) // n_frames "
-    "ELSE base END)::BIGINT AS bitrate_kbps, vbr "
-    "FROM p",
-)
-def mp3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed-audio metadata end-to-end: synthesize a real Layer III
-    frame sequence per document (rate/bitrate/channels/VBR derived from
-    doc_id, ID3v2-tagged), then recover duration, average bitrate,
-    sample rate, channel count, and the VBR flag from the BYTES via the
-    from-scratch frame-header walk (functions/mp3core.py — ISO 11172-3
-    framing arithmetic, no PCM decode). The oracle recomputes every
-    value arithmetically from doc_id, so a misread bitrate table or
-    frame-length coefficient fails the hash."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-
-    def run(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
-        from pdf_parser_spark.engine.corpus import host_for
-        from pdf_parser_spark.functions.mp3core import (
-            encode_mp3_frames,
-            mp3_stats,
-        )
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"].astype("int64"):
-                d = int(d)
-                n = 5 + d % 11
-                rate = (44100, 22050, 32000)[d % 3]
-                base = (48, 64, 96, 128)[d % 4]
-                brs = [base] * n
-                if d % 5 == 0:
-                    brs[-1] = base + 32
-                data = encode_mp3_frames(
-                    brs, rate, channels=1 + d % 2, id3_payload=b"t" * (d % 17)
-                )
-                st = mp3_stats(data)
-                st["url"] = f"https://{host_for(d)}/doc/{d}"
-                rows.append(st)
-            yield _pd.DataFrame(rows)
-
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "sample_rate BIGINT, channels BIGINT, n_frames BIGINT, "
-            "duration_ms BIGINT, bitrate_kbps BIGINT, vbr BIGINT, "
-            "url STRING"
-        ),
-    ).select(
-        "url", "sample_rate", "channels", "n_frames", "duration_ms",
-        "bitrate_kbps", "vbr",
-    )
-
-
-@q(
-    "ogg_metadata",
-    # synthesis contract (mirrors the query body): n audio pages,
-    # sample rate, samples-per-page and channels all derive from
-    # doc_id; the walk adds the BOS header page, so n_pages = n + 1
-    # and the final granule is n * spp.
-    "WITH p AS (SELECT doc_id, "
-    "(3 + doc_id % 5)::BIGINT AS n, "
-    "CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 22050 ELSE 48000 END"
-    "::BIGINT AS sample_rate, "
-    "CASE doc_id % 3 WHEN 0 THEN 1024 WHEN 1 THEN 2048 ELSE 4096 END"
-    "::BIGINT AS spp, "
-    "(1 + doc_id % 2)::BIGINT AS channels "
-    "FROM documents) "
-    f"SELECT {URL_SQL} AS url, sample_rate, channels, "
-    "(n + 1)::BIGINT AS n_pages, "
-    "(n * spp * 1000 // sample_rate)::BIGINT AS duration_ms, "
-    "1::BIGINT AS eos "
-    "FROM p",
-)
-def ogg_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ogg/Vorbis metadata end-to-end: synthesize a real RFC 3533 page
-    sequence per document (valid per-page CRCs, BOS/EOS flags, a
-    spec-exact Vorbis identification header; page count / rate /
-    channels / granule schedule derived from doc_id), then recover
-    duration, sample rate, channel count, page count and the EOS flag
-    from the BYTES via the from-scratch page walk
-    (functions/oggcore.py — every page CRC-verified, packets never
-    decoded). The oracle recomputes every value arithmetically from
-    doc_id, so a wrong CRC polynomial, lacing-table read, or granule
-    interpretation fails the hash."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-
-    def run(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
-        from pdf_parser_spark.engine.corpus import host_for
-        from pdf_parser_spark.functions.oggcore import (
-            encode_ogg_vorbis,
-            ogg_stats,
-        )
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"].astype("int64"):
-                d = int(d)
-                n = 3 + d % 5
-                rate = (44100, 22050, 48000)[d % 3]
-                spp = (1024, 2048, 4096)[d % 3]
-                data = encode_ogg_vorbis(
-                    n, rate, 1 + d % 2, spp, serial=1 + d, payload_seed=d
-                )
-                st = ogg_stats(data)
-                st["url"] = f"https://{host_for(d)}/doc/{d}"
-                rows.append(st)
-            yield _pd.DataFrame(rows)
-
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "sample_rate BIGINT, channels BIGINT, n_pages BIGINT, "
-            "duration_ms BIGINT, eos BIGINT, url STRING"
-        ),
-    ).select(
-        "url", "sample_rate", "channels", "n_pages", "duration_ms", "eos",
-    )
-
-
-@q(
-    "webm_metadata",
-    # synthesis contract (mirrors the query body): every field derives
-    # from doc_id; the encoder always writes one video + one audio
-    # track, so n_tracks = 2.
-    f"SELECT {URL_SQL} AS url, "
-    "(1000 + (doc_id % 97) * 250)::BIGINT AS duration_ms, "
-    "CASE doc_id % 4 WHEN 0 THEN 640 WHEN 1 THEN 1280 "
-    "WHEN 2 THEN 1920 ELSE 3840 END::BIGINT AS width, "
-    "CASE doc_id % 4 WHEN 0 THEN 360 WHEN 1 THEN 720 "
-    "WHEN 2 THEN 1080 ELSE 2160 END::BIGINT AS height, "
-    "CASE doc_id % 2 WHEN 0 THEN 44100 ELSE 48000 END"
-    "::BIGINT AS sample_rate, "
-    "(1 + doc_id % 2)::BIGINT AS channels, "
-    "(2 + doc_id % 6)::BIGINT AS n_clusters, "
-    "2::BIGINT AS n_tracks "
-    "FROM documents",
-)
-def webm_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebM metadata end-to-end: synthesize a real EBML tree per
-    document (RFC 8794 vint framing, CRC-32-protected Info/Tracks
-    masters, one video + one audio TrackEntry, Cluster filler;
-    duration / dims / rate / channels / cluster count derived from
-    doc_id — every third document uses the live-streamed unknown-size
-    Segment form), then recover every value from the BYTES via the
-    from-scratch tree walk (functions/webmcore.py — CRC-32 elements
-    verified, frames never decoded). The oracle recomputes each value
-    arithmetically from doc_id, so a wrong vint read, element-ID
-    table, float width, or TimestampScale interpretation fails the
-    hash."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-
-    def run(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
-        from pdf_parser_spark.engine.corpus import host_for
-        from pdf_parser_spark.functions.webmcore import (
-            encode_webm,
-            webm_stats,
-        )
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"].astype("int64"):
-                d = int(d)
-                data = encode_webm(
-                    duration_ms=1000 + (d % 97) * 250,
-                    width=(640, 1280, 1920, 3840)[d % 4],
-                    height=(360, 720, 1080, 2160)[d % 4],
-                    sample_rate=(44100, 48000)[d % 2],
-                    channels=1 + d % 2,
-                    n_clusters=2 + d % 6,
-                    payload_seed=d,
-                    unknown_segment_size=(d % 3 == 0),
-                )
-                st = webm_stats(data)
-                rows.append(
-                    {
-                        "url": f"https://{host_for(d)}/doc/{d}",
-                        "duration_ms": st["duration_ms"],
-                        "width": st["width"],
-                        "height": st["height"],
-                        "sample_rate": st["sample_rate"],
-                        "channels": st["channels"],
-                        "n_clusters": st["n_clusters"],
-                        "n_tracks": st["n_video"] + st["n_audio"],
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "url STRING, duration_ms BIGINT, width BIGINT, height BIGINT, "
-            "sample_rate BIGINT, channels BIGINT, n_clusters BIGINT, "
-            "n_tracks BIGINT"
-        ),
-    )
-
-
-@q(
-    "video_frames",
-    "SELECT "
-    f"{URL_SQL} AS url, "
-    "f::BIGINT AS frame_idx, 16::BIGINT AS width, 16::BIGINT AS height, "
-    "(3 + doc_id % 4)::BIGINT AS n_frames, "
-    "(128 + 5 * (((doc_id * 7 + f) % 44) - 25))::BIGINT AS mean_luma "
-    "FROM (SELECT doc_id, unnest(range(0, 3 + doc_id % 4)) AS f "
-    "FROM documents)",
-)
-def video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video modality end-to-end: synthesize a real AVI-MJPEG container
-    per document (solid-gray baseline-JPEG frames, values chosen
-    DC-exact), then recover per-frame stats from the BYTES — container
-    walk via the from-scratch RIFF/AVI parser, pixels via the real
-    T.81 JPEG decoder, mean luma as an integer pixel fold. One output
-    row per (document, frame); the oracle recomputes the gray value
-    arithmetically."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-
-    def run(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
-        from pdf_parser_spark.engine.corpus import host_for
-        from pdf_parser_spark.functions.jpegcore import encode_jpeg
-        from pdf_parser_spark.functions.riffcore import (
-            encode_avi_mjpeg,
-            video_frame_stats,
-        )
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"].astype("int64"):
-                d = int(d)
-                frames = [
-                    encode_jpeg(
-                        bytes([128 + 5 * (((d * 7 + f) % 44) - 25)]) * 256,
-                        16, 16, 1, quality=85,
-                    )
-                    for f in range(3 + d % 4)
-                ]
-                avi = encode_avi_mjpeg(frames, 16, 16, fps=10)
-                for st in video_frame_stats(avi):
-                    st["url"] = f"https://{host_for(d)}/doc/{d}"
-                    rows.append(st)
-            yield _pd.DataFrame(rows)
-
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "frame_idx BIGINT, width BIGINT, height BIGINT, "
-            "n_frames BIGINT, mean_luma BIGINT, url STRING"
-        ),
-    ).select("url", "frame_idx", "width", "height", "n_frames", "mean_luma")
 
 
 # ---------------------------------------------------------------------------

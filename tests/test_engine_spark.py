@@ -126,6 +126,44 @@ def test_payload_cap_arrow_body():
     assert by_url["u2"]["text"] == "" and by_url["u2"]["payload_bytes"] == 9003
 
 
+def test_sniff_routes_only_a_line_start_header_to_pdf():
+    """An HTML page that quotes the %PDF- magic mid-line stays HTML and
+    keeps its text; a header at byte 0, after a UTF-8 BOM or after a
+    banner line (§7.5.2 makes the header a line) still goes to the PDF
+    kernel."""
+    import pyarrow as pa
+
+    from pdf_parser_spark.engine.extractor import extract_batch_arrow
+    from pdf_parser_spark.htmlcore.extract import extract_html
+    from pdf_parser_spark.pdfgen import text_to_pdf
+
+    mention = (
+        b"<html><body><p>Every PDF file begins with the bytes %PDF-1.7 "
+        b"followed by a binary comment.</p></body></html>"
+    )
+    pdf = text_to_pdf("sniffed header")
+    payloads = {
+        "mention": mention,
+        "pdf": pdf,
+        "bom": b"\xef\xbb\xbf" + pdf,
+        "banner": b"<!-- proxy banner -->\r\n\r\n" + pdf,
+    }
+    batch = pa.RecordBatch.from_pydict(
+        {"url": list(payloads), "html": list(payloads.values())},
+        schema=pa.schema([("url", pa.string()), ("html", pa.binary())]),
+    )
+    (out,) = extract_batch_arrow(iter([batch]))
+    rows = {r["url"]: r for r in out.to_pylist()}
+    m = rows["mention"]
+    assert (m["kind"], m["error"]) == ("html", None)
+    assert m["text"] == extract_html(mention.decode()) != ""
+    for url in ("pdf", "bom", "banner"):
+        r = rows[url]
+        assert (r["kind"], r["error"], r["text"]) == (
+            "pdf", None, "sniffed header"
+        ), url
+
+
 def _mixed_payloads() -> dict:
     """One payload per kernel shape the span switch could disturb."""
     from pdf_parser_spark.htmlcore.gen import text_to_html

@@ -1,5 +1,4 @@
-"""Training-data pipeline operators: dedup, similarity, text stats,
-multimodal plumbing."""
+"""Training-data pipeline operators: dedup, similarity, text stats."""
 
 import math
 
@@ -7,7 +6,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from pdf_parser_spark.functions import dedup, multimodal, similarity, textstats
+from pdf_parser_spark.functions import dedup, similarity, textstats
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -276,50 +275,6 @@ def test_topk_and_ivf(emb):
         assert cells[r["q_id"]] == cells[r["neighbor_id"]]
 
 
-# -------------------------------------------------------------- multimodal
-
-
-def test_media_meta_png(spark):
-    png = (b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR"
-           + (640).to_bytes(4, "big") + (480).to_bytes(4, "big") + b"\x00" * 5)
-    rows = multimodal.with_media_meta(
-        spark.createDataFrame(
-            [("u1", bytearray(png)), ("u2", bytearray(b"%PDF-1.4 x"))],
-            "url STRING, payload BINARY",
-        )
-    ).collect()
-    byurl = {r["url"]: r for r in rows}
-    assert byurl["u1"]["content_type"] == "image/png"
-    assert (byurl["u1"]["width"], byurl["u1"]["height"]) == (640, 480)
-    assert byurl["u2"]["content_type"] == "application/pdf"
-    assert byurl["u2"]["width"] is None
-
-
-def test_extract_features_plumbing(spark):
-    df = spark.createDataFrame(
-        [("u1", bytearray(b"\x89PNG\r\n\x1a\nabcdef")), ("u2", None)],
-        "url STRING, payload BINARY",
-    )
-    rows = {r["url"]: r for r in multimodal.extract_features(df).collect()}
-    assert len(rows["u1"]["feature"]) == 8
-    # truncated PNG: the real decoder rejects it, captured as a row error
-    assert rows["u1"]["decode_error"] == "ValueError: missing IHDR"
-    assert rows["u2"]["payload_bytes"] == 0
-
-
-def test_decode_malformed_raises():
-    # malformed JPEG → ValueError from the real decoder (no longer a stub)
-    with pytest.raises(ValueError):
-        multimodal.decode_image(b"\xff\xd8\xffjpeg")
-    with pytest.raises(ValueError):
-        multimodal.decode_image(b"\x89PNG\r\n\x1a\ntruncated")
-    with pytest.raises(ValueError):
-        multimodal.decode_image(b"GIF89a......")  # truncated GIF
-    # formats without a decoder still raise NotImplementedError
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"ID3\x04audio....")
-
-
 def test_kmeans_ivf_recall_vs_bruteforce(emb):
     """Real-codebook IVF (kmeans on a sample → broadcast centroids →
     argmin cell expressions): all cells populated, and single-probe
@@ -386,165 +341,6 @@ def test_centroid_cells(emb):
     ]
     assert all(len(c) == 9 and sorted(c) == list(range(9)) for c in ranked)
     assert all(c.index(5) == c.index(8) - 1 for c in ranked)
-
-
-# -------------------------------------------------------------- multimodal png
-
-
-def _encode_png(w, h, channels, pixels, filters):
-    """Minimal PNG encoder for goldens — applies the given per-row
-    filter types so every unfilter branch of decode_png is exercised."""
-    import struct
-    import zlib
-
-    ctype = {1: 0, 3: 2, 2: 4, 4: 6}[channels]
-
-    def chunk(typ, data):
-        return (
-            struct.pack(">I", len(data))
-            + typ
-            + data
-            + struct.pack(">I", zlib.crc32(typ + data))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-    stride = w * channels
-    raw = bytearray()
-    prev = bytearray(stride)
-    for row in range(h):
-        line = bytearray(pixels[row * stride : (row + 1) * stride])
-        f = filters[row % len(filters)]
-        enc = bytearray(line)
-        if f == 1:
-            for i in range(stride - 1, channels - 1, -1):
-                enc[i] = (line[i] - line[i - channels]) & 0xFF
-        elif f == 2:
-            for i in range(stride):
-                enc[i] = (line[i] - prev[i]) & 0xFF
-        elif f == 3:
-            for i in range(stride):
-                left = line[i - channels] if i >= channels else 0
-                enc[i] = (line[i] - ((left + prev[i]) >> 1)) & 0xFF
-        elif f == 4:
-            for i in range(stride):
-                a = line[i - channels] if i >= channels else 0
-                b = prev[i]
-                c = prev[i - channels] if i >= channels else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                enc[i] = (line[i] - pr) & 0xFF
-        raw.append(f)
-        raw += enc
-        prev = line
-    idat = zlib.compress(bytes(raw))
-    return (
-        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat)
-        + chunk(b"IEND", b"")
-    )
-
-
-def _gradient(w, h, channels):
-    return bytes(
-        (x * 7 + y * 13 + c * 31) % 256
-        for y in range(h)
-        for x in range(w)
-        for c in range(channels)
-    )
-
-
-def test_png_decode_all_filters_roundtrip():
-    w, h, ch = 9, 10, 3
-    px = _gradient(w, h, ch)
-    png = _encode_png(w, h, ch, px, filters=[0, 1, 2, 3, 4])
-    dw, dh, dch, dpx = multimodal.decode_png(png)
-    assert (dw, dh, dch) == (w, h, ch)
-    assert dpx == px
-
-
-def test_png_decode_gray_and_rgba():
-    for ch in (1, 4):
-        px = _gradient(5, 4, ch)
-        png = _encode_png(5, 4, ch, px, filters=[4, 3, 2, 1])
-        assert multimodal.decode_png(png)[3] == px
-
-
-def test_decode_image_png_and_jpeg_real():
-    import pytest as _pytest
-
-    png = _encode_png(4, 4, 3, _gradient(4, 4, 3), filters=[0])
-    w, h, ch, _ = multimodal.decode_image(png)
-    assert (w, h, ch) == (4, 4, 3)
-    with _pytest.raises(ValueError):
-        multimodal.decode_image(b"\xff\xd8\xff\xe0fakejpeg")
-    # real baseline JPEG decodes through jpegcore
-    from pdf_parser_spark.functions.jpegcore import encode_jpeg
-
-    jpg = encode_jpeg(_gradient(8, 8, 3), 8, 8, 3, quality=90)
-    w, h, ch, _ = multimodal.decode_image(jpg)
-    assert (w, h, ch) == (8, 8, 3)
-
-
-def test_resize_nearest():
-    px = _gradient(8, 8, 3)
-    small = multimodal.resize_nearest(8, 8, 3, px, 4, 4)
-    assert len(small) == 4 * 4 * 3
-    # corner pixel preserved by nearest-neighbor
-    assert small[:3] == px[:3]
-
-
-def _real_gif() -> bytes:
-    from pdf_parser_spark.functions.gifcore import encode_gif
-
-    colors = [b"\xff\x00\x00", b"\x00\xff\x00"]
-    px = b"".join(colors[(x + y) % 2] for y in range(8) for x in range(8))
-    return encode_gif(px, 8, 8)
-
-
-def _real_webm() -> bytes:
-    from pdf_parser_spark.functions.webmcore import encode_webm
-
-    return encode_webm(12_000, 640, 360, 48000, 2, 2)
-
-
-def test_extract_features_real_png_and_jpeg_path(spark):
-    from pdf_parser_spark.functions.jpegcore import encode_jpeg
-
-    png = _encode_png(6, 6, 3, _gradient(6, 6, 3), filters=[0, 2])
-    jpg = encode_jpeg(_gradient(16, 16, 3), 16, 16, 3, quality=90)
-    df = spark.createDataFrame(
-        [
-            ("u1", bytearray(png)),
-            ("u2", bytearray(jpg)),
-            ("u3", bytearray(b"\xff\xd8\xffjunk...")),
-            ("u4", bytearray(_real_gif())),
-            ("u5", bytearray(b"ID3\x04audio-payload.....")),
-            ("u6", bytearray(_real_webm())),
-        ],
-        "url STRING, payload BINARY",
-    )
-    out = {r["url"]: r for r in multimodal.extract_features(df).collect()}
-    assert out["u1"]["content_type"] == "image/png"
-    assert out["u1"]["decode_error"] is None
-    feats = out["u1"]["feature"]
-    assert len(feats) == 8 and feats[0] > 0 and feats[3] > 0  # real moments
-    # real JPEG: decoded moments, no error
-    assert out["u2"]["content_type"] == "image/jpeg"
-    assert out["u2"]["decode_error"] is None
-    assert out["u2"]["feature"][0] > 0 and out["u2"]["feature"][3] > 0
-    # malformed JPEG: captured as a row error, zero feature
-    assert out["u3"]["decode_error"].startswith("ValueError")
-    # real GIF: decoded moments, no error
-    assert out["u4"]["content_type"] == "image/gif"
-    assert out["u4"]["decode_error"] is None
-    assert out["u4"]["feature"][0] > 0
-    # audio: labeled fallback (no decoder)
-    assert out["u5"]["content_type"] == "audio/mpeg"
-    assert out["u5"]["decode_error"].startswith("fallback_feature")
-    # webm: EBML metadata walk, labeled as metadata (frames undecoded)
-    assert out["u6"]["content_type"] == "video/webm"
-    assert out["u6"]["decode_error"].startswith("metadata_feature")
-    assert out["u6"]["feature"][3] == 1.0  # 48000 Hz / 48000
 
 
 def test_ivf_recall_perf_curve(spark):
@@ -1137,40 +933,6 @@ def test_mix_temperature_sqrt_shares(spark):
     assert by["lo"] == 100  # scarcest keeps 100%
     # hi keeps √(1000/4000) = 0.5 in expectation over the 16-bit hash
     assert 150 <= by["hi"] <= 250
-
-
-def test_raster_decompression_bomb_guard():
-    """Tiny files declaring huge dimensions (PNG 8200x8200, GIF/JPEG
-    60k-65k square) must fail fast as ValueError before inflating —
-    the 100 TB decompression-bomb vector. A measured 62 KB all-zero
-    8000x8000 PNG cost ~5 s and the full raw buffer pre-guard."""
-    import struct
-    import time
-    import zlib
-
-    import pytest
-
-    from pdf_parser_spark.functions.gifcore import decode_gif
-    from pdf_parser_spark.functions.jpegcore import decode_jpeg
-    from pdf_parser_spark.functions.multimodal import decode_png
-
-    def chunk(typ, data):
-        return (struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", zlib.crc32(typ + data)))
-
-    png = (b"\x89PNG\r\n\x1a\n"
-           + chunk(b"IHDR", struct.pack(">IIBBBBB", 8200, 8200, 8, 0, 0, 0, 0))
-           + chunk(b"IDAT", zlib.compress(b"\x00")) + chunk(b"IEND", b""))
-    gif = (b"GIF89a" + (60000).to_bytes(2, "little")
-           + (60000).to_bytes(2, "little") + bytes([0x00, 0, 0]) + b"\x3b")
-    jpg = (b"\xff\xd8\xff\xc0" + struct.pack(">H", 11) + bytes([8])
-           + struct.pack(">HH", 65000, 65000) + bytes([1, 1, 0x11, 0])
-           + b"\xff\xd9")
-    t0 = time.perf_counter()
-    for fn, blob in ((decode_png, png), (decode_gif, gif), (decode_jpeg, jpg)):
-        with pytest.raises(ValueError, match="image too large"):
-            fn(blob)
-    assert time.perf_counter() - t0 < 1.0
 
 
 def test_pii_spark_pattern_equivalent_and_linear(spark):
