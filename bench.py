@@ -90,6 +90,8 @@ HEADLINE = [
     "rank_join",
     "training_order",
     "upsample_repeat",
+    "ogg_metadata",
+    "webm_metadata",
     "robots_gate",
     "crawl_schedule",
     "sitemap_discovery",

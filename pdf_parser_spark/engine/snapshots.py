@@ -751,7 +751,11 @@ class SnapshotLog:
         The store's create-exclusive publish detects a concurrent
         writer claiming the same version: the loser adopts the winner's
         commit (monotonic pointer advance — never a rollback) and
-        retries at the next slot. A published manifest is complete by
+        retries at the next slot, unless the adopted commit has this
+        commit's kind, bucket, op and paths — then it is this commit,
+        published by a writer that died before the pointer advanced,
+        and its version is returned (a replayed epoch or re-run bucket
+        is never committed twice). A published manifest is complete by
         construction, so an adopted foreign manifest is always a real
         commit; an unparseable one can only be debris of a pre-publish-
         protocol writer killed mid-json.dump (this protocol never
@@ -785,11 +789,18 @@ class SnapshotLog:
             # commit and retry at the next slot. Torn bytes cannot come
             # from this protocol (see docstring) — reclaim legacy debris.
             try:
-                self.snapshot(version)
+                prior = self.snapshot(version)
             except (json.JSONDecodeError, KeyError):
                 self.store.remove(name)
                 continue
             self.store.advance_pointer("LATEST", version)
+            if (prior.kind, prior.bucket, prior.op, prior.paths) == (
+                kind, bucket, op, list(paths)
+            ):
+                # the orphan IS this commit: a re-run of a bucket whose
+                # writer died after publish saw the lagging pointer,
+                # missed the bucket and rewrote the same paths
+                return version
             continue
 
 

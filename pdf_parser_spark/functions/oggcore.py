@@ -10,8 +10,7 @@ PCM sample count, so ``duration_ms = last_granule * 1000 //
 sample_rate`` follows from the page walk alone; sample rate and
 channel count come from the Vorbis identification header carried by
 the first (BOS) page. Packet payloads beyond that header are never
-decoded — :func:`ogg_stats` is a metadata feature, clearly labeled,
-the same honesty tier as :mod:`mp3core`.
+decoded — :func:`ogg_stats` is a metadata feature, clearly labeled.
 
 Every page's CRC is verified for real: RFC 3533 uses CRC-32 with the
 0x04C11DB7 polynomial, MSB-first, zero init and zero xor-out,
@@ -19,7 +18,8 @@ computed over the page with its CRC field zeroed. A corrupted page
 fails the walk loudly rather than yielding silent garbage.
 
 (Reference parity note: the reference repo has no audio handling at
-all; this module exists for the LLM-data-pipeline multimodal surface.)
+all; this module exists for the LLM-data-pipeline media-metadata
+surface, the ``ogg_metadata`` query.)
 """
 
 from __future__ import annotations
@@ -135,8 +135,7 @@ def ogg_stats(data: bytes) -> dict:
 
 def ogg_feature(data: bytes, dim: int = 8) -> list[float]:
     """Deterministic metadata feature vector (duration, rate, channels,
-    page count, eos flag) — NOT decoded audio; the pipeline records
-    that distinction in decode_error, same contract as mp3_feature."""
+    page count, eos flag) — NOT decoded audio."""
     s = ogg_stats(data)
     feats = [
         min(s["duration_ms"] / 600_000.0, 1.0),  # clip at 10 min

@@ -8,8 +8,7 @@ reads the EBML header (DocType), then descends the Segment into Info
 codec ID, video PixelWidth/PixelHeight, audio SamplingFrequency/
 Channels) and counts Cluster elements without entering them. Frame
 payloads are never decoded — :func:`webm_stats` is a metadata feature,
-clearly labeled, the same honesty tier as :mod:`mp3core` and
-:mod:`oggcore`.
+clearly labeled, the same honesty tier as :mod:`oggcore`.
 
 Matroska's integrity primitive is the CRC-32 element (ID ``0xBF``): when
 present it MUST be the first child of its master element and holds the
@@ -23,7 +22,8 @@ live-streamed files; the walk supports that for Segment only (extends
 to end-of-file), the common real-world shape.
 
 (Reference parity note: the reference repo has no video handling at
-all; this module exists for the LLM-data-pipeline multimodal surface.)
+all; this module exists for the LLM-data-pipeline media-metadata
+surface, the ``webm_metadata`` query.)
 """
 
 from __future__ import annotations
@@ -219,8 +219,8 @@ def webm_stats(data: bytes) -> dict:
 
 def webm_feature(data: bytes, dim: int = 8) -> list[float]:
     """Deterministic metadata feature vector (duration, dims, audio
-    shape, cluster count) — NOT decoded frames; the pipeline records
-    that distinction in decode_error, same contract as mp3/ogg."""
+    shape, cluster count) — NOT decoded frames, same contract as
+    :func:`oggcore.ogg_feature`."""
     s = webm_stats(data)
     feats = [
         min(s["duration_ms"] / 600_000.0, 1.0),

@@ -1994,6 +1994,162 @@ def _host_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# container metadata queries (functions/oggcore.py, functions/webmcore.py)
+
+
+@q(
+    "ogg_metadata",
+    # synthesis contract (mirrors the query body): n audio pages,
+    # sample rate, samples-per-page and channels all derive from
+    # doc_id; the walk adds the BOS header page, so n_pages = n + 1
+    # and the final granule is n * spp.
+    "WITH p AS (SELECT doc_id, "
+    "(3 + doc_id % 5)::BIGINT AS n, "
+    "CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 22050 ELSE 48000 END"
+    "::BIGINT AS sample_rate, "
+    "CASE doc_id % 3 WHEN 0 THEN 1024 WHEN 1 THEN 2048 ELSE 4096 END"
+    "::BIGINT AS spp, "
+    "(1 + doc_id % 2)::BIGINT AS channels "
+    "FROM documents) "
+    f"SELECT {URL_SQL} AS url, sample_rate, channels, "
+    "(n + 1)::BIGINT AS n_pages, "
+    "(n * spp * 1000 // sample_rate)::BIGINT AS duration_ms, "
+    "1::BIGINT AS eos "
+    "FROM p",
+)
+def ogg_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ogg/Vorbis metadata end-to-end: synthesize a real RFC 3533 page
+    sequence per document (valid per-page CRCs, BOS/EOS flags, a
+    spec-exact Vorbis identification header; page count / rate /
+    channels / granule schedule derived from doc_id), then recover
+    duration, sample rate, channel count, page count and the EOS flag
+    from the BYTES via the from-scratch page walk
+    (functions/oggcore.py — every page CRC-verified, packets never
+    decoded). The oracle recomputes every value arithmetically from
+    doc_id, so a wrong CRC polynomial, lacing-table read, or granule
+    interpretation fails the hash."""
+    from collections.abc import Iterator as _It
+
+    import pandas as _pd
+
+    docs = _read(spark, sf_dir, "documents").select("doc_id")
+
+    def run(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
+        from pdf_parser_spark.engine.corpus import host_for
+        from pdf_parser_spark.functions.oggcore import (
+            encode_ogg_vorbis,
+            ogg_stats,
+        )
+
+        for pdf in batches:
+            rows = []
+            for d in pdf["doc_id"].astype("int64"):
+                d = int(d)
+                n = 3 + d % 5
+                rate = (44100, 22050, 48000)[d % 3]
+                spp = (1024, 2048, 4096)[d % 3]
+                data = encode_ogg_vorbis(
+                    n, rate, 1 + d % 2, spp, serial=1 + d, payload_seed=d
+                )
+                st = ogg_stats(data)
+                st["url"] = f"https://{host_for(d)}/doc/{d}"
+                rows.append(st)
+            yield _pd.DataFrame(rows)
+
+    return docs.mapInPandas(
+        run,
+        schema=(
+            "sample_rate BIGINT, channels BIGINT, n_pages BIGINT, "
+            "duration_ms BIGINT, eos BIGINT, url STRING"
+        ),
+    ).select(
+        "url", "sample_rate", "channels", "n_pages", "duration_ms", "eos",
+    )
+
+
+@q(
+    "webm_metadata",
+    # synthesis contract (mirrors the query body): every field derives
+    # from doc_id; the encoder always writes one video + one audio
+    # track, so n_tracks = 2.
+    f"SELECT {URL_SQL} AS url, "
+    "(1000 + (doc_id % 97) * 250)::BIGINT AS duration_ms, "
+    "CASE doc_id % 4 WHEN 0 THEN 640 WHEN 1 THEN 1280 "
+    "WHEN 2 THEN 1920 ELSE 3840 END::BIGINT AS width, "
+    "CASE doc_id % 4 WHEN 0 THEN 360 WHEN 1 THEN 720 "
+    "WHEN 2 THEN 1080 ELSE 2160 END::BIGINT AS height, "
+    "CASE doc_id % 2 WHEN 0 THEN 44100 ELSE 48000 END"
+    "::BIGINT AS sample_rate, "
+    "(1 + doc_id % 2)::BIGINT AS channels, "
+    "(2 + doc_id % 6)::BIGINT AS n_clusters, "
+    "2::BIGINT AS n_tracks "
+    "FROM documents",
+)
+def webm_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WebM metadata end-to-end: synthesize a real EBML tree per
+    document (RFC 8794 vint framing, CRC-32-protected Info/Tracks
+    masters, one video + one audio TrackEntry, Cluster filler;
+    duration / dims / rate / channels / cluster count derived from
+    doc_id — every third document uses the live-streamed unknown-size
+    Segment form), then recover every value from the BYTES via the
+    from-scratch tree walk (functions/webmcore.py — CRC-32 elements
+    verified, frames never decoded). The oracle recomputes each value
+    arithmetically from doc_id, so a wrong vint read, element-ID
+    table, float width, or TimestampScale interpretation fails the
+    hash."""
+    from collections.abc import Iterator as _It
+
+    import pandas as _pd
+
+    docs = _read(spark, sf_dir, "documents").select("doc_id")
+
+    def run(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
+        from pdf_parser_spark.engine.corpus import host_for
+        from pdf_parser_spark.functions.webmcore import (
+            encode_webm,
+            webm_stats,
+        )
+
+        for pdf in batches:
+            rows = []
+            for d in pdf["doc_id"].astype("int64"):
+                d = int(d)
+                data = encode_webm(
+                    duration_ms=1000 + (d % 97) * 250,
+                    width=(640, 1280, 1920, 3840)[d % 4],
+                    height=(360, 720, 1080, 2160)[d % 4],
+                    sample_rate=(44100, 48000)[d % 2],
+                    channels=1 + d % 2,
+                    n_clusters=2 + d % 6,
+                    payload_seed=d,
+                    unknown_segment_size=(d % 3 == 0),
+                )
+                st = webm_stats(data)
+                rows.append(
+                    {
+                        "url": f"https://{host_for(d)}/doc/{d}",
+                        "duration_ms": st["duration_ms"],
+                        "width": st["width"],
+                        "height": st["height"],
+                        "sample_rate": st["sample_rate"],
+                        "channels": st["channels"],
+                        "n_clusters": st["n_clusters"],
+                        "n_tracks": st["n_video"] + st["n_audio"],
+                    }
+                )
+            yield _pd.DataFrame(rows)
+
+    return docs.mapInPandas(
+        run,
+        schema=(
+            "url STRING, duration_ms BIGINT, width BIGINT, height BIGINT, "
+            "sample_rate BIGINT, channels BIGINT, n_clusters BIGINT, "
+            "n_tracks BIGINT"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
 # URL canonicalization (functions/urlnorm.py)
 
 # Messy-URL construction shared by both sides (same SQL text runs in

@@ -1,5 +1,5 @@
-"""Mutation fuzz over the container walkers (mp3core, oggcore,
-webmcore): seeded byte flips, truncations, and splices over valid
+"""Mutation fuzz over the container walkers (oggcore, webmcore):
+seeded byte flips, truncations, and splices over valid
 files must always TERMINATE fast and either return stats or raise the
 module's own error type — never hang, loop, or leak a foreign
 exception. This is the malformed-web-payload contract: at 10^12
@@ -10,7 +10,6 @@ import random
 
 import pytest
 
-from pdf_parser_spark.functions.mp3core import encode_mp3_frames, mp3_stats
 from pdf_parser_spark.functions.oggcore import OggError, encode_ogg_vorbis, ogg_stats
 from pdf_parser_spark.functions.webmcore import EbmlError, encode_webm, webm_stats
 
@@ -66,20 +65,6 @@ def test_fuzz_webm_unknown_size():
         60_000, 1280, 720, 48000, 2, 4, unknown_segment_size=True
     )
     _drive(webm_stats, EbmlError, valid, seed=203)
-
-
-def test_fuzz_mp3():
-    # mp3core is deliberately lenient (sync-scan resynchronizes past
-    # garbage, the real-web MP3 contract), so errors are not required —
-    # only dict-or-ValueError termination.
-    valid = encode_mp3_frames([128, 64, 192] * 8, 44100, channels=2)
-    _drive(
-        mp3_stats,
-        (ValueError, NotImplementedError),
-        valid,
-        seed=303,
-        want_err=False,
-    )
 
 
 def test_every_truncation_point_terminates():

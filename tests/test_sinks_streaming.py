@@ -437,7 +437,8 @@ def test_snapshot_sink_exactly_once_across_sigkill(spark, webdocs, tmp_path):
 
     worker = tmp_path / "kill_worker.py"
     worker.write_text(_KILL_WORKER)
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo_root)
     proc = subprocess.Popen(
         [sys.executable, str(worker), src, out, ckpt],
         start_new_session=True,

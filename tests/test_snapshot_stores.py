@@ -122,6 +122,35 @@ def test_crash_after_publish_is_adopted_by_next_writer(tmp_path):
     assert [s.bucket for s in log.chain()] == [7, 8]
 
 
+def test_rerun_of_crashed_commit_is_not_doubled(tmp_path):
+    """Writer dies after publishing epoch 1's manifest but before the
+    pointer advanced (a SIGKILL right after the manifest lands). The
+    restart's resume check reads the lagging pointer, misses epoch 1,
+    rewrites the same path and commits it again: the commit must adopt
+    the orphan as itself, not chain a second copy of the epoch."""
+    store = MemoryStore(fail_after_publish=lambda name: name == "v1.json")
+    log = SnapshotLog(str(tmp_path / "replay"), store=store)
+    p0, p1 = "data/epoch=0", "data/epoch=1"
+    assert log.commit(0, [p0], {"n_docs": 3}, kind="epoch") == 0
+    with pytest.raises(SimulatedCrash):
+        log.commit(1, [p1], {"n_docs": 4}, kind="epoch")
+    assert log.committed_buckets(kind="epoch") == {0}  # pointer lags
+
+    store.fail_after_publish = None
+    assert log.commit(1, [p1], {"n_docs": 4}, kind="epoch") == 1
+    assert log.latest_version() == 1
+    assert [(s.bucket, s.paths) for s in log.chain()] == [(0, [p0]), (1, [p1])]
+    # a different commit at the orphan's slot still lands after it
+    store.fail_after_publish = lambda name: name == "v2.json"
+    with pytest.raises(SimulatedCrash):
+        log.commit(2, ["data/epoch=2"], {"n_docs": 1}, kind="epoch")
+    store.fail_after_publish = None
+    assert log.commit(2, ["data/epoch=2"], {"n_docs": 1}, kind="extract") == 3
+    assert [(s.kind, s.bucket) for s in log.chain()] == [
+        ("epoch", 0), ("epoch", 1), ("epoch", 2), ("extract", 2),
+    ]
+
+
 def test_loser_never_deletes_foreign_complete_manifest(tmp_path):
     """A publish that loses the race must adopt the winner's manifest,
     never remove it (the r4 handler deleted a just-published foreign
