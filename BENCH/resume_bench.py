@@ -2,26 +2,22 @@
 committed snapshot after failure").
 
 Measures what a failure actually costs: a child process runs the
-batched extraction (one transactional parquet append per url-hash
-bucket — the sandbox analog of Iceberg snapshot commits) and is
-SIGKILLed mid-run after a few commits; the parent then resumes the SAME
-output directory and times the completion. The headline metric is
+snapshot-committing extraction (``engine.snapshots.
+snapshot_resumable_extract``: one manifest commit per url-hash bucket,
+the Iceberg shape) and is SIGKILLed mid-run after a few commits; the
+parent then resumes the SAME output directory and times the completion.
+The headline metric is
 
     resume_overhead = t_resume / (t_full × remaining_fraction)
 
 i.e. how much the resumed run costs relative to the remaining work a
-perfect resume would do. Target < 1.2 (the anti-join + per-batch job
-overhead is the only extra work). Also asserts correctness: the resumed
-table has exactly one row per url.
+perfect resume would do. Resume reads the committed buckets from the
+manifest log, a metadata-only read, so the overhead should sit close to
+1.0 (per-bucket job overhead is the only extra work). Also asserts
+correctness: the resumed table has exactly one row per url.
 
-Two modes: ``antijoin`` (engine.resume — committed urls rediscovered by
-a data scan + anti-join) and ``snapshot`` (engine.snapshots — committed
-buckets come from the manifest log, a metadata-only read; the Iceberg
-shape). The snapshot mode's overhead should sit closer to 1.0: resume
-pays no committed-side scan at all.
-
-Usage:  python BENCH/resume_bench.py [sf_dir] [replicate] [n_batches] [mode]
-Child:  python BENCH/resume_bench.py --child <corpus> <out_dir> <n_batches> <mode>
+Usage:  python BENCH/resume_bench.py [sf_dir] [replicate] [n_batches]
+Child:  python BENCH/resume_bench.py --child <corpus> <out_dir> <n_batches>
 """
 
 from __future__ import annotations
@@ -39,27 +35,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 KILL_AFTER_BATCHES = 3
 
 
-def _extract_fn(mode: str):
-    if mode == "snapshot":
-        from pdf_parser_spark.engine.snapshots import snapshot_resumable_extract
-
-        return snapshot_resumable_extract
-    from pdf_parser_spark.engine.resume import batched_resumable_extract
-
-    return batched_resumable_extract
-
-
-def _committed_count(spark, out_dir: str, mode: str) -> int:
-    if mode == "snapshot":
-        from pdf_parser_spark.engine.snapshots import SnapshotLog
-
-        df = SnapshotLog(out_dir).read(spark)
-        return 0 if df is None else df.count()
-    return spark.read.parquet(f"{out_dir}/parsed").count()
-
-
-def _child(corpus_path: str, out_dir: str, n_batches: int, mode: str) -> None:
+def _child(corpus_path: str, out_dir: str, n_batches: int) -> None:
     from pdf_parser_spark.engine.session import build_session
+    from pdf_parser_spark.engine.snapshots import snapshot_resumable_extract
 
     spark = build_session("resume_child")
     spark.sparkContext.setLogLevel("ERROR")
@@ -68,7 +46,7 @@ def _child(corpus_path: str, out_dir: str, n_batches: int, mode: str) -> None:
     def report(b: int) -> None:
         print(f"BATCH {b} committed", flush=True)
 
-    _extract_fn(mode)(
+    snapshot_resumable_extract(
         spark, corpus, out_dir, n_batches=n_batches, on_batch=report
     )
     print("ALL DONE", flush=True)
@@ -76,18 +54,19 @@ def _child(corpus_path: str, out_dir: str, n_batches: int, mode: str) -> None:
 
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--child":
-        _child(sys.argv[2], sys.argv[3], int(sys.argv[4]),
-               sys.argv[5] if len(sys.argv) > 5 else "antijoin")
+        _child(sys.argv[2], sys.argv[3], int(sys.argv[4]))
         return
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     replicate = int(sys.argv[2]) if len(sys.argv) > 2 else 20
     n_batches = int(sys.argv[3]) if len(sys.argv) > 3 else 8
-    mode = sys.argv[4] if len(sys.argv) > 4 else "antijoin"
-    extract = _extract_fn(mode)
 
     from pdf_parser_spark.engine.corpus import synthesize_webdocs
     from pdf_parser_spark.engine.session import _available_mem_gib, build_session
+    from pdf_parser_spark.engine.snapshots import (
+        SnapshotLog,
+        snapshot_resumable_extract,
+    )
 
     spark = build_session("resume_bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -106,14 +85,14 @@ def main() -> None:
     n_total = corpus.count()
 
     # warm the Python worker pool, then a full baseline run (same
-    # batched path, same parquet sink — the denominator's unit cost)
+    # bucketed commits — the denominator's unit cost)
     from pdf_parser_spark.engine.extractor import parse_webdocs
 
     parse_webdocs(corpus.limit(256)).write.format("noop").mode(
         "overwrite"
     ).save()
     t0 = time.perf_counter()
-    extract(spark, corpus, f"{base}/full", n_batches=n_batches)
+    snapshot_resumable_extract(spark, corpus, f"{base}/full", n_batches=n_batches)
     t_full = time.perf_counter() - t0
 
     # crash run: child commits batches; SIGKILL the whole process group
@@ -121,7 +100,7 @@ def main() -> None:
     out_crash = f"{base}/crash"
     child = subprocess.Popen(
         [sys.executable, os.path.abspath(__file__), "--child", corpus_path,
-         out_crash, str(n_batches), mode],
+         out_crash, str(n_batches)],
         stdout=subprocess.PIPE,
         text=True,
         start_new_session=True,
@@ -137,11 +116,14 @@ def main() -> None:
             raise SystemExit("child finished before the kill — raise n_batches")
     child.wait()
 
-    n_committed = _committed_count(spark, out_crash, mode)
+    committed = SnapshotLog(out_crash).read(spark)
+    n_committed = 0 if committed is None else committed.count()
     remaining_frac = (n_total - n_committed) / n_total
 
     t0 = time.perf_counter()
-    final = extract(spark, corpus, out_crash, n_batches=n_batches)
+    final = snapshot_resumable_extract(
+        spark, corpus, out_crash, n_batches=n_batches
+    )
     t_resume = time.perf_counter() - t0
 
     n_final = final.count()
@@ -153,7 +135,6 @@ def main() -> None:
         json.dumps(
             {
                 "metric": "resume_overhead",
-                "mode": mode,
                 "value": round(overhead, 3),
                 "unit": "x_of_remaining_work",
                 "t_full_sec": round(t_full, 2),

@@ -90,8 +90,6 @@ HEADLINE = [
     "rank_join",
     "training_order",
     "upsample_repeat",
-    "ogg_metadata",
-    "webm_metadata",
     "robots_gate",
     "crawl_schedule",
     "sitemap_discovery",

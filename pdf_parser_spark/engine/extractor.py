@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..htmlcore.extract import extract_html
+from ..pdfcore.document import header_offset
 from ..pdfcore.extract import extract_pdf
 from .partitioning import salted_repartition
 
@@ -44,20 +45,10 @@ PARSED_SCHEMA = (
 
 
 def _sniff(payload: bytes) -> str:
-    """``pdf`` when a ``%PDF-`` header starts a line within the first
-    1024 bytes, else ``html``. §7.5.2 makes the header a line, so a BOM,
-    leading whitespace or a junk banner line may precede it; a mid-line
-    mention (an HTML page quoting the magic) is not a header."""
-    i = payload.find(b"%PDF-", 0, 1024)
-    while i >= 0:
-        if (
-            i == 0
-            or payload[i - 1] in b"\r\n"
-            or not payload[:i].removeprefix(b"\xef\xbb\xbf").strip()
-        ):
-            return "pdf"
-        i = payload.find(b"%PDF-", i + 1, 1024)
-    return "html"
+    """``pdf`` when a line-start ``%PDF-`` header sits within the first
+    1024 bytes (``pdfcore.document.header_offset``, the rule the PDF
+    kernel parses by), else ``html``."""
+    return "pdf" if header_offset(payload) >= 0 else "html"
 
 
 # Per-document payload ceiling. At 10^12 crawled documents a handful of

@@ -1,9 +1,11 @@
 """Iceberg-analog snapshot log: atomic manifest commits over parquet.
 
 North rule: "resumes from the last committed snapshot" with
-"per-partition lineage + metrics". :mod:`resume` evidences the row-level
-form (anti-join on committed urls — an O(committed-rows) data scan).
-This module is the metadata-only form, the shape Iceberg actually has:
+"per-partition lineage + metrics". This log is the package's one durable
+output path: the batch extractor (:func:`snapshot_resumable_extract`)
+and the streaming sink (``streaming_extract_to_snapshots``) both commit
+through :meth:`SnapshotLog.commit_dataframe`, and resume is a metadata
+read, the shape Iceberg actually has:
 
 Layout under ``<output_dir>``::
 
@@ -13,7 +15,7 @@ Layout under ``<output_dir>``::
     _snapshots/LATEST           current version (monotonic pointer)
 
 Each manifest records ``{version, parent, bucket, kind, paths, metrics,
-ts}``. Readers resolve LATEST → v<N> → the parent chain → the set of
+ts}``. Readers resolve the head → v<N> → the parent chain → the set of
 committed buckets, and read ONLY those data directories — so a crash
 mid-write (partial bucket dir with no manifest) is invisible, resume
 decides what to re-run from a handful of JSON reads instead of scanning
@@ -29,7 +31,12 @@ already claimed version N the publish fails, the loser adopts the
 winner's commit (rolls the pointer forward, never backward) and retries
 at the next version. Because publish is all-or-nothing, a visible
 manifest is always complete — a concurrent writer's in-flight commit
-can never be mistaken for torn debris and deleted.
+can never be mistaken for torn debris and deleted. For the same reason
+the published manifests, not the pointer, are the truth (Delta Lake's
+rule): LATEST is a hint that a writer killed between publish and
+pointer advance leaves lagging, and :meth:`SnapshotLog.latest_version`
+steps forward from it to the last published manifest, so every reader
+and GC pass sees that commit.
 
 The default :class:`PosixStore` implements publish as write-tmp + fsync
 + ``os.link`` (hard-link creation fails atomically if the name is
@@ -324,7 +331,20 @@ class SnapshotLog:
     # -- reads ---------------------------------------------------------
 
     def latest_version(self) -> int | None:
-        return self.store.read_pointer("LATEST")
+        """The log's head: the last published manifest. Starts at the
+        LATEST hint and steps forward while ``v<N+1>.json`` reads and
+        parses, so a commit whose writer died before advancing the
+        pointer is seen by every reader, resume and GC pass. Stops at
+        the first missing or unparseable manifest (torn legacy debris
+        that :meth:`commit` reclaims)."""
+        v = self.store.read_pointer("LATEST")
+        while True:
+            nxt = 0 if v is None else v + 1
+            try:
+                self.snapshot(nxt)
+            except (FileNotFoundError, ValueError, KeyError):
+                return v
+            v = nxt
 
     def snapshot(self, version: int) -> Snapshot:
         raw = self.store.read(f"v{version}.json")
@@ -751,8 +771,9 @@ class SnapshotLog:
         The store's create-exclusive publish detects a concurrent
         writer claiming the same version: the loser adopts the winner's
         commit (monotonic pointer advance — never a rollback) and
-        retries at the next slot, unless the adopted commit has this
-        commit's kind, bucket, op and paths — then it is this commit,
+        retries at the next slot. When the head — adopted, or reached
+        by :meth:`latest_version` past a lagging pointer — has this
+        commit's kind, bucket, op and paths, it is this commit,
         published by a writer that died before the pointer advanced,
         and its version is returned (a replayed epoch or re-run bucket
         is never committed twice). A published manifest is complete by
@@ -765,6 +786,12 @@ class SnapshotLog:
         ``kind`` names the bucket id-space ("extract" vs "epoch")."""
         while True:
             parent = self.latest_version()
+            if parent is not None:
+                head = self.snapshot(parent)
+                if (head.kind, head.bucket, head.op, head.paths) == (
+                    kind, bucket, op, list(paths)
+                ):
+                    return parent
             version = 0 if parent is None else parent + 1
             manifest = {
                 "version": version,
@@ -784,24 +811,68 @@ class SnapshotLog:
             if self.store.publish(name, json.dumps(manifest).encode()):
                 self.store.advance_pointer("LATEST", version)
                 return version
-            # lost the race, or a prior writer died between manifest
-            # publish and pointer advance: adopt the complete foreign
-            # commit and retry at the next slot. Torn bytes cannot come
-            # from this protocol (see docstring) — reclaim legacy debris.
+            # lost the race to a concurrent writer: adopt its complete
+            # commit and retry on top of it (the head check above
+            # returns it if it is this very commit). Torn bytes cannot
+            # come from this protocol (see docstring) — reclaim legacy
+            # debris.
             try:
-                prior = self.snapshot(version)
-            except (json.JSONDecodeError, KeyError):
+                self.snapshot(version)
+            except (ValueError, KeyError):
                 self.store.remove(name)
                 continue
             self.store.advance_pointer("LATEST", version)
-            if (prior.kind, prior.bucket, prior.op, prior.paths) == (
-                kind, bucket, op, list(paths)
-            ):
-                # the orphan IS this commit: a re-run of a bucket whose
-                # writer died after publish saw the lagging pointer,
-                # missed the bucket and rewrote the same paths
-                return version
-            continue
+
+    def commit_dataframe(
+        self,
+        df: DataFrame,
+        bucket: int,
+        kind: str = "extract",
+        n_buckets: int | None = None,
+    ) -> int:
+        """Write parsed rows as one bucket and commit it; returns the
+        version. The rows land in ``data/bucket=<b>`` (kind "extract")
+        or ``data/epoch=<e>`` (kind "epoch") with mode=overwrite, so
+        debris of a run killed before its manifest is replaced, never
+        appended to. One read of the written directory feeds the
+        manifest: the n_docs / n_failures / bytes_in counters, the url
+        min/max stats :meth:`scan` prunes by, the column list and the
+        url Bloom :meth:`lookup_url` probes. ``n_buckets`` is the url-
+        hash modulus the bucket was cut by; epochs pass None, since
+        lookup_url must not prune them by it."""
+        prefix = "bucket" if kind == "extract" else "epoch"
+        path = os.path.join(self.output_dir, "data", f"{prefix}={bucket}")
+        df.write.mode("overwrite").parquet(path)
+        written = df.sparkSession.read.parquet(path)
+        m = (
+            written.agg(
+                F.count("*").alias("n_docs"),
+                F.sum(
+                    F.when(F.col("error").isNotNull(), 1).otherwise(0)
+                ).alias("n_failures"),
+                F.sum("payload_bytes").alias("bytes_in"),
+                F.min("url").alias("url_min"),
+                F.max("url").alias("url_max"),
+            )
+            .collect()[0]  # bounded: one row of counters per bucket
+        )
+        n_docs = int(m["n_docs"])
+        return self.commit(
+            bucket,
+            [path],
+            {
+                "n_docs": n_docs,
+                "n_failures": int(m["n_failures"] or 0),
+                "bytes_in": int(m["bytes_in"] or 0),
+            },
+            n_buckets=n_buckets,
+            stats={"url": {"min": m["url_min"], "max": m["url_max"]}}
+            if m["url_min"] is not None
+            else None,
+            columns=written.columns,
+            kind=kind,
+            bloom=bloom_build(written, "url", n_docs) if n_docs else None,
+        )
 
 
 def snapshot_resumable_extract(
@@ -813,22 +884,21 @@ def snapshot_resumable_extract(
 ) -> DataFrame:
     """Extraction with one snapshot commit per url-hash bucket.
 
-    Unlike :func:`resume.batched_resumable_extract` (anti-join on the
-    committed url column — an O(committed-rows) scan per re-run), resume
-    here is a pure metadata read: the snapshot log names the committed
-    buckets, the loop runs only the rest. Each bucket writes its own
-    ``data/bucket=<b>`` directory with mode=overwrite, so re-running a
-    bucket that crashed mid-write simply replaces the debris before the
-    manifest that makes it visible ever exists — exactly once per url
-    under any kill point.
+    Resume is a pure metadata read: the snapshot log names the
+    committed buckets, the loop runs only the rest. Each bucket is
+    written and committed by :meth:`SnapshotLog.commit_dataframe`,
+    whose mode=overwrite write replaces the debris of a bucket that
+    crashed mid-write before the manifest that makes it visible ever
+    exists — exactly once per url under any kill point.
 
     Resume filters to kind="extract" commits: a log shared with the
     streaming sink (kind="epoch", data/epoch=<e> paths) never makes an
     extract bucket look committed just because an epoch shares its id.
 
     Requires the same input across runs (bucket membership is
-    xxhash64(url) % n_batches, deterministic); for changed inputs use
-    the row-level anti-join path.
+    xxhash64(url) % n_batches, deterministic); an input that keeps
+    growing is what ``streaming_extract_to_snapshots`` drains, one
+    epoch commit per micro-batch into the same kind of log.
     """
     log = SnapshotLog(output_dir)
     done = log.committed_buckets(kind="extract")
@@ -836,41 +906,8 @@ def snapshot_resumable_extract(
     for b in range(n_batches):
         if b in done:
             continue
-        path = os.path.join(output_dir, "data", f"bucket={b}")
-        parse_webdocs(webdocs.where(bucket == b)).write.mode(
-            "overwrite"
-        ).parquet(path)
-        m = (
-            spark.read.parquet(path)
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(
-                    F.when(F.col("error").isNotNull(), 1).otherwise(0)
-                ).alias("n_failures"),
-                F.sum("payload_bytes").alias("bytes_in"),
-                F.min("url").alias("url_min"),
-                F.max("url").alias("url_max"),
-            )
-            .collect()[0]  # bounded: one row of counters per bucket
-        )
-        log.commit(
-            b,
-            [path],
-            {
-                "n_docs": int(m["n_docs"] or 0),
-                "n_failures": int(m["n_failures"] or 0),
-                "bytes_in": int(m["bytes_in"] or 0),
-            },
-            n_buckets=n_batches,
-            stats={"url": {"min": m["url_min"], "max": m["url_max"]}}
-            if m["url_min"] is not None
-            else None,
-            columns=spark.read.parquet(path).columns,
-            bloom=bloom_build(
-                spark.read.parquet(path), "url", int(m["n_docs"] or 0)
-            )
-            if m["n_docs"]
-            else None,
+        log.commit_dataframe(
+            parse_webdocs(webdocs.where(bucket == b)), b, n_buckets=n_batches
         )
         if on_batch is not None:
             on_batch(b)

@@ -34,17 +34,36 @@ class PdfError(ValueError):
     pass
 
 
+def header_offset(data: bytes) -> int:
+    """Offset of the ``%PDF-`` header that starts a line within the
+    first 1024 bytes, else -1. §7.5.2 makes the header a line, so a BOM,
+    leading whitespace or a junk banner line may precede it; a mid-line
+    mention (an HTML page quoting the magic, a banner that names it) is
+    not a header."""
+    i = data.find(b"%PDF-", 0, 1024)
+    while i >= 0:
+        if (
+            i == 0
+            or data[i - 1] in b"\r\n"
+            or not data[:i].removeprefix(b"\xef\xbb\xbf").strip()
+        ):
+            return i
+        i = data.find(b"%PDF-", i + 1, 1024)
+    return -1
+
+
 class PdfDocument:
     """Random-access object graph over a PDF byte buffer."""
 
     def __init__(self, data: bytes):
-        if not data.startswith(b"%PDF-"):
-            # be lenient: allow a BOM/garbage prefix up to 1 KiB (spec allows it)
+        # the line-start header, else (lenient) the first mention in
+        # 1 KiB, e.g. junk glued to the header on its own line
+        idx = header_offset(data)
+        if idx < 0:
             idx = data.find(b"%PDF-", 0, 1024)
-            if idx == -1:
+            if idx < 0:
                 raise PdfError("not a PDF: missing %PDF- header")
-            data = data[idx:]
-        self.data = data
+        self.data = data[idx:]
         self.trailer: dict = {}
         # obj num -> ("file", offset) | ("objstm", container_num, index)
         self._index: dict[int, tuple] = {}

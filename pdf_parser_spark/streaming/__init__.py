@@ -1,1 +1,1 @@
-from .ingest import streaming_extract  # noqa: F401
+from .ingest import streaming_extract_to_snapshots  # noqa: F401

@@ -1,23 +1,26 @@
 """Incremental ingestion via Structured Streaming.
 
-The batch engine's resume path (engine/resume.py) is the primary
-incremental mechanism (SURVEY.md §2.9: the reference is a one-shot
-batch tool). This module adds the continuous variant for
-always-arriving corpora: a file-source stream over the webdocs table
-directory → the same extraction UDF → parquet sink with checkpointed
-exactly-once progress. New parquet files dropped into the source
-directory (e.g. by a WARC unpacker) are discovered, parsed once, and
-appended; a restart resumes from the checkpoint.
+:func:`streaming_extract_to_snapshots` is the continuous variant of the
+batch extractor for always-arriving corpora: a file-source stream over
+the webdocs table directory → the same extraction UDF → one snapshot-log
+commit per micro-batch, the same durable output path as
+``engine.snapshots.snapshot_resumable_extract``. New parquet files
+dropped into the source directory (e.g. by a WARC unpacker) are
+discovered, parsed once and committed; a restart resumes from the
+checkpoint and skips every epoch the log already holds.
 
 Design notes (scale):
 - the extraction is IDENTICAL to the batch path (``parse_webdocs`` →
-  ``mapInArrow``) — one kernel, two drivers (batch + streaming), no
-  semantic drift;
+  ``mapInArrow``), and so is the commit (``SnapshotLog.commit_dataframe``):
+  one kernel, one output path, no semantic drift;
 - ``maxFilesPerTrigger`` bounds micro-batch size so one giant drop
   cannot OOM an executor wave;
 - no shuffle inside the stream: salting matters for long-running batch
   scans, while a micro-batch is already small — per-file parallelism
   suffices. A hot-host burst is bounded by the trigger cap.
+
+The rest of the module holds the stateful streaming operators
+(watermarked windows, cross-batch dedup, per-host running state).
 """
 
 from __future__ import annotations
@@ -27,43 +30,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..engine.corpus import WEBDOCS_SCHEMA
 from ..engine.extractor import parse_webdocs
-
-
-def streaming_extract(
-    spark: SparkSession,
-    source_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 8,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Start the extraction stream; returns the StreamingQuery handle.
-
-    With ``available_now=True`` the stream drains everything currently
-    in *source_dir* and stops — the testable/batch-catchup mode.
-    """
-    stream = (
-        spark.readStream.schema(WEBDOCS_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
-    # no shuffle inside the stream (num_partitions=0); spans and items
-    # on, so the streamed rows carry every column the batch parse can
-    parsed = parse_webdocs(
-        stream.select("url", "html"),
-        num_partitions=0,
-        emit_items=True,
-        emit_spans=True,
-    )
-    writer = (
-        parsed.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_extract_to_snapshots(
@@ -82,7 +48,8 @@ def streaming_extract_to_snapshots(
     Exactly-once across failures: Structured Streaming may REPLAY an
     epoch after a crash (the checkpoint marks it incomplete even if the
     data write finished). The sink is idempotent against that — a
-    replayed epoch whose bucket is already in the log is skipped, and
+    replayed epoch whose bucket is already in the log (its manifest
+    published, even if the pointer never advanced) is skipped, and
     an epoch killed between data write and manifest commit leaves
     invisible debris that the rewrite (mode=overwrite) replaces before
     the commit lands. So every row is visible exactly once, with
@@ -94,52 +61,14 @@ def streaming_extract_to_snapshots(
     ``data/bucket=<b>``) can never clobber an extract bucket whose id
     matches an epoch, and neither side's resume mistakes the other's
     commits for its own."""
-    import os as _os
-
-    from ..engine.snapshots import SnapshotLog, bloom_build
-
-    from pyspark.sql import functions as _F
+    from ..engine.snapshots import SnapshotLog
 
     log = SnapshotLog(output_dir)
 
     def commit_epoch(df: DataFrame, epoch_id: int) -> None:
-        b = int(epoch_id)
-        if b in log.committed_buckets(kind="epoch"):
+        if epoch_id in log.committed_buckets(kind="epoch"):
             return  # replayed epoch: already durably committed
-        path = _os.path.join(output_dir, "data", f"epoch={b}")
-        df.write.mode("overwrite").parquet(path)
-        m = (
-            df.sparkSession.read.parquet(path)
-            .agg(
-                _F.count("*").alias("n_docs"),
-                _F.sum(
-                    _F.when(_F.col("error").isNotNull(), 1).otherwise(0)
-                ).alias("n_failures"),
-                _F.sum("payload_bytes").alias("bytes_in"),
-            )
-            .collect()[0]
-        )
-        log.commit(
-            b,
-            [path],
-            {
-                "n_docs": int(m["n_docs"] or 0),
-                "n_failures": int(m["n_failures"] or 0),
-                "bytes_in": int(m["bytes_in"] or 0),
-            },
-            columns=df.columns,
-            kind="epoch",
-            # epoch commits carry a url Bloom too, so point lookups on
-            # a streaming (or mixed) log prune to the epochs that might
-            # hold the url instead of scanning every epoch directory
-            bloom=bloom_build(
-                df.sparkSession.read.parquet(path),
-                "url",
-                int(m["n_docs"] or 0),
-            )
-            if m["n_docs"]
-            else None,
-        )
+        log.commit_dataframe(df, int(epoch_id), kind="epoch")
 
     stream = (
         spark.readStream.schema(WEBDOCS_SCHEMA)
@@ -158,13 +87,6 @@ def streaming_extract_to_snapshots(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def extracted_stream_view(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Read-side view of the streamed output (same columns as batch)."""
-    return spark.read.parquet(output_dir).select(
-        "url", "kind", "text", "n_pages", "n_items", "error"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -230,7 +152,7 @@ def run_windowed_stats(
 
     The memory sink cannot recover from a checkpoint — for
     restart-resume semantics point the same stats DataFrame at a
-    parquet sink (see ``run_streaming_extract``)."""
+    parquet sink, as :func:`run_streaming_dedup` does."""
     stream = (
         spark.readStream.schema(WEBDOCS_SCHEMA)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -426,7 +348,7 @@ def run_stateful_totals(
     """Drive ``stateful_host_totals`` into an in-memory sink. The state
     store is checkpointed per trigger, but the memory sink itself
     cannot recover — swap in a parquet/kafka sink (as in
-    ``run_streaming_extract``) to get restart-resume."""
+    :func:`run_streaming_dedup`) to get restart-resume."""
     stream = (
         spark.readStream.schema(WEBDOCS_SCHEMA)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -217,6 +217,16 @@ def test_header_not_at_byte_zero():
     assert r.text == "offset header"
 
 
+def test_banner_mentioning_magic_is_not_the_header():
+    """A banner line that quotes %PDF- mid-line before the real
+    line-start header: the document parses from the header the sniff
+    routes by, so the xref offsets hold and no recovery scan runs."""
+    base = _classic_pdf(_base_objects("banner header"))
+    r = extract_pdf(b"<!-- saw %PDF- here -->\r\n" + base)
+    assert r.error is None and not r.recovered
+    assert r.text == "banner header"
+
+
 def test_stream_length_as_indirect_ref():
     """/Length as an indirect reference (extremely common in the wild;
     our writer always inlines it)."""

@@ -1,6 +1,6 @@
 """End-to-end Spark pipeline tests on the sf0.001 synthetic corpus:
 corpus synthesis → salted repartition → mapInArrow extraction →
-extracted/spans/audit views → snapshot resume."""
+extracted/spans/audit views."""
 
 import pytest
 
@@ -18,7 +18,6 @@ from pdf_parser_spark.engine.extractor import (
     spans_view,
 )
 from pdf_parser_spark.engine.partitioning import compute_salt_map
-from pdf_parser_spark.engine.resume import resumable_extract
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -270,59 +269,6 @@ def test_hot_host_spread_across_partitions(parsed, webdocs, spark):
         .count()
     )
     assert dist >= 3
-
-
-def test_resume_is_idempotent_and_complete(spark, webdocs, tmp_path):
-    out = str(tmp_path / "snap")
-    first_half = webdocs.filter(F.col("doc_id") % 5 != 0)
-    resumable_extract(spark, first_half, out)
-    n1 = spark.read.parquet(f"{out}/parsed").count()
-    assert n1 == 400
-    # "crash" happened; resume with the FULL input: only the missing 100 run
-    full = resumable_extract(spark, webdocs, out)
-    assert full.count() == 500
-    assert full.select("url").distinct().count() == 500
-    # idempotent re-run: nothing to do, still 500
-    again = resumable_extract(spark, webdocs, out)
-    assert again.count() == 500
-
-
-def test_batched_resume_after_midrun_crash(spark, tmp_path):
-    """Batch-committed extraction survives a crash between commits:
-    only uncommitted urls are reprocessed, the final table is exact
-    (one row per url), and a second resume is a no-op."""
-    from pyspark.sql import functions as F
-
-    from pdf_parser_spark.engine.corpus import synthesize_webdocs
-    from pdf_parser_spark.engine.resume import batched_resumable_extract
-
-    webdocs = synthesize_webdocs(spark, "/root/testdata/sf0.001").limit(60)
-    webdocs = webdocs.localCheckpoint(eager=True)
-    n_total = webdocs.count()
-    out = str(tmp_path / "resume")
-
-    class Boom(RuntimeError):
-        pass
-
-    def crash_after_two(b: int) -> None:
-        if b >= 1:
-            raise Boom()
-
-    with pytest.raises(Boom):
-        batched_resumable_extract(
-            spark, webdocs, out, n_batches=6, on_batch=crash_after_two
-        )
-    committed = spark.read.parquet(f"{out}/parsed")
-    n_committed = committed.count()
-    assert 0 < n_committed < n_total
-
-    # resume: only the remainder is parsed (track via batch callback)
-    final = batched_resumable_extract(spark, webdocs, out, n_batches=6)
-    assert final.count() == n_total
-    assert final.select("url").distinct().count() == n_total
-    # idempotent: a third run appends nothing
-    again = batched_resumable_extract(spark, webdocs, out, n_batches=6)
-    assert again.count() == n_total
 
 
 def test_scan_partitioned_matches_salted(spark, tmp_path, webdocs, parsed):

@@ -10,10 +10,6 @@ from pyspark.sql import functions as F
 from pdf_parser_spark.engine.corpus import synthesize_webdocs
 from pdf_parser_spark.engine.extractor import parse_webdocs, spans_view
 from pdf_parser_spark.engine.sinks import hierarchical_json, write_hierarchical_json
-from pdf_parser_spark.streaming.ingest import (
-    extracted_stream_view,
-    streaming_extract,
-)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -72,43 +68,6 @@ def test_write_hierarchical_json(spark, webdocs, tmp_path):
     for f in (tmp_path / "json_out").glob("*.json"):
         lines += [json.loads(l) for l in f.read_text().splitlines()]
     assert lines and all("text" in r and "details" in r for r in lines)
-
-
-def test_streaming_extract_drains_and_resumes(spark, webdocs, tmp_path):
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    first = webdocs.where(F.col("doc_id") < 100)
-    first.write.mode("overwrite").parquet(src)
-
-    q = streaming_extract(spark, src, out, ckpt, available_now=True)
-    q.awaitTermination(120)
-    n1 = extracted_stream_view(spark, out).count()
-    assert n1 == first.count()
-
-    # drop MORE files into the source dir; a new availableNow run picks
-    # up only the delta (checkpoint-driven exactly-once)
-    second = webdocs.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 150))
-    second.write.mode("append").parquet(src)
-    q2 = streaming_extract(spark, src, out, ckpt, available_now=True)
-    q2.awaitTermination(120)
-    view = extracted_stream_view(spark, out)
-    assert view.count() == first.count() + second.count()
-    assert view.select("url").distinct().count() == view.count()
-    # extraction semantics identical to batch
-    assert view.where(F.col("text") == "").count() == 0
-    # the stream keeps spans and items: non-empty on every PDF row,
-    # empty (not null) lists on HTML rows
-    raw = spark.read.parquet(out)
-    pdf = raw.where(F.col("kind") == "pdf")
-    assert pdf.count() > 0
-    assert pdf.where(
-        (F.size("spans") < 1)
-        | (F.size("items") < 1)
-        | (F.col("n_spans") != F.size("spans"))
-    ).count() == 0
-    html = raw.where(F.col("kind") == "html")
-    assert html.where((F.size("spans") != 0) | F.col("n_spans").isNull()).count() == 0
 
 
 def _mini_webdocs(spark, rows):

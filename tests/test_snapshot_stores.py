@@ -114,7 +114,8 @@ def test_crash_after_publish_is_adopted_by_next_writer(tmp_path):
     log = SnapshotLog(root, store=store)
     with pytest.raises(SimulatedCrash):
         log.commit(7, [], {"n_docs": 1})
-    assert log.latest_version() is None  # pointer never advanced
+    assert store.read_pointer("LATEST") is None  # pointer never advanced
+    assert log.latest_version() == 0  # the head is the published v0
 
     v = log.commit(8, [], {"n_docs": 2})
     assert v == 1  # adopted the orphan at v0, landed at v1
@@ -125,16 +126,17 @@ def test_crash_after_publish_is_adopted_by_next_writer(tmp_path):
 def test_rerun_of_crashed_commit_is_not_doubled(tmp_path):
     """Writer dies after publishing epoch 1's manifest but before the
     pointer advanced (a SIGKILL right after the manifest lands). The
-    restart's resume check reads the lagging pointer, misses epoch 1,
-    rewrites the same path and commits it again: the commit must adopt
-    the orphan as itself, not chain a second copy of the epoch."""
+    restart's resume check sees epoch 1 at the head; a writer that
+    commits the same path anyway must get the orphan back as itself,
+    not chain a second copy of the epoch."""
     store = MemoryStore(fail_after_publish=lambda name: name == "v1.json")
     log = SnapshotLog(str(tmp_path / "replay"), store=store)
     p0, p1 = "data/epoch=0", "data/epoch=1"
     assert log.commit(0, [p0], {"n_docs": 3}, kind="epoch") == 0
     with pytest.raises(SimulatedCrash):
         log.commit(1, [p1], {"n_docs": 4}, kind="epoch")
-    assert log.committed_buckets(kind="epoch") == {0}  # pointer lags
+    assert store.read_pointer("LATEST") == 0  # pointer lags
+    assert log.committed_buckets(kind="epoch") == {0, 1}  # the head does not
 
     store.fail_after_publish = None
     assert log.commit(1, [p1], {"n_docs": 4}, kind="epoch") == 1
@@ -149,6 +151,36 @@ def test_rerun_of_crashed_commit_is_not_doubled(tmp_path):
     assert [(s.kind, s.bucket) for s in log.chain()] == [
         ("epoch", 0), ("epoch", 1), ("epoch", 2), ("extract", 2),
     ]
+
+
+def test_head_rolls_past_lagging_pointer(spark, tmp_path):
+    """A writer killed after publishing v1 but before advancing LATEST
+    leaves a complete commit. Readers, GC and the next writer must all
+    see it: the bucket counts as committed, its data directory survives
+    orphan GC, and the table reads whole after the next commit."""
+    store = MemoryStore(fail_after_publish=lambda name: name == "v1.json")
+    out = str(tmp_path / "lag")
+    log = SnapshotLog(out, store=store)
+    paths = {}
+    for b in (0, 1):
+        paths[b] = os.path.join(out, "data", f"bucket={b}")
+        spark.createDataFrame(
+            [(f"u{b}", b)], "url string, n int"
+        ).write.mode("overwrite").parquet(paths[b])
+    log.commit(0, [paths[0]], {"n_docs": 1}, n_buckets=2)
+    with pytest.raises(SimulatedCrash):
+        log.commit(1, [paths[1]], {"n_docs": 1}, n_buckets=2)
+    assert store.read_pointer("LATEST") == 0
+
+    assert log.committed_buckets() == {0, 1}
+    assert log.remove_orphans() == []
+    assert os.path.isdir(paths[1])
+
+    # the next, unrelated commit chains on top of v1
+    store.fail_after_publish = None
+    assert log.commit(0, [], {"n_docs": 0}, kind="epoch") == 2
+    assert log.committed_buckets(kind="extract") == {0, 1}
+    assert {r.url for r in log.read(spark).collect()} == {"u0", "u1"}
 
 
 def test_loser_never_deletes_foreign_complete_manifest(tmp_path):

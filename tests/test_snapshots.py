@@ -220,6 +220,23 @@ def test_streaming_sink_commits_snapshots_exactly_once(spark, webdocs, tmp_path)
     lin = log.lineage(spark).collect()
     assert sum(r.n_docs for r in lin) == n1 + second.count()
     assert all(r.op == "append" for r in lin)
+    # epoch commits carry the same url stats and Bloom as extract ones
+    assert all(s.stats["url"] and s.bloom for s in log.chain())
+
+    # extraction semantics identical to batch
+    table = log.read(spark)
+    assert table.where(F.col("text") == "").count() == 0
+    # the stream keeps spans and items: non-empty on every PDF row,
+    # empty (not null) lists on HTML rows
+    pdf = table.where(F.col("kind") == "pdf")
+    assert pdf.count() > 0
+    assert pdf.where(
+        (F.size("spans") < 1)
+        | (F.size("items") < 1)
+        | (F.col("n_spans") != F.size("spans"))
+    ).count() == 0
+    html = table.where(F.col("kind") == "html")
+    assert html.where((F.size("spans") != 0) | F.col("n_spans").isNull()).count() == 0
 
 
 def test_commit_conflict_rolls_forward(spark, tmp_path):
