@@ -327,6 +327,10 @@ class SnapshotLog:
         self.output_dir = output_dir
         self.log_dir = os.path.join(output_dir, "_snapshots")
         self.store = store if store is not None else PosixStore(self.log_dir)
+        # parsed manifests by version: a published manifest never
+        # changes, so each is read once per log (the streaming sink
+        # walks the chain every epoch)
+        self._snapshots: dict[int, Snapshot] = {}
 
     # -- reads ---------------------------------------------------------
 
@@ -347,11 +351,16 @@ class SnapshotLog:
             v = nxt
 
     def snapshot(self, version: int) -> Snapshot:
+        """The manifest of *version*, parsed. Memoized: only a manifest
+        that reads and parses is kept, so missing or torn legacy debris
+        (which :meth:`commit` may reclaim) is re-read every time."""
+        if version in self._snapshots:
+            return self._snapshots[version]
         raw = self.store.read(f"v{version}.json")
         if raw is None:
             raise FileNotFoundError(f"v{version}.json")
         d = json.loads(raw)
-        return Snapshot(
+        s = Snapshot(
             version=d["version"],
             parent=d["parent"],
             bucket=d["bucket"],
@@ -365,6 +374,8 @@ class SnapshotLog:
             kind=d.get("kind", "extract"),
             bloom=d.get("bloom"),
         )
+        self._snapshots[version] = s
+        return s
 
     def chain(self, version: int | None = None) -> list[Snapshot]:
         """Snapshots visible at *version* (default latest), oldest first."""

@@ -39,7 +39,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import shingles, tokens
+from .textstats import ident
 
 __all__ = [
     "wrap_chunks",
@@ -188,28 +188,23 @@ def paragraph_dedup(
     small by construction after boilerplate removal). One final
     groupBy(doc) reassembles survivors.
     """
-    paras = df.select(
-        F.col(id_col),
-        F.posexplode(F.col(paras_col)).alias("pos", "para"),
-    ).withColumn("h", F.md5(F.col("para")))
+    i = ident(id_col)
+    paras = df.selectExpr(
+        i, f"posexplode({ident(paras_col)}) AS (pos, para)"
+    ).selectExpr(i, "pos", "para", "md5(para) AS h")
     keeper = paras.groupBy("h").agg(
-        F.min(
-            F.struct(F.col(id_col).alias("kid"), F.col("pos").alias("kpos"))
-        ).alias("k")
+        F.expr(f"min(struct({i} AS kid, pos AS kpos)) AS k")
     )
-    flagged = paras.join(keeper, "h").withColumn(
-        "keep",
-        (F.col(id_col) == F.col("k.kid")) & (F.col("pos") == F.col("k.kpos")),
-    )
-    kept_struct = F.array_sort(
-        F.collect_list(F.when(F.col("keep"), F.struct("pos", "para")))
+    flagged = paras.join(keeper, "h").selectExpr(
+        "*", f"{i} = k.kid AND pos = k.kpos AS keep"
     )
     return flagged.groupBy(id_col).agg(
-        F.concat_ws(
-            "\n\n", F.transform(kept_struct, lambda s: s["para"])
-        ).alias("clean_text"),
-        F.sum(F.col("keep").cast("int")).cast("int").alias("n_kept"),
-        F.sum((~F.col("keep")).cast("int")).cast("int").alias("n_dropped"),
+        F.expr(
+            "concat_ws('\\n\\n', transform(array_sort(collect_list("
+            "CASE WHEN keep THEN struct(pos, para) END)), s -> s.para)) AS clean_text"
+        ),
+        F.expr("CAST(sum(CAST(keep AS INT)) AS INT) AS n_kept"),
+        F.expr("CAST(sum(CAST(NOT keep AS INT)) AS INT) AS n_dropped"),
     )
 
 

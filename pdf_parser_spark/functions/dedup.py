@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .textstats import shingles, tokens
+from .textstats import ident, shingles, shingles_sql, tokens, tokens_sql
 
 HEX_DIGITS = "0123456789abcdef"
 
@@ -56,20 +56,20 @@ def exploded_shingles(
     sort by (id, pos), then pure map-side work. id_col may be a tuple of
     columns (compound document key).
     """
-    ids = [id_col] if isinstance(id_col, str) else list(id_col)
-    tok = df.select(
-        *ids, F.posexplode(tokens(text_col)).alias("pos", "tok")
+    ids = [ident(i) for i in ([id_col] if isinstance(id_col, str) else id_col)]
+    tok = df.selectExpr(
+        *ids, f"posexplode({tokens_sql(ident(text_col))}) AS (pos, tok)"
     )
-    w = Window.partitionBy(*ids).orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
+    w = f"OVER (PARTITION BY {', '.join(ids)} ORDER BY pos)"
+    parts = ["tok"] + [f"lead(tok, {j}) {w}" for j in range(1, k)]
     return (
-        tok.select(
+        tok.selectExpr(
             *ids,
-            F.concat_ws(" ", *parts).alias("shingle"),
-            F.lead("tok", k - 1).over(w).alias("_tail"),
+            f"concat_ws(' ', {', '.join(parts)}) AS shingle",
+            f"lead(tok, {k - 1}) {w} AS _tail",
         )
-        .where(F.col("_tail").isNotNull())
-        .drop("_tail")
+        .where("_tail IS NOT NULL")
+        .selectExpr(*ids, "shingle")
     )
 
 
@@ -98,17 +98,15 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     return df.join(w_keep, id_col, "left_semi")
 
 
-def _oph_bucket(hash_col: Column, num_hashes: int) -> Column:
-    """One-permutation-hashing slot for an md5 hex: leading byte value
-    (two hex digits, 0..255) mod `num_hashes`. Works for any slot count
-    up to 256."""
+def _oph_bucket(hash_sql: str, num_hashes: int) -> str:
+    """One-permutation-hashing slot (SQL text) for an md5 hex: leading
+    byte value (two hex digits, 0..255) mod `num_hashes`. Works for any
+    slot count up to 256."""
+    hx = f"'{HEX_DIGITS}'"
     return (
-        (
-            (F.instr(F.lit(HEX_DIGITS), F.substring(hash_col, 1, 1)) - 1) * 16
-            + (F.instr(F.lit(HEX_DIGITS), F.substring(hash_col, 2, 1)) - 1)
-        )
-        % num_hashes
-    ).cast("int")
+        f"CAST(((instr({hx}, substring({hash_sql}, 1, 1)) - 1) * 16 "
+        f"+ (instr({hx}, substring({hash_sql}, 2, 1)) - 1)) % {num_hashes} AS INT)"
+    )
 
 
 #: sentinel for an empty OPH slot; sorts after every hex digest so a
@@ -119,9 +117,9 @@ def _oph_bucket(hash_col: Column, num_hashes: int) -> Column:
 OPH_EMPTY = "~empty"
 
 
-def rotation_densify(slot_values: "list[Column]") -> "list[Column]":
+def rotation_densify(slot_values: "list[str]") -> "list[str]":
     """Rotation densification (Shrivastava & Li, ICML 2014) of an OPH
-    signature given as one Column per slot.
+    signature given as one SQL expression per slot.
 
     A filled slot is returned unchanged.  An empty slot i borrows the
     value of the nearest filled slot to its circular right, j=(i+t)%n,
@@ -139,58 +137,49 @@ def rotation_densify(slot_values: "list[Column]") -> "list[Column]":
     signature columns.
     """
     n = len(slot_values)
-    out: "list[Column]" = []
+    empty = f"'{OPH_EMPTY}'"
+    out: "list[str]" = []
     for i in range(n):
-        # nested when-chain built inside-out so the SMALLEST t is the
-        # outermost (first-checked) branch: nearest filled slot wins.
-        borrowed: Column = F.lit(OPH_EMPTY)
-        for t in range(n - 1, 0, -1):
-            j = (i + t) % n
-            borrowed = F.when(
-                slot_values[j] != OPH_EMPTY,
-                F.concat(slot_values[j], F.lit(f"@{t}")),
-            ).otherwise(borrowed)
+        # one CASE whose branches run t = 1..n-1: the nearest filled
+        # slot to the right wins
+        borrowed = " ".join(
+            f"WHEN {slot_values[(i + t) % n]} != {empty} "
+            f"THEN concat({slot_values[(i + t) % n]}, '@{t}')"
+            for t in range(1, n)
+        )
         out.append(
-            F.when(slot_values[i] != OPH_EMPTY, slot_values[i]).otherwise(
-                borrowed
-            )
+            f"CASE WHEN {slot_values[i]} != {empty} THEN {slot_values[i]} "
+            f"{borrowed} ELSE {empty} END"
         )
     return out
 
 
 def minhash_signature(
-    tok_col: Column,
+    text_col: str,
     num_hashes: int = 8,
     shingle_k: int = 3,
     densify: str = "naive",
 ) -> Column:
-    """MinHash signature as array<string> of lexicographic-min md5 hexes.
+    """MinHash signature of a text column as array<string> of
+    lexicographic-min md5 hexes.
 
     One-permutation hashing: md5 per shingle, bucketed into
     `num_hashes` slots by its leading byte, min per slot — all JVM-side
     expressions, no shuffle, no explode of the shingle set. Same bits
     as the bulk path (lsh_candidate_pairs); use the bulk path for
-    corpus-scale work (Catalyst inlines `hs` once per slot here, so
-    this form still evaluates num_hashes×|sh| digests).
+    corpus-scale work (`hs` is inlined once per slot here, so this form
+    still evaluates num_hashes×|sh| digests).
     """
-    hs = F.transform(
-        F.array_distinct(shingles(tok_col, shingle_k)), lambda x: F.md5(x)
-    )
-
-    def slot_min(s: int) -> Column:
-        # closure factory: the lambda must take exactly one argument —
-        # a 2-arg lambda is treated as (element, index) by Spark.
-        return F.coalesce(
-            F.array_min(
-                F.filter(hs, lambda h: _oph_bucket(h, num_hashes) == s)
-            ),
-            F.lit(OPH_EMPTY),
-        )
-
-    slots = [slot_min(s) for s in range(num_hashes)]
+    sh = shingles_sql(tokens_sql(ident(text_col)), shingle_k)
+    hs = f"transform(array_distinct({sh}), x -> md5(x))"
+    slots = [
+        f"coalesce(array_min(filter({hs}, h -> {_oph_bucket('h', num_hashes)} = {s})), "
+        f"'{OPH_EMPTY}')"
+        for s in range(num_hashes)
+    ]
     if densify == "rotation":
         slots = rotation_densify(slots)
-    return F.array(*slots)
+    return F.expr(f"array({', '.join(slots)})")
 
 
 def oph_signature_table(
@@ -212,25 +201,21 @@ def oph_signature_table(
     the expression form (minhash_signature) — equivalence is pinned in
     tests. Documents with fewer than shingle_k tokens produce no row.
     """
+    i = ident(id_col)
     sh = exploded_shingles(df, text_col, id_col, shingle_k)
-    hashed = sh.select(id_col, F.md5("shingle").alias("h")).select(
-        id_col, "h", _oph_bucket(F.col("h"), num_hashes).alias("slot")
+    hashed = sh.selectExpr(i, "md5(shingle) AS h").selectExpr(
+        i, "h", f"{_oph_bucket('h', num_hashes)} AS slot"
     )
-    sig = hashed.groupBy(id_col).agg(
-        *[
-            F.coalesce(
-                F.min(F.when(F.col("slot") == s, F.col("h"))),
-                F.lit(OPH_EMPTY),
-            ).alias(f"s{s}")
-            for s in range(num_hashes)
-        ]
+    # the slot minima travel as one struct: one expression to build
+    mins = ", ".join(
+        f"coalesce(min(CASE WHEN slot = {s} THEN h END), '{OPH_EMPTY}') AS s{s}"
+        for s in range(num_hashes)
     )
+    sig = hashed.groupBy(id_col).agg(F.expr(f"struct({mins}) AS _sig"))
+    slots = [f"_sig.s{s}" for s in range(num_hashes)]
     if densify == "rotation":
-        dens = rotation_densify([F.col(f"s{s}") for s in range(num_hashes)])
-        sig = sig.select(
-            id_col, *[c.alias(f"s{s}") for s, c in enumerate(dens)]
-        )
-    return sig
+        slots = rotation_densify(slots)
+    return sig.selectExpr(i, *[f"{c} AS s{s}" for s, c in enumerate(slots)])
 
 
 def lsh_candidate_pairs(
@@ -255,27 +240,17 @@ def lsh_candidate_pairs(
     their *filled* slots plus mutually-empty ones.
     """
     rows_per_band = num_hashes // bands
+    i = ident(id_col)
     sig = oph_signature_table(
         df, text_col, id_col, num_hashes, shingle_k, densify=densify
     )
-    band = sig.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        "|",
-                        F.lit(f"b{b}"),
-                        *[
-                            F.col(f"s{b * rows_per_band + r}")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band_key"),
+    keys = ", ".join(
+        f"concat_ws('|', 'b{b}', "
+        + ", ".join(f"s{b * rows_per_band + r}" for r in range(rows_per_band))
+        + ")"
+        for b in range(bands)
     )
+    band = sig.selectExpr(i, f"explode(array({keys})) AS band_key")
     # Materialize the band table: a self-join otherwise evaluates the
     # whole shingle→signature subplan twice (once per side). At cluster
     # scale the same role is played by writing `band` to a table before
@@ -284,14 +259,11 @@ def lsh_candidate_pairs(
     # garbage-collected — a bare persist() leaks storage memory across
     # repeated calls in a long-lived session (bench loops, notebooks).
     band = band.localCheckpoint(eager=True)
-    a = band.alias("a")
-    b = band.alias("b")
     return (
-        a.join(b, "band_key")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id")
-        )
+        band.alias("a")
+        .join(band.alias("b"), "band_key")
+        .where(f"a.{i} < b.{i}")
+        .selectExpr(f"a.{i} AS a_id", f"b.{i} AS b_id")
         .distinct()
     )
 
@@ -312,14 +284,9 @@ def jaccard_pairs(
     equi-condition (e.g. LSH band or direct id pairing) so the join
     hash-partitions; a theta-cond degrades to a broadcast NLJ.
     """
-    a = left.select(
-        F.col(id_col).alias("a_id"),
-        F.array_distinct(shingles(tokens(text_col), shingle_k)).alias("sh_a"),
-    ).alias("a")
-    b = right.select(
-        F.col(id_col).alias("b_id"),
-        F.array_distinct(shingles(tokens(text_col), shingle_k)).alias("sh_b"),
-    ).alias("b")
+    sh = f"array_distinct({shingles_sql(tokens_sql(ident(text_col)), shingle_k)})"
+    a = left.selectExpr(f"{ident(id_col)} AS a_id", f"{sh} AS sh_a").alias("a")
+    b = right.selectExpr(f"{ident(id_col)} AS b_id", f"{sh} AS sh_b").alias("b")
     return a.join(b, join_cond).select(
         "a_id",
         "b_id",
@@ -600,6 +567,13 @@ def embedding_neardup_bucketed(
     )
 
 
+#: per-row repetition counts over a projected shingle array ``_sh``
+REPETITION_COUNTS_SQL = {
+    "n_shingles": "CAST(size(_sh) AS INT)",
+    "n_distinct": "CAST(size(array_distinct(_sh)) AS INT)",
+}
+
+
 def with_repetition_counts(
     df: DataFrame, text_col: str = "text", k: int = 3
 ) -> DataFrame:
@@ -607,14 +581,15 @@ def with_repetition_counts(
     ``n_distinct`` (distinct ones) per row, both int. A signal within
     one document needs no co-location, so this is a per-row projection
     — no explode, no shuffle, no join back. Rows with fewer than k
-    tokens (including null and blank text) get (0, 0). The shingle
-    array is projected once and read twice (Catalyst does not inline a
-    non-cheap expression into two consumers)."""
+    tokens (including null and blank text) get (0, 0). The token and
+    shingle arrays are each projected once and read several times
+    (Catalyst does not inline a non-cheap expression into two
+    consumers), so each row is tokenized once."""
+    keep = [ident(c) for c in df.columns if c not in REPETITION_COUNTS_SQL]
     return (
-        df.withColumn("_sh", shingles(tokens(text_col), k))
-        .withColumn("n_shingles", F.size("_sh").cast("int"))
-        .withColumn("n_distinct", F.size(F.array_distinct("_sh")).cast("int"))
-        .drop("_sh")
+        df.selectExpr(*keep, f"{tokens_sql(ident(text_col))} AS _t")
+        .selectExpr(*keep, f"{shingles_sql('_t', k)} AS _sh")
+        .selectExpr(*keep, *[f"{e} AS {c}" for c, e in REPETITION_COUNTS_SQL.items()])
     )
 
 
@@ -627,20 +602,15 @@ def repetition_stats(
 
     Map-only (see :func:`with_repetition_counts`): one output row per
     input row, ratio 0.0 when a document has no shingles."""
-    counts = with_repetition_counts(df.select(id_col, text_col), text_col, k)
-    return counts.select(
-        id_col,
+    counts = with_repetition_counts(
+        df.selectExpr(ident(id_col), ident(text_col)), text_col, k
+    )
+    return counts.selectExpr(
+        ident(id_col),
         "n_shingles",
         "n_distinct",
-        F.when(F.col("n_shingles") == 0, F.lit(0.0))
-        .otherwise(
-            F.round(
-                (F.col("n_shingles") - F.col("n_distinct"))
-                / F.col("n_shingles").cast("double"),
-                4,
-            )
-        )
-        .alias("rep_ratio"),
+        "CASE WHEN n_shingles = 0 THEN 0.0D ELSE round((n_shingles - n_distinct) "
+        "/ CAST(n_shingles AS DOUBLE), 4) END AS rep_ratio",
     )
 
 
@@ -672,34 +642,36 @@ def connected_components(
     when ``max_iter`` rounds end without a round that changed nothing —
     unconverged labels are wrong, not approximate.
     """
-    e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    e = pairs.selectExpr(f"{ident(a_col)} AS src", f"{ident(b_col)} AS dst")
     edges = (
-        e.unionAll(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+        e.unionAll(e.selectExpr("dst AS src", "src AS dst"))
         .distinct()
         .localCheckpoint(eager=True)
     )
     labels = (
-        edges.select(F.col("src").alias("id"))
+        edges.selectExpr("src AS id")
         .distinct()
-        .withColumn("comp", F.col("id"))
+        .selectExpr("id", "id AS comp")
         .localCheckpoint(eager=True)
     )
-    no_old = F.lit(None).cast(labels.schema["comp"].dataType).alias("old")
+    no_old = f"CAST(NULL AS {labels.schema['comp'].dataType.simpleString()}) AS old"
     for _ in range(max_iter):
+        # both sides are corpus-sized; the merge hint pins the join the
+        # planner picks at scale, so AQE does not turn it into a
+        # broadcast whose build side depends on which shuffle finished
+        # first (each variant is new generated code to compile)
         msgs = edges.join(
-            labels.withColumnRenamed("id", "src"), "src"
-        ).select(F.col("dst").alias("id"), "comp", no_old)
+            labels.selectExpr("id AS src", "comp").hint("merge"), "src"
+        ).selectExpr("dst AS id", "comp", no_old)
         rnd = (
-            labels.select("id", "comp", F.col("comp").alias("old"))
+            labels.selectExpr("id", "comp", "comp AS old")
             .unionAll(msgs)
             .groupBy("id")
-            .agg(F.min("comp").alias("comp"), F.max("old").alias("old"))
-            .select("id", "comp", (F.col("comp") != F.col("old")).alias("changed"))
+            .agg(F.expr("min(comp) AS comp"), F.expr("max(old) AS old"))
+            .selectExpr("id", "comp", "comp != old AS changed")
             .localCheckpoint(eager=True)
         )
-        labels = rnd.select("id", "comp")
+        labels = rnd.selectExpr("id", "comp")
         if rnd.where("changed").isEmpty():
             return labels
     raise RuntimeError(
@@ -825,7 +797,7 @@ def duplicate_substring_spans(
     """
     sh = df.select(
         F.col(id_col),
-        F.posexplode(shingles(tokens(text_col), k)).alias("pos", "gram"),
+        F.posexplode(shingles(text_col, k)).alias("pos", "gram"),
     ).withColumn("gh", F.md5("gram")).drop("gram")
     if min_docs == 2:
         # the dedup case: "shared by >=2 distinct docs" ≡ min(doc) !=

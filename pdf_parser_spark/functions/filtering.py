@@ -6,7 +6,8 @@ Everything here is built-in-expression Spark (windows, string and
 array expressions) — no Python UDFs — so the plans stay inside
 whole-stage codegen. Only ``host_cap`` shuffles, on slim (host, id)
 projections; the quality gate and Gopher rules are per-row projections
-with no Exchange.
+with no Exchange, built as SQL text (one ``selectExpr`` per projection
+layer, see :mod:`.textstats`).
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import dedup, textstats
+from .textstats import ident, padded_sql, shingles_sql, tokens_sql
 
 
 def hash_order_key(id_col: Column | str) -> Column:
@@ -91,31 +93,42 @@ def quality_gate(
     5. ``kept``
 
     Map-only: every signal, the repetition counts included
-    (:func:`dedup.with_repetition_counts`), is an expression over the
-    document's own text — no shuffle, no join. Output: (id, reason,
-    keep).
+    (:data:`dedup.REPETITION_COUNTS_SQL`), is an expression over
+    the document's own text — no shuffle, no join. The token array and
+    the padded text are projected once per row and feed every signal;
+    the language scores are built only when ``lang_col`` is set.
+    Output: (id, reason, keep).
     """
-    signals = textstats.with_lang_id(
-        textstats.with_quality(df, text_col=text_col), text_col=text_col
+    t = ident(text_col)
+    ids = [ident(id_col)] + ([ident(lang_col)] if lang_col is not None else [])
+    signals = textstats.quality_signals_sql(t, "_t", "_p")
+    lang = textstats.lang_scores_sql("_p") if lang_col is not None else {}
+    base = df.selectExpr(
+        *ids, t, f"{tokens_sql(t)} AS _t", f"{padded_sql(t)} AS _p"
+    ).selectExpr(
+        *ids,
+        *[f"{e} AS {c}" for c, e in {**signals, **lang}.items()],
+        f"{shingles_sql('_t', 3)} AS _sh",
     )
-    j = dedup.with_repetition_counts(signals, text_col=text_col, k=3)
-    repetitive = (
-        (F.col("n_shingles") - F.col("n_distinct")) * rep_den
-        > F.col("n_shingles") * rep_num
+    scored = base.selectExpr(
+        *ids,
+        "n_tokens",
+        f"{textstats.QUALITY_SQL} AS quality",
+        *([f"{textstats.PRED_LANG_SQL} AS pred_lang"] if lang_col is not None else []),
+        *[f"{e} AS {c}" for c, e in dedup.REPETITION_COUNTS_SQL.items()],
     )
-    reason = F.when(F.col("n_tokens") < min_tokens, F.lit("too_short")).when(
-        repetitive, F.lit("repetitive")
-    ).when(F.col("quality") == "low", F.lit("low_quality"))
-    if lang_col is not None:
-        reason = reason.when(
-            F.col("pred_lang") != F.col(lang_col), F.lit("lang_mismatch")
-        )
-    reason = reason.otherwise(F.lit("kept"))
-    return j.select(
-        id_col,
-        reason.alias("reason"),
-        (reason == "kept").cast("int").alias("keep"),
+    mismatch = (
+        f"WHEN pred_lang != {ident(lang_col)} THEN 'lang_mismatch' "
+        if lang_col is not None
+        else ""
     )
+    return scored.selectExpr(
+        ident(id_col),
+        f"CASE WHEN n_tokens < {min_tokens} THEN 'too_short' "
+        f"WHEN (n_shingles - n_distinct) * {rep_den} > n_shingles * {rep_num} "
+        "THEN 'repetitive' WHEN quality = 'low' THEN 'low_quality' "
+        f"{mismatch}ELSE 'kept' END AS reason",
+    ).selectExpr(ident(id_col), "reason", "CAST(reason = 'kept' AS INT) AS keep")
 
 
 def gopher_rules(
@@ -145,79 +158,48 @@ def gopher_rules(
     the document's own lines; zero exchanges, fully codegen'd, the
     cheapest possible 100 TB pass.
     """
-    ls = F.col(lines_col)
-    words = F.flatten(
-        F.transform(
-            ls, lambda l: F.filter(F.split(l, " "), lambda w: w != F.lit(""))
+    i = ident(id_col)
+    fracs = ["mean_word_len_e6", "alpha_frac_e6", "bullet_frac_e6", "ellipsis_frac_e6"]
+    return (
+        df.selectExpr(
+            i,
+            f"{ident(lines_col)} AS _ls",
+            f"flatten(transform({ident(lines_col)}, "
+            "l -> filter(split(l, ' '), w -> w != ''))) AS _ws",
         )
-    )
-    out = (
-        df.select(F.col(id_col), ls.alias("_ls"), words.alias("_ws"))
-        .withColumn("n_words", F.size("_ws").cast("long"))
-        .withColumn("n_lines", F.size("_ls").cast("long"))
-        .withColumn(
-            "_sum_len",
-            F.aggregate(
-                "_ws", F.lit(0).cast("long"), lambda a, w: a + F.length(w)
-            ),
+        .selectExpr(
+            i,
+            "CAST(size(_ws) AS BIGINT) AS n_words",
+            "CAST(size(_ls) AS BIGINT) AS n_lines",
+            "aggregate(_ws, CAST(0 AS BIGINT), (a, w) -> a + length(w)) AS _sum_len",
+            "CAST(size(filter(_ws, w -> w RLIKE '[a-z]')) AS BIGINT) AS _n_alpha",
+            "CAST(size(filter(_ls, l -> startswith(l, '- '))) AS BIGINT) AS _n_bullet",
+            "CAST(size(filter(_ls, l -> endswith(l, '...'))) AS BIGINT) AS _n_ellipsis",
         )
-        .withColumn(
-            "_n_alpha",
-            F.size(F.filter("_ws", lambda w: w.rlike("[a-z]"))).cast("long"),
+        .selectExpr(
+            i,
+            "n_words",
+            "n_lines",
+            *[
+                f"CASE WHEN {den} > 0 THEN (1000000 * {num}) div {den} ELSE 0 END AS {c}"
+                for c, num, den in zip(
+                    fracs,
+                    ("_sum_len", "_n_alpha", "_n_bullet", "_n_ellipsis"),
+                    ("n_words", "n_words", "n_lines", "n_lines"),
+                )
+            ],
         )
-        .withColumn(
-            "_n_bullet",
-            F.size(F.filter("_ls", lambda l: l.startswith("- "))).cast("long"),
+        .selectExpr(
+            i,
+            "n_words",
+            "n_lines",
+            *fracs,
+            f"n_words BETWEEN {min_words} AND {max_words} "
+            f"AND mean_word_len_e6 BETWEEN {min_mean_len_e6} AND {max_mean_len_e6} "
+            f"AND alpha_frac_e6 >= {min_alpha_e6} "
+            f"AND bullet_frac_e6 <= {max_bullet_e6} "
+            f"AND ellipsis_frac_e6 <= {max_ellipsis_e6} AS passes",
         )
-        .withColumn(
-            "_n_ellipsis",
-            F.size(F.filter("_ls", lambda l: l.endswith("..."))).cast("long"),
-        )
-        .withColumn(
-            "mean_word_len_e6",
-            F.expr(
-                "CASE WHEN n_words > 0 "
-                "THEN (1000000 * _sum_len) div n_words ELSE 0 END"
-            ),
-        )
-        .withColumn(
-            "alpha_frac_e6",
-            F.expr(
-                "CASE WHEN n_words > 0 "
-                "THEN (1000000 * _n_alpha) div n_words ELSE 0 END"
-            ),
-        )
-        .withColumn(
-            "bullet_frac_e6",
-            F.expr(
-                "CASE WHEN n_lines > 0 "
-                "THEN (1000000 * _n_bullet) div n_lines ELSE 0 END"
-            ),
-        )
-        .withColumn(
-            "ellipsis_frac_e6",
-            F.expr(
-                "CASE WHEN n_lines > 0 "
-                "THEN (1000000 * _n_ellipsis) div n_lines ELSE 0 END"
-            ),
-        )
-    )
-    passes = (
-        F.col("n_words").between(min_words, max_words)
-        & F.col("mean_word_len_e6").between(min_mean_len_e6, max_mean_len_e6)
-        & (F.col("alpha_frac_e6") >= min_alpha_e6)
-        & (F.col("bullet_frac_e6") <= max_bullet_e6)
-        & (F.col("ellipsis_frac_e6") <= max_ellipsis_e6)
-    )
-    return out.select(
-        id_col,
-        "n_words",
-        "n_lines",
-        "mean_word_len_e6",
-        "alpha_frac_e6",
-        "bullet_frac_e6",
-        "ellipsis_frac_e6",
-        passes.alias("passes"),
     )
 
 

@@ -20,10 +20,8 @@ broadcast the JSON sink uses (engine/sinks.py global_index).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from .textstats import ws_token_count
+from .textstats import ident, ws_token_count_sql
 
 __all__ = ["pack_sequences"]
 
@@ -51,39 +49,30 @@ def pack_sequences(
     statistics instead (``derive_n_shards(stats_total, target)`` +
     explicit n_shards), which also pins the output-file layout.
     """
-    toks = df.select(
-        F.col(id_col),
-        F.col(host_col),
-        ws_token_count(text_col).alias("n_tokens"),
+    i, h = ident(id_col), ident(host_col)
+    toks = df.selectExpr(
+        i, h, f"{ws_token_count_sql(ident(text_col))} AS n_tokens"
     )
     if n_shards is None:
         from .sampling import derive_n_shards
 
-        total = toks.agg(F.sum("n_tokens")).collect()[0][0] or 0
+        total = toks.selectExpr("sum(n_tokens)").collect()[0][0] or 0
         n_shards = derive_n_shards(int(total), target_tokens_per_shard)
-    d = toks.select(
-        id_col,
-        host_col,
-        (F.col(id_col) % n_shards).cast("int").alias("shard"),
-        "n_tokens",
-    )
     w = (
-        Window.partitionBy(host_col, "shard")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    start = (F.sum("n_tokens").over(w) - F.col("n_tokens")).cast("bigint")
-    placed = d.select(
-        id_col,
-        host_col,
-        "shard",
-        "n_tokens",
-        start.alias("token_start"),
+        f"OVER (PARTITION BY {h}, shard ORDER BY {i} "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
     # `div`, not `/`: float division would lose int64 exactness once
     # token_start exceeds 2^53 (a 10^12-doc corpus passes that)
-    return placed.select(
-        "*",
-        F.expr(f"token_start div {seq_len}").cast("bigint").alias("seq_id"),
-        (F.col("token_start") % seq_len).cast("int").alias("seq_offset"),
+    return (
+        toks.selectExpr(i, h, f"CAST({i} % {n_shards} AS INT) AS shard", "n_tokens")
+        .selectExpr(
+            i, h, "shard", "n_tokens",
+            f"CAST(sum(n_tokens) {w} - n_tokens AS BIGINT) AS token_start",
+        )
+        .selectExpr(
+            "*",
+            f"CAST(token_start div {seq_len} AS BIGINT) AS seq_id",
+            f"CAST(token_start % {seq_len} AS INT) AS seq_offset",
+        )
     )

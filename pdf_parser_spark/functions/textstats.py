@@ -1,11 +1,18 @@
 """Text analysis for corpus curation: token counting, quality scoring,
 language-ID, document fingerprinting.
 
-All pure Spark built-in expressions (no UDFs): each helper returns a
-Column (or adds columns), stays inside whole-stage codegen, and scales
-linearly with no shuffle. Integer/count outputs are preferred over
-ratios so results are exactly reproducible across engines (the DuckDB
-oracle hashes values bit-for-bit).
+Everything is built from Spark built-in expressions (no UDFs), stays
+inside whole-stage codegen, and scales linearly with no shuffle. Integer/count outputs are
+preferred over ratios so results are exactly reproducible across
+engines (the DuckDB oracle hashes values bit-for-bit).
+
+Per-row expressions are built as Spark SQL text (``*_sql`` builders
+that take and return SQL text) and reach the JVM in one call per
+projection (``selectExpr``) or per column (``F.expr``). A Python
+``F.*`` call tree costs about three driver-to-JVM round trips per
+node, which made building the crawl operators cost seconds of driver
+time per job. Column arguments are column NAMES; :func:`ident`
+backtick-quotes them into the SQL.
 
 Reference scope note: the reference repo has no corpus analytics; these
 are the training-pipeline extensions mandated by the build brief, built
@@ -32,138 +39,180 @@ BPE_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 PUNCT_REGEX = r"[.,;:!?]"
 
 
-def normalized_text(col: Column | str) -> Column:
+# ---------------------------------------------------------------------------
+# SQL text builders
+
+
+def ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(s: str) -> str:
+    """A Python string as a SQL string literal (backslashes and quotes
+    escaped, so regexes and control characters survive the parser)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def normalized_text_sql(text: str) -> str:
     """Newlines/tabs folded to spaces (single canonical whitespace)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.replace(F.replace(c, F.lit("\n"), F.lit(" ")), F.lit("\t"), F.lit(" "))
+    return f"replace(replace({text}, '\\n', ' '), '\\t', ' ')"
 
 
-def tokens(col: Column | str) -> Column:
+def tokens_sql(text: str) -> str:
     """Whitespace tokens as array<string>, empties dropped."""
-    return F.filter(
-        F.split(normalized_text(col), " "), lambda x: x != F.lit("")
+    return f"filter(split({normalized_text_sql(text)}, ' '), x -> x != '')"
+
+
+def ws_token_count_sql(text: str) -> str:
+    return f"CAST(size({tokens_sql(text)}) AS INT)"
+
+
+def padded_sql(text: str) -> str:
+    """Lowercased normalized text padded with one space each side, the
+    haystack of :func:`occurrences_sql`."""
+    return f"concat(' ', lower({normalized_text_sql(text)}), ' ')"
+
+
+def occurrences_sql(padded: str, word: str) -> str:
+    """Count of ` word ` occurrences in *padded* (see padded_sql) — the
+    cheap substring-count trick ((len - len(replace)) / len(pattern)),
+    which stays a pure string expression (no regex engine variance)."""
+    pat = f" {word} "
+    return (
+        f"CAST((length({padded}) - length(replace({padded}, "
+        f"{sql_string(pat)}, ''))) / {len(pat)} AS INT)"
     )
 
 
-def ws_token_count(col: Column | str) -> Column:
-    return F.size(tokens(col)).cast("int")
+def word_count_sql(padded: str, words: list[str]) -> str:
+    """Summed :func:`occurrences_sql` of *words*, as int."""
+    return "CAST(" + " + ".join(occurrences_sql(padded, w) for w in words) + " AS INT)"
 
 
-def bpe_token_count(col: Column | str) -> Column:
+def shingles_sql(toks: str, k: int = 3) -> str:
+    """k-gram word shingles (space-joined) of the token array *toks*,
+    [] when fewer than k tokens.
+
+    Built as a ``zip_with`` fold over k shifted ``slice``s of the token
+    array — array ops stay JVM-side and, critically, *toks* is
+    referenced only OUTSIDE higher-order-function lambdas. HOFs are
+    interpreted, so any reference to *toks* inside a lambda
+    re-evaluates its whole subtree (often a split+filter over the raw
+    text) once per element — O(tokens²) per document. The previous
+    sequence+transform+slice form paid exactly that (one slice per
+    shingle, each re-running the split); this form evaluates *toks*
+    k+2 times per ROW (once, when it names a projected column) and the
+    per-element lambda only touches its two string arguments —
+    O(k·tokens). Measured 3-6x on the sf0.1 corpus for the
+    expression-form consumers (fingerprint, Jaccard, substring spans,
+    HLL shingling).
+    """
+    n = f"size({toks})"
+    m = f"{n} - {k - 1}"
+    acc = f"slice({toks}, 1, {m})"
+    for j in range(1, k):
+        acc = (
+            f"zip_with({acc}, slice({toks}, {1 + j}, {m}), "
+            "(a, b) -> concat(a, ' ', b))"
+        )
+    return f"CASE WHEN {n} >= {k} THEN {acc} ELSE CAST(array() AS array<string>) END"
+
+
+#: quality bucket over the with_quality signals: integer
+#: cross-multiplication instead of float ratios (n_stop*100 >=
+#: n_tokens*2 ⇔ stopword ratio ≥ 2%), so the class is exact in any engine
+QUALITY_SQL = (
+    "CASE WHEN n_tokens >= 10 AND n_tokens <= 100000 "
+    "AND n_stop * 100 >= n_tokens * 2 AND n_punct * 100 <= n_chars * 10 "
+    "THEN 'good' ELSE 'low' END"
+)
+
+#: marker-word language over the with_lang_id scores, fixed tie-break
+#: order en > de > fr
+PRED_LANG_SQL = (
+    "CASE WHEN en_score >= de_score AND en_score >= fr_score THEN 'en' "
+    "WHEN de_score >= fr_score THEN 'de' ELSE 'fr' END"
+)
+
+
+def quality_signals_sql(text: str, toks: str, padded: str) -> dict[str, str]:
+    """n_chars / n_tokens / n_punct / n_stop of *text*, given SQL text
+    for its tokens and its padded form (a projected column or the
+    builder's expression)."""
+    return {
+        "n_chars": f"CAST(length({text}) AS INT)",
+        "n_tokens": f"CAST(size({toks}) AS INT)",
+        "n_punct": f"CAST(regexp_count({text}, {sql_string(PUNCT_REGEX)}) AS INT)",
+        "n_stop": word_count_sql(padded, STOPWORDS_EN),
+    }
+
+
+def lang_scores_sql(padded: str) -> dict[str, str]:
+    """``<lang>_score`` marker-word counts over *padded* text."""
+    return {
+        f"{lang}_score": word_count_sql(padded, words)
+        for lang, words in LANG_MARKERS.items()
+    }
+
+
+# ---------------------------------------------------------------------------
+# per-column helpers (one F.expr each)
+
+
+def tokens(col: str) -> Column:
+    return F.expr(tokens_sql(ident(col)))
+
+
+def ws_token_count(col: str) -> Column:
+    return F.expr(ws_token_count_sql(ident(col)))
+
+
+def bpe_token_count(col: str) -> Column:
     """Sub-word-ish token count via the BPE pre-tokenizer regex.
     ``regexp_count`` (not ``size(regexp_extract_all(...))``) — counting
     matches must not materialize every token string into an array."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_count(c, F.lit(BPE_REGEX)).cast("int")
+    return F.expr(f"CAST(regexp_count({ident(col)}, {sql_string(BPE_REGEX)}) AS INT)")
 
 
-def punct_count(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_count(c, F.lit(PUNCT_REGEX)).cast("int")
+def word_occurrences(col: str, word: str) -> Column:
+    return F.expr(occurrences_sql(padded_sql(ident(col)), word))
 
 
-def word_occurrences(col: Column | str, word: str) -> Column:
-    """Count of ` word ` occurrences (padded, lowercased) — the cheap
-    substring-count trick ((len - len(replace)) / len(pattern)), which
-    stays a pure string expression (no regex engine variance)."""
-    padded = F.concat(F.lit(" "), F.lower(normalized_text(col)), F.lit(" "))
-    pat = f" {word} "
-    return (
-        (F.length(padded) - F.length(F.replace(padded, F.lit(pat), F.lit(""))))
-        / F.lit(len(pat))
-    ).cast("int")
-
-
-def stopword_count(col: Column | str, words: list[str] | None = None) -> Column:
-    words = words or STOPWORDS_EN
-    out = F.lit(0)
-    for w in words:
-        out = out + word_occurrences(col, w)
-    return out.cast("int")
+def shingles(col: str, k: int = 3) -> Column:
+    """k-gram word shingles of the text column *col* (see shingles_sql)."""
+    return F.expr(shingles_sql(tokens_sql(ident(col)), k))
 
 
 def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Adds n_chars / n_tokens / n_punct / n_stop and a quality bucket.
-
-    The bucket uses integer cross-multiplication instead of float
-    ratios (n_stop*100 >= n_tokens*2 ⇔ stopword ratio ≥ 2%) so the
-    classification is exact in any engine.
-    """
-    d = (
-        df.withColumn("n_chars", F.length(text_col).cast("int"))
-        .withColumn("n_tokens", ws_token_count(text_col))
-        .withColumn("n_punct", punct_count(text_col))
-        .withColumn("n_stop", stopword_count(text_col))
-    )
-    return d.withColumn(
-        "quality",
-        F.when(
-            (F.col("n_tokens") >= 10)
-            & (F.col("n_tokens") <= 100000)
-            & (F.col("n_stop") * 100 >= F.col("n_tokens") * 2)
-            & (F.col("n_punct") * 100 <= F.col("n_chars") * 10),
-            F.lit("good"),
-        ).otherwise(F.lit("low")),
+    """Adds n_chars / n_tokens / n_punct / n_stop and a quality bucket
+    (:data:`QUALITY_SQL`)."""
+    t = ident(text_col)
+    signals = quality_signals_sql(t, tokens_sql(t), padded_sql(t))
+    return df.withColumns({c: F.expr(e) for c, e in signals.items()}).withColumn(
+        "quality", F.expr(QUALITY_SQL)
     )
 
 
 def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Marker-word language ID with a fixed tie-break order (en>de>fr)."""
-    d = df
-    for lang, words in LANG_MARKERS.items():
-        score = F.lit(0)
-        for w in words:
-            score = score + word_occurrences(F.col(text_col), w)
-        d = d.withColumn(f"{lang}_score", score.cast("int"))
-    return d.withColumn(
-        "pred_lang",
-        F.when(
-            (F.col("en_score") >= F.col("de_score"))
-            & (F.col("en_score") >= F.col("fr_score")),
-            F.lit("en"),
-        )
-        .when(F.col("de_score") >= F.col("fr_score"), F.lit("de"))
-        .otherwise(F.lit("fr")),
+    scores = lang_scores_sql(padded_sql(ident(text_col)))
+    return df.withColumns({c: F.expr(e) for c, e in scores.items()}).withColumn(
+        "pred_lang", F.expr(PRED_LANG_SQL)
     )
 
 
-def shingles(tok_col: Column, k: int = 3) -> Column:
-    """k-gram word shingles (space-joined), [] when fewer than k tokens.
-
-    Built as a ``zip_with`` fold over k shifted ``slice``s of the token
-    array — array ops stay JVM-side and, critically, ``tok_col`` is
-    referenced only OUTSIDE higher-order-function lambdas. HOFs are
-    interpreted, so any reference to ``tok_col`` inside a lambda
-    re-evaluates its whole subtree (often a split+filter over the raw
-    text) once per element — O(tokens²) per document. The previous
-    sequence+transform+slice form paid exactly that (one slice per
-    shingle, each re-running the split); this form evaluates the token
-    subtree k+2 times per ROW and the per-element lambda only touches
-    its two string arguments — O(k·tokens). Measured 3-6x on the sf0.1
-    corpus for the expression-form consumers (fingerprint, Jaccard,
-    substring spans, HLL shingling).
-    """
-    n = F.size(tok_col)
-    m = n - (k - 1)
-    acc = F.slice(tok_col, 1, m)
-    for j in range(1, k):
-        acc = F.zip_with(
-            acc,
-            F.slice(tok_col, 1 + j, m),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    return F.when(n >= k, acc).otherwise(F.array().cast("array<string>"))
-
-
-def fingerprint(col: Column | str, k: int = 5) -> Column:
+def fingerprint(col: str, k: int = 5) -> Column:
     """Document fingerprint: lexicographic-min md5 over k-gram shingles
     (a 1-permutation MinHash — stable under local edits), md5(text) when
     the doc is shorter than k tokens."""
-    c = F.col(col) if isinstance(col, str) else col
-    sh = shingles(tokens(c), k)
-    return F.when(
-        F.size(sh) > 0, F.array_min(F.transform(sh, F.md5))
-    ).otherwise(F.md5(c))
+    c = ident(col)
+    sh = shingles_sql(tokens_sql(c), k)
+    return F.expr(
+        f"CASE WHEN size({sh}) > 0 THEN array_min(transform({sh}, s -> md5(s))) "
+        f"ELSE md5({c}) END"
+    )
+
 
 def top_terms_by_lang(
     df: DataFrame,
@@ -235,7 +284,7 @@ def _hash_bucket(hash_col: Column) -> Column:
     return out.cast("bigint")
 
 
-def model_quality_score(col: Column | str) -> Column:
+def model_quality_score(col: str) -> Column:
     """Linear model score over hashed token features.
 
     The shape of a fastText-style quality classifier (bag of tokens →

@@ -2936,7 +2936,7 @@ def hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         (F.col("doc_id") % 16).cast("int").alias("part"),
         F.explode(
-            textstats.shingles(textstats.tokens("text"), 3)
+            textstats.shingles("text", 3)
         ).alias("term"),
     )
     return sketches.hll_merge_invariant(tok, "term", "part")

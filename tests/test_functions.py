@@ -64,7 +64,7 @@ def test_lang_id_deterministic(spark):
 def test_shingles_and_fingerprint(spark):
     df = spark.createDataFrame([(1, "a b c d"), (2, "a b")], "id INT, text STRING")
     sh = df.select(
-        "id", textstats.shingles(textstats.tokens("text"), 3).alias("sh")
+        "id", textstats.shingles("text", 3).alias("sh")
     )
     rows = {r["id"]: r["sh"] for r in sh.collect()}
     assert rows[1] == ["a b c", "b c d"]
@@ -135,7 +135,7 @@ def test_oph_signature_table_matches_expression_path(spark, docs):
         r["doc_id"]: list(r["sig"])
         for r in sample.select(
             "doc_id",
-            dedup.minhash_signature(textstats.tokens("text")).alias("sig"),
+            dedup.minhash_signature("text").alias("sig"),
         ).collect()
         # expression form emits all-empty signatures for docs below the
         # shingle width; the bulk table has no row for those
@@ -191,9 +191,7 @@ def test_rotation_densify_expression_matches_bulk(spark, docs):
         r["doc_id"]: list(r["sig"])
         for r in sample.select(
             "doc_id",
-            dedup.minhash_signature(
-                textstats.tokens("text"), densify="rotation"
-            ).alias("sig"),
+            dedup.minhash_signature("text", densify="rotation").alias("sig"),
         ).collect()
         if any(s != dedup.OPH_EMPTY for s in r["sig"])
     }

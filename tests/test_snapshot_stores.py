@@ -427,3 +427,39 @@ def test_bloom_prunes_epoch_commits_in_mixed_log(spark, tmp_path):
     assert len(rows) == 1 and rows[0].url == u
     full_files = set(log.read(spark).inputFiles())
     assert len(set(hit.inputFiles())) < len(full_files)
+
+
+# -- manifest reads per streaming epoch ------------------------------------
+
+
+class _CountingStore(MemoryStore):
+    def __init__(self) -> None:
+        super().__init__()
+        self.reads = 0
+
+    def read(self, name: str) -> bytes | None:
+        self.reads += 1
+        return super().read(name)
+
+
+def _epoch_reads(n_versions: int) -> int:
+    """Store reads of one streaming epoch (the sink's replay check plus
+    its commit) on a log that already holds *n_versions* epochs."""
+    store = _CountingStore()
+    log = SnapshotLog("unused", store=store)
+    for e in range(n_versions):
+        if e not in log.committed_buckets(kind="epoch"):
+            log.commit(e, [], {"n_docs": 1}, kind="epoch")
+    store.reads = 0
+    assert n_versions not in log.committed_buckets(kind="epoch")
+    assert log.commit(n_versions, [], {"n_docs": 1}, kind="epoch") == n_versions
+    return store.reads
+
+
+def test_epoch_commit_reads_do_not_grow_with_the_log():
+    """A published manifest never changes, so the log parses each one
+    once: an epoch's check + commit reads a constant number of objects
+    (the probes past the head), not the whole chain back to v0."""
+    at_100, at_400 = _epoch_reads(100), _epoch_reads(400)
+    assert at_100 == at_400
+    assert at_400 <= 4
