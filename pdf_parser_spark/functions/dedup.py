@@ -33,7 +33,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .textstats import ident, shingles, shingles_sql, tokens, tokens_sql
+from .textstats import (
+    ident, let_sql, shingles, text_shingles_sql, tokens, tokens_sql,
+)
 
 HEX_DIGITS = "0123456789abcdef"
 
@@ -167,19 +169,25 @@ def minhash_signature(
     `num_hashes` slots by its leading byte, min per slot — all JVM-side
     expressions, no shuffle, no explode of the shingle set. Same bits
     as the bulk path (lsh_candidate_pairs); use the bulk path for
-    corpus-scale work (`hs` is inlined once per slot here, so this form
-    still evaluates num_hashes×|sh| digests).
+    corpus-scale work. The digests and each slot's minimum are bound
+    once (:func:`textstats.let_sql`), so a row costs |sh| digests and
+    num_hashes filter passes over them, densified or not.
     """
-    sh = shingles_sql(tokens_sql(ident(text_col)), shingle_k)
-    hs = f"transform(array_distinct({sh}), x -> md5(x))"
-    slots = [
-        f"coalesce(array_min(filter({hs}, h -> {_oph_bucket('h', num_hashes)} = {s})), "
-        f"'{OPH_EMPTY}')"
+    sh = text_shingles_sql(ident(text_col), shingle_k)
+    slots = {
+        f"_s{s}": f"coalesce(array_min(filter(_hs, h -> "
+        f"{_oph_bucket('h', num_hashes)} = {s})), '{OPH_EMPTY}')"
         for s in range(num_hashes)
-    ]
+    }
+    sig = list(slots)
     if densify == "rotation":
-        slots = rotation_densify(slots)
-    return F.expr(f"array({', '.join(slots)})")
+        sig = rotation_densify(sig)
+    return F.expr(
+        let_sql(
+            {"_hs": f"transform(array_distinct({sh}), x -> md5(x))", **slots},
+            f"array({', '.join(sig)})",
+        )
+    )
 
 
 def oph_signature_table(
@@ -284,7 +292,7 @@ def jaccard_pairs(
     equi-condition (e.g. LSH band or direct id pairing) so the join
     hash-partitions; a theta-cond degrades to a broadcast NLJ.
     """
-    sh = f"array_distinct({shingles_sql(tokens_sql(ident(text_col)), shingle_k)})"
+    sh = f"array_distinct({text_shingles_sql(ident(text_col), shingle_k)})"
     a = left.selectExpr(f"{ident(id_col)} AS a_id", f"{sh} AS sh_a").alias("a")
     b = right.selectExpr(f"{ident(id_col)} AS b_id", f"{sh} AS sh_b").alias("b")
     return a.join(b, join_cond).select(
@@ -567,7 +575,7 @@ def embedding_neardup_bucketed(
     )
 
 
-#: per-row repetition counts over a projected shingle array ``_sh``
+#: per-row repetition counts over a shingle array bound as ``_sh``
 REPETITION_COUNTS_SQL = {
     "n_shingles": "CAST(size(_sh) AS INT)",
     "n_distinct": "CAST(size(array_distinct(_sh)) AS INT)",
@@ -581,15 +589,17 @@ def with_repetition_counts(
     ``n_distinct`` (distinct ones) per row, both int. A signal within
     one document needs no co-location, so this is a per-row projection
     — no explode, no shuffle, no join back. Rows with fewer than k
-    tokens (including null and blank text) get (0, 0). The token and
-    shingle arrays are each projected once and read several times
-    (Catalyst does not inline a non-cheap expression into two
-    consumers), so each row is tokenized once."""
+    tokens (including null and blank text) get (0, 0). Both counts come
+    from one let expression (:func:`textstats.let_sql`) that tokenizes
+    and shingles the row once, also when a filter on them is pushed
+    into it."""
     keep = [ident(c) for c in df.columns if c not in REPETITION_COUNTS_SQL]
-    return (
-        df.selectExpr(*keep, f"{tokens_sql(ident(text_col))} AS _t")
-        .selectExpr(*keep, f"{shingles_sql('_t', k)} AS _sh")
-        .selectExpr(*keep, *[f"{e} AS {c}" for c, e in REPETITION_COUNTS_SQL.items()])
+    counts = ", ".join(f"'{c}', {e}" for c, e in REPETITION_COUNTS_SQL.items())
+    rc = let_sql(
+        {"_sh": text_shingles_sql(ident(text_col), k)}, f"named_struct({counts})"
+    )
+    return df.selectExpr(*keep, f"{rc} AS _rc").selectExpr(
+        *keep, *[f"_rc.{c} AS {c}" for c in REPETITION_COUNTS_SQL]
     )
 
 

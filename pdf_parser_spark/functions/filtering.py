@@ -6,8 +6,11 @@ Everything here is built-in-expression Spark (windows, string and
 array expressions) — no Python UDFs — so the plans stay inside
 whole-stage codegen. Only ``host_cap`` shuffles, on slim (host, id)
 projections; the quality gate and Gopher rules are per-row projections
-with no Exchange, built as SQL text (one ``selectExpr`` per projection
-layer, see :mod:`.textstats`).
+with no Exchange, built as SQL text (see :mod:`.textstats`). Each
+verdict is one bound expression (:func:`.textstats.let_sql`) over the
+input columns, so a caller's filter on ``keep`` or ``passes``, which
+the optimizer pushes into the expression, still evaluates every shared
+intermediate once per row.
 """
 
 from __future__ import annotations
@@ -16,7 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import dedup, textstats
-from .textstats import ident, padded_sql, shingles_sql, tokens_sql
+from .textstats import ident, let_sql, padded_sql, shingles_sql, tokens_sql
 
 
 def hash_order_key(id_col: Column | str) -> Column:
@@ -94,41 +97,38 @@ def quality_gate(
 
     Map-only: every signal, the repetition counts included
     (:data:`dedup.REPETITION_COUNTS_SQL`), is an expression over
-    the document's own text — no shuffle, no join. The token array and
-    the padded text are projected once per row and feed every signal;
-    the language scores are built only when ``lang_col`` is set.
+    the document's own text — no shuffle, no join. ``reason`` is one
+    bound expression (:func:`textstats.let_sql`) over the input
+    columns: the token array, the padded text, the shingles and each
+    signal are bound once and feed every rule, so a filter on ``keep``
+    that the optimizer pushes into it still tokenizes each row once.
+    The language scores are built only when ``lang_col`` is set.
     Output: (id, reason, keep).
     """
     t = ident(text_col)
-    ids = [ident(id_col)] + ([ident(lang_col)] if lang_col is not None else [])
-    signals = textstats.quality_signals_sql(t, "_t", "_p")
-    lang = textstats.lang_scores_sql("_p") if lang_col is not None else {}
-    base = df.selectExpr(
-        *ids, t, f"{tokens_sql(t)} AS _t", f"{padded_sql(t)} AS _p"
-    ).selectExpr(
-        *ids,
-        *[f"{e} AS {c}" for c, e in {**signals, **lang}.items()],
-        f"{shingles_sql('_t', 3)} AS _sh",
-    )
-    scored = base.selectExpr(
-        *ids,
-        "n_tokens",
-        f"{textstats.QUALITY_SQL} AS quality",
-        *([f"{textstats.PRED_LANG_SQL} AS pred_lang"] if lang_col is not None else []),
-        *[f"{e} AS {c}" for c, e in dedup.REPETITION_COUNTS_SQL.items()],
-    )
-    mismatch = (
-        f"WHEN pred_lang != {ident(lang_col)} THEN 'lang_mismatch' "
-        if lang_col is not None
-        else ""
-    )
-    return scored.selectExpr(
-        ident(id_col),
+    bindings = {
+        "_t": tokens_sql(t),
+        "_p": padded_sql(t),
+        "_sh": shingles_sql("_t", 3),
+        **textstats.quality_signals_sql(t, "_t", "_p"),
+        **dedup.REPETITION_COUNTS_SQL,
+        "quality": textstats.QUALITY_SQL,
+    }
+    mismatch = ""
+    if lang_col is not None:
+        bindings.update(textstats.lang_scores_sql("_p"))
+        bindings["pred_lang"] = textstats.PRED_LANG_SQL
+        mismatch = f"WHEN pred_lang != {ident(lang_col)} THEN 'lang_mismatch' "
+    reason = (
         f"CASE WHEN n_tokens < {min_tokens} THEN 'too_short' "
         f"WHEN (n_shingles - n_distinct) * {rep_den} > n_shingles * {rep_num} "
         "THEN 'repetitive' WHEN quality = 'low' THEN 'low_quality' "
-        f"{mismatch}ELSE 'kept' END AS reason",
-    ).selectExpr(ident(id_col), "reason", "CAST(reason = 'kept' AS INT) AS keep")
+        f"{mismatch}ELSE 'kept' END"
+    )
+    i = ident(id_col)
+    return df.selectExpr(i, f"{let_sql(bindings, reason)} AS reason").selectExpr(
+        i, "reason", "CAST(reason = 'kept' AS INT) AS keep"
+    )
 
 
 def gopher_rules(
@@ -155,51 +155,44 @@ def gopher_rules(
     integer-parity discipline as textstats.unigram_surprisal).
 
     Scale shape: map-only — every signal is an array expression over
-    the document's own lines; zero exchanges, fully codegen'd, the
-    cheapest possible 100 TB pass.
+    the document's own lines; zero exchanges. The lines, the words and
+    each count are bound once in one expression
+    (:func:`textstats.let_sql`) that yields all seven outputs as a
+    struct, so a filter on ``passes`` splits each row's lines once.
     """
     i = ident(id_col)
-    fracs = ["mean_word_len_e6", "alpha_frac_e6", "bullet_frac_e6", "ellipsis_frac_e6"]
-    return (
-        df.selectExpr(
-            i,
-            f"{ident(lines_col)} AS _ls",
-            f"flatten(transform({ident(lines_col)}, "
-            "l -> filter(split(l, ' '), w -> w != ''))) AS _ws",
+    fracs = {
+        c: f"CASE WHEN {den} > 0 THEN (1000000 * {num}) div {den} ELSE 0 END"
+        for c, num, den in (
+            ("mean_word_len_e6", "_sum_len", "n_words"),
+            ("alpha_frac_e6", "_n_alpha", "n_words"),
+            ("bullet_frac_e6", "_n_bullet", "n_lines"),
+            ("ellipsis_frac_e6", "_n_ellipsis", "n_lines"),
         )
-        .selectExpr(
-            i,
-            "CAST(size(_ws) AS BIGINT) AS n_words",
-            "CAST(size(_ls) AS BIGINT) AS n_lines",
-            "aggregate(_ws, CAST(0 AS BIGINT), (a, w) -> a + length(w)) AS _sum_len",
-            "CAST(size(filter(_ws, w -> w RLIKE '[a-z]')) AS BIGINT) AS _n_alpha",
-            "CAST(size(filter(_ls, l -> startswith(l, '- '))) AS BIGINT) AS _n_bullet",
-            "CAST(size(filter(_ls, l -> endswith(l, '...'))) AS BIGINT) AS _n_ellipsis",
-        )
-        .selectExpr(
-            i,
-            "n_words",
-            "n_lines",
-            *[
-                f"CASE WHEN {den} > 0 THEN (1000000 * {num}) div {den} ELSE 0 END AS {c}"
-                for c, num, den in zip(
-                    fracs,
-                    ("_sum_len", "_n_alpha", "_n_bullet", "_n_ellipsis"),
-                    ("n_words", "n_words", "n_lines", "n_lines"),
-                )
-            ],
-        )
-        .selectExpr(
-            i,
-            "n_words",
-            "n_lines",
-            *fracs,
-            f"n_words BETWEEN {min_words} AND {max_words} "
-            f"AND mean_word_len_e6 BETWEEN {min_mean_len_e6} AND {max_mean_len_e6} "
-            f"AND alpha_frac_e6 >= {min_alpha_e6} "
-            f"AND bullet_frac_e6 <= {max_bullet_e6} "
-            f"AND ellipsis_frac_e6 <= {max_ellipsis_e6} AS passes",
-        )
+    }
+    bindings = {
+        "_ls": ident(lines_col),
+        "_ws": "flatten(transform(_ls, l -> filter(split(l, ' '), w -> w != '')))",
+        "n_words": "CAST(size(_ws) AS BIGINT)",
+        "n_lines": "CAST(size(_ls) AS BIGINT)",
+        "_sum_len": "aggregate(_ws, CAST(0 AS BIGINT), (a, w) -> a + length(w))",
+        "_n_alpha": "CAST(size(filter(_ws, w -> w RLIKE '[a-z]')) AS BIGINT)",
+        "_n_bullet": "CAST(size(filter(_ls, l -> startswith(l, '- '))) AS BIGINT)",
+        "_n_ellipsis": "CAST(size(filter(_ls, l -> endswith(l, '...'))) AS BIGINT)",
+        **fracs,
+    }
+    passes = (
+        f"n_words BETWEEN {min_words} AND {max_words} "
+        f"AND mean_word_len_e6 BETWEEN {min_mean_len_e6} AND {max_mean_len_e6} "
+        f"AND alpha_frac_e6 >= {min_alpha_e6} "
+        f"AND bullet_frac_e6 <= {max_bullet_e6} "
+        f"AND ellipsis_frac_e6 <= {max_ellipsis_e6}"
+    )
+    out = ["n_words", "n_lines", *fracs]
+    fields = ", ".join(f"'{c}', {c}" for c in out)
+    verdict = let_sql(bindings, f"named_struct({fields}, 'passes', {passes})")
+    return df.selectExpr(i, f"{verdict} AS _g").selectExpr(
+        i, *[f"_g.{c} AS {c}" for c in (*out, "passes")]
     )
 
 

@@ -12,7 +12,9 @@ projection (``selectExpr``) or per column (``F.expr``). A Python
 ``F.*`` call tree costs about three driver-to-JVM round trips per
 node, which made building the crawl operators cost seconds of driver
 time per job. Column arguments are column NAMES; :func:`ident`
-backtick-quotes them into the SQL.
+backtick-quotes them into the SQL. An intermediate that an expression
+reads more than once (a token array, a padded text) is bound once with
+:func:`let_sql`.
 
 Reference scope note: the reference repo has no corpus analytics; these
 are the training-pipeline extensions mandated by the build brief, built
@@ -90,6 +92,25 @@ def word_count_sql(padded: str, words: list[str]) -> str:
     return "CAST(" + " + ".join(occurrences_sql(padded, w) for w in words) + " AS INT)"
 
 
+def let_sql(bindings: dict[str, str], body: str) -> str:
+    """*body* with each variable of *bindings* bound to its value, in
+    order (a value may name the variables bound before it).
+
+    Each binding is a one-element ``transform``,
+    ``element_at(transform(array(value), var -> body), 1)``, so a value
+    is evaluated once per row however often *body* names it. A
+    projected column gives no such promise: a filter, aggregate or join
+    that the optimizer pushes through a projection has every alias it
+    names replaced by the alias's expression (``PushDownPredicates``),
+    so a verdict built over several projection layers re-runs each
+    shared intermediate once per reference. Built as one let
+    expression, the verdict is copied as one tree, bindings included.
+    """
+    for var, value in reversed(bindings.items()):
+        body = f"element_at(transform(array({value}), {var} -> {body}), 1)"
+    return body
+
+
 def shingles_sql(toks: str, k: int = 3) -> str:
     """k-gram word shingles (space-joined) of the token array *toks*,
     [] when fewer than k tokens.
@@ -101,12 +122,15 @@ def shingles_sql(toks: str, k: int = 3) -> str:
     re-evaluates its whole subtree (often a split+filter over the raw
     text) once per element — O(tokens²) per document. The previous
     sequence+transform+slice form paid exactly that (one slice per
-    shingle, each re-running the split); this form evaluates *toks*
-    k+2 times per ROW (once, when it names a projected column) and the
-    per-element lambda only touches its two string arguments —
-    O(k·tokens). Measured 3-6x on the sf0.1 corpus for the
-    expression-form consumers (fingerprint, Jaccard, substring spans,
-    HLL shingling).
+    shingle, each re-running the split); this form names *toks* k+2
+    times per row and the per-element lambda only touches its two
+    string arguments — O(k·tokens). Pass a variable bound by
+    :func:`let_sql` (see :func:`text_shingles_sql`), so those k+2
+    references read one tokenization: an expression is re-evaluated at
+    each reference, and so is a projected column once the optimizer
+    inlines it into a pushed-down filter. Measured 3-6x on the sf0.1
+    corpus for the expression-form consumers (fingerprint, Jaccard,
+    substring spans, HLL shingling).
     """
     n = f"size({toks})"
     m = f"{n} - {k - 1}"
@@ -117,6 +141,11 @@ def shingles_sql(toks: str, k: int = 3) -> str:
             "(a, b) -> concat(a, ' ', b))"
         )
     return f"CASE WHEN {n} >= {k} THEN {acc} ELSE CAST(array() AS array<string>) END"
+
+
+def text_shingles_sql(text: str, k: int = 3) -> str:
+    """k-gram word shingles of *text*, tokenized once."""
+    return let_sql({"_t": tokens_sql(text)}, shingles_sql("_t", k))
 
 
 #: quality bucket over the with_quality signals: integer
@@ -181,14 +210,15 @@ def word_occurrences(col: str, word: str) -> Column:
 
 def shingles(col: str, k: int = 3) -> Column:
     """k-gram word shingles of the text column *col* (see shingles_sql)."""
-    return F.expr(shingles_sql(tokens_sql(ident(col)), k))
+    return F.expr(text_shingles_sql(ident(col), k))
 
 
 def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Adds n_chars / n_tokens / n_punct / n_stop and a quality bucket
     (:data:`QUALITY_SQL`)."""
     t = ident(text_col)
-    signals = quality_signals_sql(t, tokens_sql(t), padded_sql(t))
+    signals = quality_signals_sql(t, tokens_sql(t), "_p")
+    signals["n_stop"] = let_sql({"_p": padded_sql(t)}, signals["n_stop"])
     return df.withColumns({c: F.expr(e) for c, e in signals.items()}).withColumn(
         "quality", F.expr(QUALITY_SQL)
     )
@@ -196,7 +226,8 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Marker-word language ID with a fixed tie-break order (en>de>fr)."""
-    scores = lang_scores_sql(padded_sql(ident(text_col)))
+    p = padded_sql(ident(text_col))
+    scores = {c: let_sql({"_p": p}, e) for c, e in lang_scores_sql("_p").items()}
     return df.withColumns({c: F.expr(e) for c, e in scores.items()}).withColumn(
         "pred_lang", F.expr(PRED_LANG_SQL)
     )
@@ -207,10 +238,12 @@ def fingerprint(col: str, k: int = 5) -> Column:
     (a 1-permutation MinHash — stable under local edits), md5(text) when
     the doc is shorter than k tokens."""
     c = ident(col)
-    sh = shingles_sql(tokens_sql(c), k)
     return F.expr(
-        f"CASE WHEN size({sh}) > 0 THEN array_min(transform({sh}, s -> md5(s))) "
-        f"ELSE md5({c}) END"
+        let_sql(
+            {"_sh": text_shingles_sql(c, k)},
+            "CASE WHEN size(_sh) > 0 THEN array_min(transform(_sh, s -> md5(s))) "
+            f"ELSE md5({c}) END",
+        )
     )
 
 

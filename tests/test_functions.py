@@ -74,6 +74,23 @@ def test_shingles_and_fingerprint(spark):
     assert len(fps[1]) == 32 and len(fps[2]) == 32  # md5 hex either path
 
 
+def test_fingerprint_expression_matches_table(spark, docs):
+    """The per-row fingerprint expression and the relational
+    fingerprint_table (the doc_fingerprint query) agree on every doc."""
+    sample = docs.limit(100)
+    expr = {
+        r["doc_id"]: r["fp"]
+        for r in sample.select(
+            "doc_id", textstats.fingerprint("text", k=5).alias("fp")
+        ).collect()
+    }
+    table = {
+        r["doc_id"]: r["fingerprint"]
+        for r in dedup.fingerprint_table(sample, k=5).collect()
+    }
+    assert len(expr) == 100 and table == expr
+
+
 # ------------------------------------------------------------------- dedup
 
 
@@ -676,6 +693,66 @@ def test_quality_gate_reasons(spark):
     # null text has a null token count, so too_short does not fire; it
     # has no shingles (not repetitive) and falls to the quality bucket
     assert got[6] == ("low_quality", 0)
+
+
+def test_quality_gate_edge_rows_match_duckdb_oracle(spark):
+    """Null, empty, blank, 1-token, 2-token and fully repetitive texts
+    get the reason and keep flag of the DuckDB corpus_filter oracle,
+    with and without the language rule (skipping it, the last rule
+    before 'kept', turns every lang_mismatch into kept).
+
+    Null text is dropped by both, for different reasons: Spark's
+    quality bucket is 'low' when its test is null, while the oracle's
+    ``NOT (...)`` of a null test is null, so it falls through to the
+    language rule (the null text scores as 'fr')."""
+    import duckdb
+
+    from pdf_parser_spark.functions import filtering
+    from pdf_parser_spark.queries import _duck_quality_gate_sql
+
+    good = "the cat and the dog ran to a tree in the park today ."
+    rows = [
+        (1, None, "en"),
+        (2, "", "en"),
+        (3, " \n\t ", "en"),
+        (4, "hello", "en"),
+        (5, "hello\tworld", "en"),
+        (6, " ".join(["spam"] * 12), "en"),
+        (7, " ".join(["the cat"] * 8), "en"),
+        (8, good, "en"),
+        (9, good, "de"),
+        (10, good, None),
+        (11, good.replace(" ", "\n"), "fr"),
+        (12, "alpha beta gamma delta epsilon zeta eta theta iota kappa", "en"),
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR, lang VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?, ?)", rows)
+    want = {
+        d: (reason, keep)
+        for d, reason, keep in con.execute(_duck_quality_gate_sql()).fetchall()
+    }
+    assert {r for r, _ in want.values()} == {
+        "too_short", "repetitive", "low_quality", "lang_mismatch", "kept"
+    }
+    df = spark.createDataFrame(rows, "doc_id BIGINT, clean_text STRING, lang STRING")
+    got = {
+        r["doc_id"]: (r["reason"], r["keep"])
+        for r in filtering.quality_gate(df, text_col="clean_text").collect()
+    }
+    assert got.pop(1) == ("low_quality", 0) and want.pop(1) == ("lang_mismatch", 0)
+    assert got == want
+    no_lang = {
+        r["doc_id"]: (r["reason"], r["keep"])
+        for r in filtering.quality_gate(
+            df, text_col="clean_text", lang_col=None
+        ).collect()
+    }
+    assert no_lang.pop(1) == ("low_quality", 0)
+    assert no_lang == {
+        d: ("kept", 1) if reason == "lang_mismatch" else (reason, keep)
+        for d, (reason, keep) in want.items()
+    }
 
 
 def test_top_terms_by_lang_ranking(spark):

@@ -539,3 +539,67 @@ def test_wet_export_map_only(spark):
     plan = _plan(spark, "wet_export")
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def _evaluated(df) -> str:
+    """The text of every executed-plan node but the scans, one node per
+    entry: what the plan evaluates per row. A file scan lists the
+    filters pushed to it (``DataFilters``) but evaluates none of them."""
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        if "Scan" not in node.nodeName():
+            out.append(node.simpleString(1000))
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return "\n".join(out)
+
+
+@pytest.fixture(scope="module")
+def clean(spark):
+    """The crawl job's filter input: the text, a language, and the
+    ``lines`` column as an inline projection over the text."""
+    return spark.read.parquet(f"{SF}/documents.parquet").selectExpr(
+        "doc_id",
+        "text AS clean_text",
+        "lang",
+        "filter(split(text, '\\n\\n'), p -> p != '') AS lines",
+    )
+
+
+@pytest.mark.parametrize("lang_col", [None, "lang"])
+def test_quality_gate_filtered_on_keep_tokenizes_once(spark, clean, lang_col):
+    """A filter on ``keep`` is pushed into the gate's expression; the
+    kept-rows plan must still tokenize and lowercase each row once,
+    exactly as the unfiltered gate does (25 splits and 14-50 lowers
+    when each projection layer's aliases were inlined)."""
+    from pdf_parser_spark.functions import filtering
+
+    gate = filtering.quality_gate(clean, text_col="clean_text", lang_col=lang_col)
+    kept = gate.where("keep = 1").select("doc_id")
+    for fn in ("split(", "lower("):
+        assert _evaluated(kept).count(fn) == _evaluated(gate).count(fn) == 1, fn
+
+
+def test_gopher_rules_filtered_on_passes_splits_once(spark, clean):
+    """The same for Gopher's ``passes``: one split of the text into
+    lines and one of the lines into words, filtered or not (28 when the
+    layers were inlined)."""
+    from pdf_parser_spark.functions import filtering
+
+    rules = filtering.gopher_rules(clean, lines_col="lines")
+    kept = rules.where("passes").select("doc_id")
+    assert _evaluated(kept).count("split(") == _evaluated(rules).count("split(") == 2
+
+
+def test_text_signals_bind_shared_intermediates(spark):
+    """One fingerprint tokenizes its row once (it named the token
+    expression 22 times), and the stopword and marker-word counts build
+    the padded text once per column, not once per word."""
+    from pdf_parser_spark.functions import textstats
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    fp = docs.select(textstats.fingerprint("text").alias("fp"))
+    assert _evaluated(fp).count("split(") <= 1
+    assert _evaluated(textstats.with_quality(docs)).count("lower(") <= 1
+    assert _evaluated(textstats.with_lang_id(docs)).count("lower(") <= 3
