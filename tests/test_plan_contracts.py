@@ -571,8 +571,7 @@ def clean(spark):
 def test_quality_gate_filtered_on_keep_tokenizes_once(spark, clean, lang_col):
     """A filter on ``keep`` is pushed into the gate's expression; the
     kept-rows plan must still tokenize and lowercase each row once,
-    exactly as the unfiltered gate does (25 splits and 14-50 lowers
-    when each projection layer's aliases were inlined)."""
+    exactly as the unfiltered gate does."""
     from pdf_parser_spark.functions import filtering
 
     gate = filtering.quality_gate(clean, text_col="clean_text", lang_col=lang_col)
@@ -583,8 +582,7 @@ def test_quality_gate_filtered_on_keep_tokenizes_once(spark, clean, lang_col):
 
 def test_gopher_rules_filtered_on_passes_splits_once(spark, clean):
     """The same for Gopher's ``passes``: one split of the text into
-    lines and one of the lines into words, filtered or not (28 when the
-    layers were inlined)."""
+    lines and one of the lines into words, filtered or not."""
     from pdf_parser_spark.functions import filtering
 
     rules = filtering.gopher_rules(clean, lines_col="lines")
@@ -593,9 +591,9 @@ def test_gopher_rules_filtered_on_passes_splits_once(spark, clean):
 
 
 def test_text_signals_bind_shared_intermediates(spark):
-    """One fingerprint tokenizes its row once (it named the token
-    expression 22 times), and the stopword and marker-word counts build
-    the padded text once per column, not once per word."""
+    """One fingerprint tokenizes its row once, and the stopword and
+    marker-word counts build the padded text once per column, not once
+    per word."""
     from pdf_parser_spark.functions import textstats
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
