@@ -10,9 +10,9 @@ warm trial with two queries slower warm than cold):
 
 - Every headline query runs ONE untimed-into-"queries_cold" pass (it
   absorbs one-time per-plan costs: janino codegen compile, broadcast
-  builds, the span-parse localCheckpoint, the IVF codebook fit — costs
-  that amortize to nothing over a 100 TB run but dominate a seconds-
-  long sf0.1 pass), then ``$SPARK_GRAFT_BENCH_TRIALS`` (default 3)
+  builds, the span-parse localCheckpoint — costs that amortize to
+  nothing over a 100 TB run but dominate a seconds-long sf0.1 pass),
+  then ``$SPARK_GRAFT_BENCH_TRIALS`` (default 3)
   recorded trials.
 - Each recorded trial times query CONSTRUCTION (DataFrame build,
   including any memo-cache hits) and EXECUTION (the noop-sink action)
@@ -45,8 +45,6 @@ HEADLINE = [
     "dedup_minhash_lsh",
     "dedup_simhash",
     "dedup_ngram_jaccard",
-    "ann_topk_bruteforce",
-    "ann_ivf_bucketed",
     "windowed_host_stats",
     "host_running_totals",
     "dedup_stream_twin",
@@ -83,7 +81,6 @@ HEADLINE = [
     "compaction_plan",
     "host_blocklist",
     "zorder_layout",
-    "embed_project",
     "vocab_census",
     "containment_anti_join",
     "spatial_block_join",
@@ -203,7 +200,7 @@ def main() -> None:
     queries_cold: dict[str, float] = {}
     for name in HEADLINE:
         # cold pass: construction + execution in one number — keeps the
-        # one-shot costs (codegen, checkpoints, codebook fit) honest
+        # one-shot costs (codegen, checkpoints) honest
         t0 = time.perf_counter()
         _noop(QUERIES[name](spark, sf_dir))
         queries_cold[name] = round(time.perf_counter() - t0, 3)

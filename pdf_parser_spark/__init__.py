@@ -15,9 +15,8 @@ pipeline over Common-Crawl-style document tables:
                 url-hash partitioning with host salting, audit/lineage
                 table, snapshot resume.
 - ``functions`` large-scale training-data operators: dedup (exact /
-                MinHash-LSH / SimHash / n-gram Jaccard / embedding-cosine),
-                ANN similarity search, text analysis, cleaning, filtering,
-                packing.
+                MinHash-LSH / SimHash / n-gram Jaccard), text analysis,
+                cleaning, filtering, packing.
 """
 
 __version__ = "0.1.0"

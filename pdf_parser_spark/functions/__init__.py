@@ -1,5 +1,5 @@
 """Training-data pipeline operators: cleaning, filtering, dedup,
-similarity, text analysis and packing.
+text analysis and packing.
 
 These widen the engine beyond the reference's extraction surface
 (SURVEY.md §2) with the operations a 100 TB training-data pipeline
@@ -23,7 +23,6 @@ from . import (  # noqa: F401
     packing,
     pii,
     sampling,
-    similarity,
     sketches,
     textstats,
 )

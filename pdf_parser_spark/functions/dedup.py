@@ -1,8 +1,8 @@
 """Deduplication operators for corpus curation.
 
-Five public-technique dedup families (exact hash, n-gram Jaccard,
-MinHash+LSH banding, SimHash, embedding-cosine), each expressed with
-Spark built-ins so the hot path is JVM-side and shuffle-aware:
+Four public-technique dedup families (exact hash, n-gram Jaccard,
+MinHash+LSH banding, SimHash), each expressed with Spark built-ins
+so the hot path is JVM-side and shuffle-aware:
 
 - exact:   one groupBy on md5(text) — a single hash shuffle; at 100 TB
            this is the cheapest possible dedup (map-side partial agg on
@@ -454,127 +454,6 @@ def simhash16_table(
     )
 
 
-def embedding_topk_pairs(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    top_n: int = 20,
-    round_digits: int = 4,
-) -> DataFrame:
-    """Most-similar (a_id, b_id, cos) pairs by exact cosine, a<b.
-
-    Brute-force O(n²) — the *verification* path. The scale path is
-    LSH/IVF bucketing (similarity.ivf_topk) which prunes candidates
-    before this exact re-rank. Dot products fold in double precision
-    sequentially (zip_with + aggregate) so any engine reproduces the
-    same bits.
-    """
-    from .similarity import cosine_expr
-
-    # the a<b predicate is non-equi, so this compiles to a
-    # BroadcastNestedLoopJoin whose parallelism is the STREAMED side's
-    # partition count — a small single-file input would otherwise run
-    # the whole O(n²) scan on one core; repartition the streamed side
-    # to the cluster's parallelism and pin the broadcast side
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    a = emb.select(
-        F.col(id_col).alias("a_id"), F.col(vec_col).alias("va")
-    ).repartition(par).alias("a")
-    b = emb.select(
-        F.col(id_col).alias("b_id"), F.col(vec_col).alias("vb")
-    ).alias("b")
-    pairs = a.join(F.broadcast(b), F.col("a_id") < F.col("b_id"))
-    scored = pairs.select(
-        "a_id", "b_id", cosine_expr(F.col("va"), F.col("vb")).alias("_cos")
-    )
-    # orderBy+limit compiles to TakeOrderedAndProject: per-partition
-    # top-k then a k-row merge on the driver — no global sort shuffle.
-    return (
-        scored.orderBy(F.desc("_cos"), "a_id", "b_id")
-        .limit(top_n)
-        .select("a_id", "b_id", F.round("_cos", round_digits).alias("cos"))
-    )
-
-
-def embedding_neardup_bucketed(
-    emb: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    round_digits: int = 4,
-    nprobe: int = 1,
-) -> DataFrame:
-    """Scale-path embedding near-dup: nearest-centroid cell bucketing
-    (broadcast codebook, pure expressions) turns the O(n²) pair scan of
-    :func:`embedding_topk_pairs` into an equi-join on cell id — per-cell
-    work is n²/cells², summed n²/cells, and the join hash-partitions /
-    AQE-skew-splits like any other equi-join. Standard recall caveat: a
-    near-dup pair straddling a cell boundary is missed — raise *nprobe*
-    to probe each vector's top-p cells (one side explodes to p rows;
-    a pair is found when either member's primary cell is among the
-    other's top-p).
-
-    Returns (a_id, b_id, cos) with a_id < b_id for pairs with cosine ≥
-    *threshold* (compared pre-rounding; output rounded for the oracle).
-    """
-    from .similarity import centroid_cells, dot_expr
-
-    # compute each vector's norm ONCE (n rows, materialized at the join
-    # exchange) so the per-pair work inside the join is a single dot
-    # product + one divide — cosine_expr would recompute both norms per
-    # pair, tripling the O(pairs × dim) cost. (Not normalized via
-    # F.transform(x / norm): a higher-order lambda re-evaluates the
-    # norm subtree per ELEMENT — O(dim²) per row.)
-    vec = F.col(vec_col)
-    norm = F.sqrt(dot_expr(vec, vec))
-    # build side: each vector at its primary cell
-    b = emb.select(
-        F.col(id_col).alias("b_id"),
-        vec.alias("vb"),
-        norm.alias("nb"),
-        F.element_at(centroid_cells(vec_col, centroids, 1), 1).alias("cell"),
-    )
-    # probe side: each vector exploded to its top-nprobe cells, so the
-    # join input grows nprobe×, not nprobe²×. Both orderings are kept
-    # (a_id != b_id, canonicalized below) so a pair is found when
-    # either member probes the other's primary cell.
-    a = emb.select(
-        F.col(id_col).alias("a_id"),
-        vec.alias("va"),
-        norm.alias("na"),
-        F.explode(centroid_cells(vec_col, centroids, nprobe)).alias("cell"),
-    )
-    pairs = (
-        a.join(b, "cell")
-        .where(F.col("a_id") != F.col("b_id"))
-        .select(
-            F.least("a_id", "b_id").alias("a_id"),
-            F.greatest("a_id", "b_id").alias("b_id"),
-            "va",
-            "na",
-            "vb",
-            "nb",
-        )
-    )
-    scored = pairs.select(
-        "a_id",
-        "b_id",
-        (dot_expr(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias(
-            "_cos"
-        ),
-    )
-    # a same-cell pair is found in both directions, and a straddling
-    # pair via several probed cells; the cosine is bit-identical each
-    # time (same operands, same fold order), so a distinct on the small
-    # post-threshold set removes the duplicates
-    return (
-        scored.where(F.col("_cos") >= threshold)
-        .select("a_id", "b_id", F.round("_cos", round_digits).alias("cos"))
-        .distinct()
-    )
-
-
 #: per-row repetition counts over a shingle array bound as ``_sh``
 REPETITION_COUNTS_SQL = {
     "n_shingles": "CAST(size(_sh) AS INT)",
@@ -632,7 +511,7 @@ def connected_components(
 ) -> DataFrame:
     """(id, comp) per node of the candidate-pair graph, comp = min node
     id in the node's connected component — the step between pair
-    generation (LSH / SimHash / embedding buckets) and keeper election
+    generation (LSH / SimHash buckets) and keeper election
     in a dedup pipeline: keep ``id == comp``, drop the rest, and a
     whole near-dup CLUSTER (not just each pair) collapses to one doc.
 
@@ -734,7 +613,7 @@ def jaccard_for_pairs(
 ) -> DataFrame:
     """n-gram Jaccard for an ARBITRARY candidate-pair table — the
     verify stage of a two-stage (candidates → confirm) dedup: LSH /
-    SimHash / embedding buckets propose, exact Jaccard disposes.
+    SimHash buckets propose, exact Jaccard disposes.
 
     One distinct exploded-shingle table serves both sides; |∩| comes
     from routing each pair's a-side shingles to the b-side equi-join,

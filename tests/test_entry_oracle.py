@@ -9,7 +9,7 @@ import pandas as pd
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = ["documents", "embeddings"]
+TABLES = ["documents"]
 
 
 @pytest.fixture(scope="module")

@@ -1,12 +1,10 @@
-"""Training-data pipeline operators: dedup, similarity, text stats."""
-
-import math
+"""Training-data pipeline operators: dedup, text stats."""
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from pdf_parser_spark.functions import dedup, similarity, textstats
+from pdf_parser_spark.functions import dedup, textstats
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -14,11 +12,6 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
 
 # ---------------------------------------------------------------- textstats
@@ -246,264 +239,6 @@ def test_jaccard_pairs_counts(spark):
     ).head()
     # shingles: {abc,bcd,cde} vs {abc,bcd} → inter 2, union 3
     assert (row["inter_n"], row["union_n"]) == (2, 3)
-
-
-def test_embedding_topk_pairs(emb):
-    top = dedup.embedding_topk_pairs(emb, top_n=5).collect()
-    assert len(top) == 5
-    assert all(r["a_id"] < r["b_id"] for r in top)
-    cs = [r["cos"] for r in top]
-    assert cs == sorted(cs, reverse=True)
-
-
-# -------------------------------------------------------------- similarity
-
-
-def test_cosine_expr_exact(spark):
-    df = spark.createDataFrame(
-        [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0])],
-        "a ARRAY<FLOAT>, b ARRAY<FLOAT>",
-    )
-    vals = [r["c"] for r in df.select(
-        similarity.cosine_expr(F.col("a"), F.col("b")).alias("c")).collect()]
-    assert math.isclose(vals[0], 1.0) and math.isclose(vals[1], 0.0)
-
-
-def test_topk_and_ivf(emb):
-    q = emb.where(F.col("vec_id") < 3)
-    exact = similarity.cosine_topk(q, emb, k=5).collect()
-    assert len(exact) == 15
-    per_q = {r["q_id"] for r in exact}
-    assert per_q == {0, 1, 2}
-    for r in exact:
-        assert r["neighbor_id"] != r["q_id"]
-    cb = similarity.medoid_centroids(emb, n_cells=4)
-    ivf = similarity.ivf_topk(q, emb, cb, k=3).collect()
-    assert 0 < len(ivf) <= 9
-    # IVF results are a subset-cell re-rank: every (q, neighbor) pair it
-    # returns shares the query's nearest cell by construction
-    primary = F.element_at(similarity.centroid_cells("embedding", cb, 1), 1)
-    cells = {r["vec_id"]: r["cell"] for r in emb.select(
-        "vec_id", primary.alias("cell")
-    ).collect()}
-    for r in ivf:
-        assert cells[r["q_id"]] == cells[r["neighbor_id"]]
-
-
-def test_kmeans_ivf_recall_vs_bruteforce(emb):
-    """Real-codebook IVF (kmeans on a sample → broadcast centroids →
-    argmin cell expressions): all cells populated, and single-probe
-    recall@3 vs exact brute force is well above chance (measured 0.7 on
-    this corpus; chance ≈ 1/8)."""
-    q = emb.where(F.col("vec_id") < 10)
-    cb = similarity.kmeans_codebook(emb, n_cells=8, iters=8)
-    assert len(cb) == 8 and len(cb[0]) == 64
-    bf = similarity.cosine_topk(q, emb, k=3).collect()
-    ivf = similarity.ivf_topk(q, emb, k=3, centroids=cb).collect()
-    bfs = {(r.q_id, r.neighbor_id) for r in bf}
-    ivs = {(r.q_id, r.neighbor_id) for r in ivf}
-    assert len(bfs & ivs) / len(bfs) >= 0.5
-    # nprobe widens the probe set: recall is monotone in nprobe, and
-    # probing EVERY cell must reproduce brute force exactly
-    iv4 = {
-        (r.q_id, r.neighbor_id)
-        for r in similarity.ivf_topk(q, emb, k=3, centroids=cb, nprobe=4).collect()
-    }
-    assert len(bfs & iv4) >= len(bfs & ivs)
-    iv_all = {
-        (r.q_id, r.neighbor_id)
-        for r in similarity.ivf_topk(q, emb, k=3, centroids=cb, nprobe=8).collect()
-    }
-    assert iv_all == bfs
-    # every cell used (balanced codebook on this corpus)
-    primary = F.element_at(similarity.centroid_cells("embedding", cb, 1), 1)
-    assert emb.select(primary.alias("c")).distinct().count() == 8
-
-
-def test_medoid_centroids_deterministic(emb):
-    a = similarity.medoid_centroids(emb, n_cells=4)
-    b = similarity.medoid_centroids(emb, n_cells=4)
-    assert a == b and len(a) == 4
-
-
-def test_centroid_cells(emb):
-    """centroid_cells ranks cells by squared distance: element 1 is the
-    NumPy argmin, the top-n prefix is the NumPy argsort, a duplicated
-    centroid ties to the lower index, and n clamps to the codebook."""
-    import numpy as np
-
-    sample = emb.orderBy("vec_id").limit(64)
-    x = np.asarray(
-        [r["embedding"] for r in sample.collect()], dtype=np.float64
-    )
-    cb = similarity.medoid_centroids(emb.where(F.col("vec_id") >= 100), 8)
-    d2 = ((x[:, None, :] - np.asarray(cb)[None, :, :]) ** 2).sum(axis=2)
-    got = [
-        list(r["c"])
-        for r in sample.select(
-            similarity.centroid_cells("embedding", cb, 3).alias("c")
-        ).collect()
-    ]
-    assert [c[0] for c in got] == d2.argmin(axis=1).tolist()
-    assert got == np.argsort(d2, axis=1, kind="stable")[:, :3].tolist()
-    # centroid 5 repeated as 8 → an exact distance tie, broken to 5
-    dup = cb + [cb[5]]
-    ranked = [
-        list(r["c"])
-        for r in sample.select(
-            similarity.centroid_cells("embedding", dup, 20).alias("c")
-        ).collect()
-    ]
-    assert all(len(c) == 9 and sorted(c) == list(range(9)) for c in ranked)
-    assert all(c.index(5) == c.index(8) - 1 for c in ranked)
-
-
-def test_ivf_recall_perf_curve(spark):
-    """Pins the IVF search-quality curve on a 2000-vector clustered
-    corpus: recall@3 is non-decreasing in nprobe, candidate volume is
-    monotone in nprobe, and a finer codebook at fixed nprobe yields
-    fewer candidates (the nprobe·N/cells shape). Codebooks are fitted
-    once per cell count; sizing guidance lives in
-    similarity.kmeans_codebook's docstring (√N rule)."""
-    import numpy as np
-
-    from pdf_parser_spark.functions import similarity
-
-    rng = np.random.default_rng(0)
-    centers = rng.normal(size=(32, 16))
-    assign = rng.integers(0, 32, 2000)
-    X = centers[assign] + 0.15 * rng.normal(size=(2000, 16))
-    X32 = X.astype(np.float32)
-    rows = [(i, [float(x) for x in X32[i]]) for i in range(2000)]
-    emb = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-    emb = emb.localCheckpoint(eager=True)
-    n_q, k = 12, 3
-    queries = emb.where(F.col("vec_id") < n_q)
-
-    # exact ground truth, driver-side numpy on the float32-cast values
-    Xd = X32.astype(np.float64)
-    norm = Xd / np.linalg.norm(Xd, axis=1, keepdims=True)
-    sims = norm[:n_q] @ norm.T
-    np.fill_diagonal(sims[:, :n_q], -np.inf)
-    truth = {q: set(np.argsort(-sims[q])[:k].tolist()) for q in range(n_q)}
-
-    cand_at = {}
-    for n_cells in (16, 64):
-        book = similarity.kmeans_codebook(emb, n_cells=n_cells, iters=5)
-        cell_counts = {
-            r["cell"]: r["n"]
-            for r in emb.select(
-                F.element_at(
-                    similarity.centroid_cells("embedding", book, 1), 1
-                ).alias("cell")
-            )
-            .groupBy("cell")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        prev_recall, prev_cand = -1.0, 0
-        for nprobe in (1, 2, 4, 8):
-            got = similarity.ivf_topk(
-                queries, emb, k=k, centroids=book, nprobe=nprobe
-            ).collect()
-            rec = sum(
-                1 for r in got if r["neighbor_id"] in truth[r["q_id"]]
-            ) / (n_q * k)
-            probed = queries.select(
-                similarity.centroid_cells("embedding", book, nprobe).alias("cells")
-            ).collect()
-            cand = sum(
-                cell_counts.get(c, 0) for r in probed for c in r["cells"]
-            )
-            assert rec >= prev_recall - 1e-9, (n_cells, nprobe, rec, prev_recall)
-            assert cand >= prev_cand, (n_cells, nprobe)
-            prev_recall, prev_cand = rec, cand
-            cand_at[(n_cells, nprobe)] = cand
-        if n_cells == 16:
-            # probing half of 16 cells on a 32-cluster corpus → high recall
-            assert prev_recall >= 0.8, prev_recall
-    # finer codebook at fixed nprobe → fewer candidates per query
-    assert cand_at[(64, 1)] < cand_at[(16, 1)]
-
-
-def test_embedding_neardup_bucketed(spark, emb):
-    """Scale-path near-dup: injected noisy clones are found inside
-    their cell; results are a subset of the exact O(n²) pairs at the
-    same threshold (bucketing can only MISS, never invent)."""
-    from pdf_parser_spark.functions import similarity
-
-    base = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    ).limit(100)
-    clones = base.select(
-        (F.col("vec_id") + 10_000).alias("vec_id"),
-        F.transform(
-            "embedding", lambda x: x * 0.9 + 0.01
-        ).alias("embedding"),
-    )
-    u = base.unionAll(clones).localCheckpoint(eager=True)
-    cents = similarity.medoid_centroids(emb, n_cells=16)
-    got = dedup.embedding_neardup_bucketed(u, cents, threshold=0.95).collect()
-    assert got, "no near-dup pairs found"
-    found_pairs = {(r["a_id"], r["b_id"]) for r in got}
-    # every found pair is a (source, its clone) pair with high cosine
-    assert all(b == a + 10_000 for a, b in found_pairs)
-    assert all(r["cos"] >= 0.95 for r in got)
-    # subset of the exact path at the same threshold
-    from pdf_parser_spark.functions.similarity import cosine_expr
-
-    a = u.select(F.col("vec_id").alias("a_id"), F.col("embedding").alias("va"))
-    b = u.select(F.col("vec_id").alias("b_id"), F.col("embedding").alias("vb"))
-    exact = (
-        a.join(b, F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", cosine_expr(F.col("va"), F.col("vb")).alias("c"))
-        .where(F.col("c") >= 0.95)
-        .collect()
-    )
-    exact_pairs = {(r["a_id"], r["b_id"]) for r in exact}
-    assert found_pairs <= exact_pairs
-    # recall on this corpus: most clones share their source's cell
-    assert len(found_pairs) >= 0.6 * len(exact_pairs)
-
-
-def test_embedding_neardup_multiprobe_recall(spark, emb):
-    """nprobe=2 finds every single-probe pair PLUS boundary-straddling
-    ones, and stays a subset of the exact O(n²) result."""
-    from pdf_parser_spark.functions import similarity
-
-    base = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    ).limit(150)
-    clones = base.select(
-        (F.col("vec_id") + 10_000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * 0.9 + 0.01).alias("embedding"),
-    )
-    u = base.unionAll(clones).localCheckpoint(eager=True)
-    cents = similarity.medoid_centroids(emb, n_cells=16)
-    p1 = {
-        (r["a_id"], r["b_id"])
-        for r in dedup.embedding_neardup_bucketed(u, cents, nprobe=1).collect()
-    }
-    rows2 = dedup.embedding_neardup_bucketed(u, cents, nprobe=2).collect()
-    p2 = {(r["a_id"], r["b_id"]) for r in rows2}
-    assert len(rows2) == len(p2), "multi-probe must de-duplicate pairs"
-    assert p1 <= p2
-    from pdf_parser_spark.functions.similarity import cosine_expr
-
-    a = u.select(F.col("vec_id").alias("a_id"), F.col("embedding").alias("va"))
-    b = u.select(F.col("vec_id").alias("b_id"), F.col("embedding").alias("vb"))
-    exact = {
-        (r["a_id"], r["b_id"])
-        for r in (
-            a.join(b, F.col("a_id") < F.col("b_id"))
-            .select("a_id", "b_id", cosine_expr(F.col("va"), F.col("vb")).alias("c"))
-            .where(F.col("c") >= 0.95)
-        ).collect()
-    }
-    assert p2 <= exact
-    assert len(p2) >= len(p1)
 
 
 def test_repetition_stats(spark):

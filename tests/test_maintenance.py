@@ -1,18 +1,12 @@
 """Table-maintenance operators: snapshot CDC diff, compaction planning,
-Bloom prefilter, domain blocklist, JL projection."""
+Bloom prefilter, domain blocklist, Z-order layout."""
 
 from __future__ import annotations
-
-import pytest
 
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.functions import maintenance
 from pdf_parser_spark.functions.filtering import suffix_blocked_expr
-from pdf_parser_spark.functions.similarity import (
-    jl_project_exprs,
-    jl_projection_matrix,
-)
 
 
 # ---------------------------------------------------------- snapshot diff
@@ -120,48 +114,6 @@ def test_suffix_blocklist_dot_boundary(spark):
     }
     for h, want in hosts:
         assert got[h] is want, h
-
-
-# ----------------------------------------------------------- JL projection
-
-
-def test_jl_matrix_deterministic_and_signed():
-    m1 = jl_projection_matrix(64, 8)
-    m2 = jl_projection_matrix(64, 8)
-    assert m1 == m2
-    s = 1.0 / (8 ** 0.5)
-    assert all(abs(x) == pytest.approx(s) for row in m1 for x in row)
-    # signs are balanced-ish (md5 uniformity): between 35% and 65% positive
-    pos = sum(1 for row in m1 for x in row if x > 0) / (64 * 8)
-    assert 0.35 < pos < 0.65
-
-
-def test_jl_projection_preserves_relative_distance(spark):
-    """JL guarantee, spot-checked: ratios of pairwise distances survive
-    the 64→8 projection within a loose ε on well-separated points."""
-    import math
-
-    a = [1.0] * 32 + [0.0] * 32
-    b = [0.0] * 32 + [1.0] * 32
-    c = [1.0] * 32 + [1.0] * 32
-    df = spark.createDataFrame(
-        [(0, a), (1, b), (2, c)], "vec_id long, embedding array<float>"
-    )
-    mat = jl_projection_matrix(64, 8)
-    rows = {
-        r["vec_id"]: [r[f"p{j}"] for j in range(8)]
-        for r in df.select(
-            "vec_id", *jl_project_exprs(F.col("embedding"), mat)
-        ).collect()
-    }
-
-    def dist(u, v):
-        return math.sqrt(sum((x - y) ** 2 for x, y in zip(u, v)))
-
-    d_ab_orig = math.sqrt(64)
-    d_ab_proj = dist(rows[0], rows[1])
-    # distortion within a generous JL ε for 8 dims
-    assert 0.4 * d_ab_orig < d_ab_proj < 1.6 * d_ab_orig
 
 
 # --------------------------------------------------------------- Z-order

@@ -43,18 +43,6 @@ def test_host_running_totals_no_global_sort(spark):
     assert "rangepartitioning" not in plan.lower()
 
 
-def test_embedding_topk_avoids_global_sort(spark):
-    plan = _plan(spark, "dedup_embedding")
-    assert "TakeOrderedAndProject" in plan
-    assert "rangepartitioning" not in plan.lower()
-
-
-def test_ann_queries_broadcast_query_side(spark):
-    for name in ("ann_topk_bruteforce", "ann_ivf_bucketed"):
-        plan = _plan(spark, name)
-        assert "Broadcast" in plan, name
-
-
 def test_scalar_chain_prunes_scan_columns(spark):
     plan = _plan(spark, "scalar_chain")
     # ReadSchema at the parquet scan must not drag the full row in
@@ -63,19 +51,6 @@ def test_scalar_chain_prunes_scan_columns(spark):
     schema_line = plan[start : plan.find("\n", start)]
     assert "source" not in schema_line and "lang" not in schema_line
     assert schema_line.count(",") <= 3
-
-
-def test_bucketed_neardup_equi_join_no_cartesian(spark):
-    """The scale-path near-dup and IVF ANN must stay equi-joins on cell
-    id — a plan regression to a cartesian/broadcast-nested-loop product
-    is the 100 TB failure mode these queries exist to avoid."""
-    for name in ("dedup_embedding_multiprobe", "ann_ivf_bucketed"):
-        plan = _plan(spark, name)
-        assert "CartesianProduct" not in plan, name
-        assert "BroadcastNestedLoopJoin" not in plan, name
-        assert ("BroadcastHashJoin" in plan) or ("SortMergeJoin" in plan) or (
-            "ShuffledHashJoin" in plan
-        ), name
 
 
 def test_repetition_score_map_only_pruned_scan(spark):
@@ -347,14 +322,6 @@ def test_host_blocklist_is_map_only(spark):
     plan = _plan(spark, "host_blocklist")
     assert "Exchange" not in plan  # literal-list test: no join, no shuffle
     assert "Join" not in plan
-
-
-def test_embed_project_is_map_only(spark):
-    plan = _plan(spark, "embed_project")
-    assert "Exchange" not in plan  # matrix rides as plan literals
-    assert "Join" not in plan
-    # column pruning: only vec_id + embedding leave the scan
-    assert "label" not in plan.split("ReadSchema")[-1][:400]
 
 
 def test_compaction_plan_partition_scoped_window(spark):

@@ -19,7 +19,7 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-TABLES = ["documents", "embeddings"]
+TABLES = ["documents"]
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:

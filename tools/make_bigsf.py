@@ -2,9 +2,9 @@
 
 The driver ships sf0.001/0.01/0.1 only; the r3 verdict asked for a
 full-gate parity sweep at sf1.0 to catch cardinality-dependent drift
-(VERDICT.md item 10). This tool replicates the two tables the query
-registry reads (documents, embeddings) K times (default 10 → "sf1")
-with keys remapped by a fixed stride so every id stays unique. No
+(VERDICT.md item 10). This tool replicates the one table the query
+registry reads (documents) K times (default 10 → "sf1") with keys
+remapped by a fixed stride so every id stays unique. No
 randomness: run twice, get byte-identical parquet. Spark and the
 DuckDB oracle then read the SAME files, so parity holds regardless of
 how clone-heavy the replicated corpus is (10x exact clones is itself
@@ -23,15 +23,12 @@ import sys
 import duckdb
 
 # key stride per table: > max key in sf0.1, round for readability
-STRIDES = {"documents": 10_000, "embeddings": 10_000}
+STRIDES = {"documents": 10_000}
 
 REPLICATE_SQL = {
     "documents": (
         "SELECT doc_id + {off} AS doc_id, text, lang, source, n_chars "
         "FROM src"
-    ),
-    "embeddings": (
-        "SELECT vec_id + {off} AS vec_id, embedding, label FROM src"
     ),
 }
 
