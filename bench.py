@@ -77,10 +77,7 @@ HEADLINE = [
     "bpe_pair_counts",
     "sample_split",
     "length_percentiles",
-    "snapshot_diff",
-    "compaction_plan",
     "host_blocklist",
-    "zorder_layout",
     "vocab_census",
     "containment_anti_join",
     "spatial_block_join",

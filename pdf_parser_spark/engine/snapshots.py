@@ -478,11 +478,11 @@ class SnapshotLog:
         decision costs a few JSON reads, never a data-file open.
 
         Pruning power follows layout: it skips files only when the
-        table is clustered on *col* (e.g. a compaction/Z-order rewrite
-        — functions/maintenance.py); on a hash-bucketed layout every
-        bucket spans the full value range and nothing skips. A commit
-        with no stats for *col* is conservatively kept. Returns None
-        when every commit is pruned (the scan provably has no rows)."""
+        table is clustered on *col* (a rewrite sorted on the column);
+        on a hash-bucketed layout every bucket spans the full value
+        range and nothing skips. A commit with no stats for *col* is
+        conservatively kept. Returns None when every commit is pruned
+        (the scan provably has no rows)."""
         kept = []
         for s in self.visible(version):
             st = (s.stats or {}).get(col)

@@ -276,33 +276,6 @@ def lsh_candidate_pairs(
     )
 
 
-def jaccard_pairs(
-    left: DataFrame,
-    right: DataFrame,
-    join_cond,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
-) -> DataFrame:
-    """n-gram Jaccard on candidate pairs → (a_id, b_id, inter_n, union_n).
-
-    Counts are exact integers in any engine; thresholding is the
-    caller's integer cross-multiplication (inter*5 >= union*4 ⇔ J ≥ 0.8).
-    `join_cond` receives the aliased frames ("a", "b") — pass an
-    equi-condition (e.g. LSH band or direct id pairing) so the join
-    hash-partitions; a theta-cond degrades to a broadcast NLJ.
-    """
-    sh = f"array_distinct({text_shingles_sql(ident(text_col), shingle_k)})"
-    a = left.selectExpr(f"{ident(id_col)} AS a_id", f"{sh} AS sh_a").alias("a")
-    b = right.selectExpr(f"{ident(id_col)} AS b_id", f"{sh} AS sh_b").alias("b")
-    return a.join(b, join_cond).select(
-        "a_id",
-        "b_id",
-        F.size(F.array_intersect("sh_a", "sh_b")).cast("int").alias("inter_n"),
-        F.size(F.array_union("sh_a", "sh_b")).cast("int").alias("union_n"),
-    )
-
-
 def fingerprint_table(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 5
 ) -> DataFrame:

@@ -2904,187 +2904,6 @@ def length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# table maintenance: CDC diff, compaction planning, Bloom prefilter
-
-_NEW_SNAPSHOT_SQL = (
-    # next crawl round, derived deterministically: every 7th url gone,
-    # every 5th re-crawled with new content, every 11th brand-new url
-    f"SELECT {URL_SQL} AS url, "
-    "md5(CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END) "
-    "AS content_hash FROM documents WHERE doc_id % 7 <> 0 "
-    f"UNION ALL SELECT {URL_SQL} || '/new' AS url, md5(text) "
-    "FROM documents WHERE doc_id % 11 = 0"
-)
-
-
-@q(
-    "snapshot_diff",
-    f"WITH base AS (SELECT {URL_SQL} AS url, md5(text) AS content_hash "
-    "FROM documents), "
-    f"new AS ({_NEW_SNAPSHOT_SQL}) "
-    "SELECT coalesce(b.url, n.url) AS url, "
-    "CASE WHEN b.url IS NULL THEN 'added' "
-    "WHEN n.url IS NULL THEN 'removed' "
-    "WHEN b.content_hash <> n.content_hash THEN 'changed' "
-    "ELSE 'unchanged' END AS change "
-    "FROM base b FULL OUTER JOIN new n ON b.url = n.url "
-    "WHERE b.url IS NULL OR n.url IS NULL "
-    "OR b.content_hash <> n.content_hash",
-)
-def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-level CDC between two corpus snapshots (the input to
-    incremental re-extraction): full outer join on url comparing
-    content hashes, emitting only added/removed/changed rows. Both
-    sides shuffle only (url, 32-hex) — never payloads — and the join
-    is a plain equi-join, the shape an Iceberg changelog feeds."""
-    from .functions import maintenance
-
-    docs = _read(spark, sf_dir, "documents")
-    base = docs.select(
-        F.expr(URL_SQL).alias("url"), F.md5("text").alias("content_hash")
-    )
-    new = (
-        docs.where(F.col("doc_id") % 7 != 0)
-        .select(
-            F.expr(URL_SQL).alias("url"),
-            F.md5(
-                F.when(
-                    F.col("doc_id") % 5 == 0, F.concat("text", F.lit(" v2"))
-                ).otherwise(F.col("text"))
-            ).alias("content_hash"),
-        )
-        .unionByName(
-            docs.where(F.col("doc_id") % 11 == 0).select(
-                F.concat(F.expr(URL_SQL), F.lit("/new")).alias("url"),
-                F.md5("text").alias("content_hash"),
-            )
-        )
-    )
-    return maintenance.snapshot_diff(base, new)
-
-
-_COMPACT_TARGET = 4096  # chars per planned output file (bench-scale twin
-# of a 128 MiB Iceberg target: small enough that hosts at sf0.01 span
-# multiple files, so boundaries are actually exercised)
-
-
-@q(
-    "compaction_plan",
-    f"WITH r AS (SELECT {HOST_SQL} AS host, {URL_SQL} AS url, "
-    "length(text)::BIGINT AS size_bytes FROM documents) "
-    "SELECT host, url, size_bytes, "
-    "(floor((sum(size_bytes) OVER (PARTITION BY host ORDER BY url "
-    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - size_bytes) "
-    f"/ {_COMPACT_TARGET}))::INT AS file_seq FROM r",
-)
-def compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-file compaction planning (the math of Iceberg's
-    rewrite_data_files): greedy running-sum binning of each host's rows
-    into ~target-size output files. The window is PARTITIONED by host —
-    no global sort, every host plans independently, which is exactly
-    how a 1000-executor maintenance job spreads."""
-    from .functions import maintenance
-
-    docs = _read(spark, sf_dir, "documents").select(
-        F.expr(HOST_SQL).alias("host"),
-        F.expr(URL_SQL).alias("url"),
-        F.length("text").cast("bigint").alias("size_bytes"),
-    )
-    return maintenance.compaction_plan(
-        docs, size_col="size_bytes", part_col="host", order_col="url",
-        target_bytes=_COMPACT_TARGET,
-    )
-
-
-def _duck_bloom_pos(h: str, i: int) -> str:
-    return f"(('0x' || substr({h}, {1 + 8 * i}, 8))::BIGINT % 1024)"
-
-
-def _duck_bloom_contrib(h: str) -> str:
-    """Per-row OR of the 4 probe bits that fall into word g.i."""
-    parts = []
-    for i in range(4):
-        p = _duck_bloom_pos(h, i)
-        parts.append(
-            f"(CASE WHEN {p} // 64 = g.i THEN (1::UBIGINT << ({p} % 64)) "
-            "ELSE 0::UBIGINT END)"
-        )
-    return " | ".join(parts)
-
-
-def _duck_bloom_hit(h: str) -> str:
-    checks = []
-    for i in range(4):
-        p = _duck_bloom_pos(h, i)
-        checks.append(f"((a.ws[{p} // 64 + 1] >> ({p} % 64)) & 1) = 1")
-    return " AND ".join(checks)
-
-
-@q(
-    "bloom_prefilter",
-    "WITH seen AS (SELECT DISTINCT md5(text) AS h FROM documents "
-    "WHERE doc_id % 2 = 0), "
-    "words AS (SELECT g.i AS w, "
-    f"bit_or({_duck_bloom_contrib('seen.h')}) AS val "
-    "FROM seen, (SELECT unnest(generate_series(0, 15)) AS i) g "
-    "GROUP BY g.i), "
-    "a AS (SELECT list(val ORDER BY w) AS ws FROM words), "
-    "inc AS (SELECT doc_id, md5(text) AS h FROM documents "
-    f"WHERE doc_id % 2 = 1 UNION ALL SELECT doc_id + {CLONE_OFFSET}, "
-    "md5(text) FROM documents WHERE doc_id % 2 = 0) "
-    "SELECT inc.doc_id, "
-    f"(CASE WHEN {_duck_bloom_hit('inc.h')} THEN 1 ELSE 0 END)::INT "
-    "AS bloom_hit, "
-    "(CASE WHEN inc.h IN (SELECT h FROM seen) THEN 1 ELSE 0 END)::INT "
-    "AS is_dup FROM inc, a",
-)
-def bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-prefiltered snapshot dedup: build a 1024-bit / 4-probe
-    filter over the committed snapshot's hashes in ONE map-side-combined
-    aggregate (a bounded 16-int64 collect — the filter, not data), then
-    test the incoming batch with a pure map-side literal expression.
-    Only rows the filter passes reach the exact equi-join; misses are
-    emitted directly — sound because Bloom filters have NO false
-    negatives, which the oracle pins in data (every is_dup=1 row must
-    show bloom_hit=1). At 10^12 rows this is the standard 'drop ~99% of
-    fresh docs before the shuffle' gate; md5-derived probes make the
-    filter bit-identical in any engine."""
-    from .functions import maintenance
-
-    docs = _read(spark, sf_dir, "documents")
-    seen = (
-        docs.where(F.col("doc_id") % 2 == 0)
-        .select(F.md5("text").alias("h"))
-        .distinct()
-    )
-    words = maintenance.bloom_words(seen, "h")
-    inc = (
-        docs.where(F.col("doc_id") % 2 == 1)
-        .select("doc_id", F.md5("text").alias("h"))
-        .unionByName(
-            docs.where(F.col("doc_id") % 2 == 0).select(
-                (F.col("doc_id") + CLONE_OFFSET).alias("doc_id"),
-                F.md5("text").alias("h"),
-            )
-        )
-        .withColumn(
-            "bloom_hit",
-            maintenance.bloom_hit_expr(F.col("h"), words).cast("int"),
-        )
-    )
-    hits = inc.where(F.col("bloom_hit") == 1)
-    misses = inc.where(F.col("bloom_hit") == 0).withColumn(
-        "is_dup", F.lit(0)
-    )
-    flagged = hits.join(
-        seen.withColumn("is_dup", F.lit(1)), on="h", how="left"
-    ).fillna(0, subset=["is_dup"])
-    return flagged.unionByName(misses).select(
-        "doc_id", "bloom_hit", F.col("is_dup").cast("int").alias("is_dup")
-    )
-
-
-# ---------------------------------------------------------------------------
 # domain blocklist filtering
 
 _BLOCK_SUFFIXES = ["heavy.example.org", "site-13.example.com", "example.net"]
@@ -3637,51 +3456,6 @@ def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = bpetrain.learn_merges(words, n_merges=_BPE_ROUNDS)
     return spark.createDataFrame(
         merges, "merge_rank INT, left_sym STRING, right_sym STRING, cnt BIGINT"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Z-order layout key (data-skipping file layout)
-
-
-def _duck_zval(a: str, b: str, bits: int = 16) -> str:
-    terms = []
-    for i in range(bits):
-        terms.append(f"(((({a}) >> {i}) & 1) << {2 * i})")
-        terms.append(f"(((({b}) >> {i}) & 1) << {2 * i + 1})")
-    return " | ".join(terms)
-
-
-_Z_H16 = "(('0x' || substr(md5(host), 1, 4))::BIGINT)"
-_Z_L16 = "least(n_chars, 65535)"
-
-
-@q(
-    "zorder_layout",
-    f"WITH r AS (SELECT doc_id, {HOST_SQL} AS host, n_chars "
-    "FROM documents) "
-    f"SELECT doc_id, ({_duck_zval(_Z_H16, _Z_L16)})::BIGINT AS zval, "
-    f"(({_duck_zval(_Z_H16, _Z_L16)}) >> 24)::INT AS zbucket FROM r",
-)
-def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order (Morton) layout keys over (host-hash, doc length) — the
-    math of Delta/Iceberg OPTIMIZE ZORDER BY: interleaved bits put rows
-    close in EITHER dimension into the same z-range, so z-range-sorted
-    files carry min/max stats that prune scans on BOTH columns. The
-    z-bucket is static top-bits (no ntile → no global sort); a writer
-    repartitionByRange's on it. Pure map-stage integer arithmetic,
-    reproduced bit-for-bit by the oracle."""
-    from .functions import maintenance
-
-    docs = _read(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.expr(HOST_SQL).alias("host"),
-        "n_chars",
-    )
-    h16 = F.conv(F.substring(F.md5("host"), 1, 4), 16, 10).cast("long")
-    l16 = F.least(F.col("n_chars"), F.lit(65535)).cast("long")
-    return maintenance.zorder_layout(docs, h16, l16).select(
-        "doc_id", "zval", "zbucket"
     )
 
 

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.functions import dedup, textstats
+from pdf_parser_spark.functions.filtering import suffix_blocked_expr
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -229,16 +230,6 @@ def test_rotation_densify_short_docs_do_not_collide(spark):
     # one shingle each → 7 empty slots → ≥3 all-empty shared bands
     assert [(r["a_id"], r["b_id"]) for r in naive] == [(1, 2)]
     assert rot == []
-
-
-def test_jaccard_pairs_counts(spark):
-    a = spark.createDataFrame([(1, "a b c d e")], "doc_id INT, text STRING")
-    b = spark.createDataFrame([(1000001, "a b c d")], "doc_id INT, text STRING")
-    row = dedup.jaccard_pairs(
-        a, b, F.col("a_id") + 1000000 == F.col("b_id")
-    ).head()
-    # shingles: {abc,bcd,cde} vs {abc,bcd} → inter 2, union 3
-    assert (row["inter_n"], row["union_n"]) == (2, 3)
 
 
 def test_repetition_stats(spark):
@@ -488,6 +479,26 @@ def test_quality_gate_edge_rows_match_duckdb_oracle(spark):
         d: ("kept", 1) if reason == "lang_mismatch" else (reason, keep)
         for d, (reason, keep) in want.items()
     }
+
+
+def test_suffix_blocklist_dot_boundary(spark):
+    hosts = [
+        ("example.org", True),        # exact
+        ("ads.example.org", True),    # subdomain
+        ("a.b.example.org", True),    # deep subdomain
+        ("notexample.org", False),    # substring must NOT match
+        ("example.org.evil.com", False),  # suffix only, not prefix
+        ("other.net", False),
+    ]
+    df = spark.createDataFrame([(h,) for h, _ in hosts], "host string")
+    got = {
+        r["host"]: r["b"]
+        for r in df.select(
+            "host", suffix_blocked_expr("host", ["example.org"]).alias("b")
+        ).collect()
+    }
+    for h, want in hosts:
+        assert got[h] is want, h
 
 
 def test_top_terms_by_lang_ranking(spark):

@@ -126,49 +126,6 @@ def test_top_terms_vocab_only_window(spark):
     assert "rangepartitioning" not in plan.lower()
 
 
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    """Two tables bucketed on the join key with matching bucket counts
-    must join with NO Exchange on either side (and, being sortBy'd, no
-    extra Sort) — the co-located-join guarantee that removes the
-    dominant shuffle of a 100 TB key-key join."""
-    from pyspark.sql import functions as F
-
-    from pdf_parser_spark.engine.bucketing import (
-        cogrouped_join,
-        write_bucketed,
-    )
-
-    left = spark.range(0, 1000).select(
-        (F.col("id") % 37).cast("string").alias("host"), F.col("id").alias("l")
-    )
-    right = spark.range(0, 500).select(
-        (F.col("id") % 37).cast("string").alias("host"), F.col("id").alias("r")
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        for name, df in (("bkt_left", left), ("bkt_right", right)):
-            write_bucketed(
-                df, name, "host", buckets=8, path=str(tmp_path / name)
-            )
-        joined = cogrouped_join(spark, "bkt_left", "bkt_right", "host")
-        plan = spark._jvm.PythonSQLUtils.explainString(
-            joined._jdf.queryExecution(), "formatted"
-        )
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        # and the result is actually right
-        assert joined.count() == sum(
-            (1000 // 37 + (1 if h < 1000 % 37 else 0))
-            * (500 // 37 + (1 if h < 500 % 37 else 0))
-            for h in range(37)
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_left")
-        spark.sql("DROP TABLE IF EXISTS bkt_right")
-
-
 def test_host_outlinks_single_shuffle_partial_agg(spark):
     plan = _plan(spark, "host_outlinks")
     # extract → explode → one hash shuffle with map-side partials
@@ -322,34 +279,6 @@ def test_host_blocklist_is_map_only(spark):
     plan = _plan(spark, "host_blocklist")
     assert "Exchange" not in plan  # literal-list test: no join, no shuffle
     assert "Join" not in plan
-
-
-def test_compaction_plan_partition_scoped_window(spark):
-    plan = _plan(spark, "compaction_plan")
-    assert "Window" in plan
-    assert "rangepartitioning" not in plan.lower()  # no global sort
-    assert plan.count("Exchange") <= 2
-
-
-def test_snapshot_diff_prunes_scan_and_equi_joins(spark):
-    plan = _plan(spark, "snapshot_diff")
-    # equi-join on url (either strategy), never a nested-loop/cartesian
-    assert "Cartesian" not in plan and "NestedLoop" not in plan
-    # payload never leaves the scans: only doc_id + text are read
-    tail = plan.split("ReadSchema")[-1]
-    assert "lang" not in tail[:400] and "source" not in tail[:400]
-
-
-def test_bloom_prefilter_filter_is_inlined(spark):
-    plan = _plan(spark, "bloom_prefilter")
-    # membership test compiled into the plan (shift arithmetic), not a join
-    assert "shiftright" in plan
-    assert "Cartesian" not in plan and "NestedLoop" not in plan
-
-
-def test_zorder_layout_is_map_only(spark):
-    plan = _plan(spark, "zorder_layout")
-    assert "Exchange" not in plan and "Join" not in plan
 
 
 def test_bpe_tokenize_topk_without_unpartitioned_window(spark):

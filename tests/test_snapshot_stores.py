@@ -364,7 +364,10 @@ def test_bloom_prunes_misses_without_reading_data(spark, tmp_path):
     """A point lookup for an absent url must resolve from manifest
     Bloom filters alone — zero parquet directories opened; a present
     url still prunes to its one bucket. CDC/incremental-dedup probes
-    get the same skip for free."""
+    get the same skip for free. No committed url may miss its own
+    commit's filter (a false negative would hide a stored row)."""
+    from pyspark.sql import functions as F
+
     from pdf_parser_spark.engine.corpus import synthesize_webdocs
     from pdf_parser_spark.engine.snapshots import snapshot_resumable_extract
 
@@ -375,6 +378,29 @@ def test_bloom_prunes_misses_without_reading_data(spark, tmp_path):
     full = snapshot_resumable_extract(spark, docs, out, n_batches=4)
     log = SnapshotLog(out)
     assert all(s.bloom is not None for s in log.visible())
+
+    # every url's bucket and k probe positions, hashed in one select
+    # exactly as the write path hashes them
+    ((n, m, k),) = {
+        (s.n_buckets, s.bloom["m"], s.bloom["k"]) for s in log.visible()
+    }
+    probes = docs.select(
+        "url",
+        F.pmod(F.xxhash64("url"), F.lit(n)).alias("b"),
+        F.array(
+            *[F.pmod(F.xxhash64("url", F.lit(i)), F.lit(m)) for i in range(k)]
+        ).alias("pos"),
+    ).collect()
+    assert len({r.url for r in probes}) == 40
+
+    def assert_no_false_negatives():
+        commits = {s.bucket: s for s in log.visible()}
+        assert len(commits) == len(log.visible())  # one commit per bucket
+        for r in probes:
+            bits = bytes.fromhex(commits[r.b].bloom["bits"])
+            assert all((bits[p >> 3] >> (p & 7)) & 1 for p in r.pos), r.url
+
+    assert_no_false_negatives()
 
     # absent url: provably not in ANY commit -> None, no data read
     assert log.lookup_url(spark, "https://definitely.absent/nothing") is None
@@ -390,6 +416,7 @@ def test_bloom_prunes_misses_without_reading_data(spark, tmp_path):
     log.compact_bucket(spark, bucket=0)
     b0 = [s for s in log.visible() if s.bucket == 0]
     assert len(b0) == 1 and b0[0].op == "replace" and b0[0].bloom
+    assert_no_false_negatives()
     assert log.lookup_url(spark, "https://definitely.absent/nothing") is None
     assert log.lookup_url(spark, target).count() == 1
 
